@@ -6,10 +6,11 @@ them.  Design (SURVEY.md §2.3 J4 / §2.5 W5):
 Every input tier row looks at the NEXT known bucket of its source
 (``lead`` over a (source, day-chunk) window, with a tiny day-summary
 carry for chunk boundaries) and directly GENERATES the missing buckets
-between them (``sequence(1, gap_n)`` + ``explode``), carrying its own
-values (LOCF) or interpolating toward the next row's (linear).  Output
-= original rows (``filled=false``) UNION generated rows
-(``filled=true``) — identical to a dense min..max spine.
+between them, carrying its own values (LOCF) or interpolating toward
+the next row's (linear).  One generator pass emits the input rows and
+the gaps together: each row explodes ``sequence(0, gap_n)``, where k=0
+is the row itself (``filled=false``) and k>=1 are its generated
+successors (``filled=true``) — identical to a dense min..max spine.
 
 Why not the textbook spine-join (materialize a dense per-source
 sequence of buckets, left-join the tier onto it, window-fill the
@@ -17,9 +18,9 @@ nulls)?  Cost: that is TWO full shuffles for the join (both sides) plus
 ANOTHER full shuffle for the fill window, and it materializes a
 null-padded dense table even when the data is 99% dense.  The generator
 is ONE window shuffle + map-side explode; rows are created only where
-gaps exist.  Measured on the bench tier: ~3x faster.  The old spine
-path is kept below (``bucket_spine`` + the ``_locf_chunked`` /
-``_linear_chunked`` fillers) as the equality reference for tests.
+gaps exist.  Measured on the bench tier: ~3x faster.  The equality
+references are the dense-spine pandas fillers ``oracle_gapfill_locf`` /
+``oracle_gapfill_linear`` in ``tests/oracle.py``.
 
 Scale note: windows are partitioned by (source, day) — parallel WITHIN
 a source (a long-retention source is not one straggler task); the
@@ -46,25 +47,6 @@ from gents_spark.operators.rollup import (  # noqa: F401 (re-exports)
 _FILL_COLS = ["cnt", "sum_tok", "min_tok", "max_tok", "p50_tok", "p95_tok", "p99_tok"]
 #: the subset where "empty bucket == 0" is true (zero-fill default)
 _ADDITIVE_COLS = ["cnt", "sum_tok"]
-
-
-def bucket_spine(tiers: DataFrame, tier: str) -> DataFrame:
-    """Per-source dense spine of bucket_start values (min..max)."""
-    unit, step = tier_grain(tier)
-    iv = f"interval 1 {unit}" if unit else f"interval {step} second"
-    return (
-        tiers.groupBy("source")
-        .agg(
-            F.min("bucket_start").alias("_lo"),
-            F.max("bucket_start").alias("_hi"),
-        )
-        .select(
-            "source",
-            F.explode(
-                F.sequence("_lo", "_hi", F.expr(iv))
-            ).alias("bucket_start"),
-        )
-    )
 
 
 def gapfill(
@@ -155,33 +137,29 @@ def gapfill(
         ((eff_nidx - F.col("_idx")) / F.lit(step)).cast("long") - 1,
     ).otherwise(F.lit(0))
 
-    gen = (
-        t.withColumn("_gapn", gap_n)
-        .filter(F.col("_gapn") >= 1)
-        .withColumn("_k", F.explode(F.sequence(F.lit(1), F.col("_gapn"))))
+    # k=0 is the input row itself, k>=1 the generated buckets; the clamp
+    # keeps rows less than one step before their successor (gap_n < 0)
+    # to their k=0 row
+    out = t.withColumn(
+        "_k", F.explode(F.sequence(F.lit(0), F.greatest(gap_n, F.lit(0))))
     )
-    gen_cols = [
-        F.col("source"),
-        (F.col("_idx") + F.col("_k") * F.lit(step))
-        .cast("timestamp")
-        .alias("bucket_start"),
-        F.lit(True).alias("filled"),
-    ]
+    orig = F.col("_k") == 0
     if mode == "locf":
-        gen_cols += [F.col(c).alias(c) for c in fill_cols]
-        orig_cols = [F.col(c) for c in fill_cols]
+        fill = [F.col(c) for c in fill_cols]
     elif mode == "zero":
-        gen_cols += [
-            F.lit(0).cast(tiers.schema[c].dataType).alias(c)
+        fill = [
+            F.when(orig, F.col(c)).otherwise(
+                F.lit(0).cast(tiers.schema[c].dataType)
+            )
             for c in fill_cols
         ]
-        orig_cols = [F.col(c) for c in fill_cols]
     else:
-        # same arithmetic as the windowed reference: frac over unix secs,
-        # double interpolation -> known rows also become double
+        # frac over unix secs, double interpolation -> known rows also
+        # become double (tests/oracle.py oracle_gapfill_linear mirrors
+        # this arithmetic order exactly)
         frac = (F.col("_k") * F.lit(step)) / (eff_nidx - F.col("_idx"))
-        gen_cols += [
-            (
+        fill = [
+            F.when(orig, F.col(c).cast("double")).otherwise(
                 F.col(c).cast("double")
                 + (
                     F.coalesce(F.col(f"_n_{c}"), F.col(f"_c_{c}")).cast(
@@ -190,31 +168,24 @@ def gapfill(
                     - F.col(c).cast("double")
                 )
                 * frac
-            ).alias(c)
+            )
             for c in fill_cols
         ]
-        orig_cols = [F.col(c).cast("double").alias(c) for c in fill_cols]
-    gen = gen.select(*gen_cols)
-
     extra = [
         c for c in keep_cols
         if c not in ("source", "bucket_start", *fill_cols)
     ]
-    if extra:
-        # non-filled passthrough columns (e.g. payload) are null on
-        # generated rows, as with the spine join
-        gen = gen.select(
-            "*", *[F.lit(None).cast(tiers.schema[c].dataType).alias(c)
-                   for c in extra]
-        )
-    original = tiers.select(
+    out = out.select(
         "source",
-        "bucket_start",
-        F.lit(False).alias("filled"),
-        *orig_cols,
-        *[F.col(c) for c in extra],
+        F.when(orig, F.col("bucket_start"))
+        .otherwise((F.col("_idx") + F.col("_k") * F.lit(step)).cast("timestamp"))
+        .alias("bucket_start"),
+        (~orig).alias("filled"),
+        *[f.alias(c) for f, c in zip(fill, fill_cols)],
+        # non-filled passthrough columns (e.g. payload) are null on
+        # generated rows
+        *[F.when(orig, F.col(c)).alias(c) for c in extra],
     )
-    out = original.unionByName(gen)
 
     end = (
         F.timestamp_add(unit.upper(), F.lit(1), F.col("bucket_start"))
@@ -224,202 +195,6 @@ def gapfill(
     return out.withColumn("tier", F.lit(tier)).withColumn(
         "bucket_end", end
     )
-
-
-def _linear_global(joined: DataFrame, fill_cols: list[str]) -> DataFrame:
-    """Reference linear interpolation with one global window per source.
-
-    One task per source — the straggler shape _linear_chunked exists to
-    avoid.  Kept only as the equality oracle for the chunked path.
-    """
-    w_back = (
-        Window.partitionBy("source")
-        .orderBy("bucket_start")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_fwd = (
-        Window.partitionBy("source")
-        .orderBy("bucket_start")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    idx = F.unix_timestamp("bucket_start")
-    known_idx_b = F.last(
-        F.when(~F.col("filled"), idx), ignorenulls=True
-    ).over(w_back)
-    known_idx_f = F.first(
-        F.when(~F.col("filled"), idx), ignorenulls=True
-    ).over(w_fwd)
-    joined = joined.withColumn("_ib", known_idx_b).withColumn("_if", known_idx_f)
-    for c in fill_cols:
-        vb = F.last(
-            F.when(~F.col("filled"), F.col(c)), ignorenulls=True
-        ).over(w_back)
-        vf = F.first(
-            F.when(~F.col("filled"), F.col(c)), ignorenulls=True
-        ).over(w_fwd)
-        frac = (idx - F.col("_ib")) / (F.col("_if") - F.col("_ib"))
-        interp = vb.cast("double") + (vf.cast("double") - vb.cast("double")) * frac
-        joined = joined.withColumn(
-            c,
-            F.when(~F.col("filled"), F.col(c))
-            .when(F.col("_if").isNull(), vb)  # trailing edge -> LOCF
-            .otherwise(interp),
-        )
-    return joined.drop("_ib", "_if")
-
-
-def _linear_chunked(joined: DataFrame, fill_cols: list[str]) -> DataFrame:
-    """Linear interpolation with (source, day-chunk) windows — exactly
-    equal to the global per-source interpolation but parallel WITHIN a
-    source (the same parallel-prefix decomposition as ``_locf_chunked``,
-    extended to BOTH directions: each chunk needs a carry-in from
-    preceding chunks AND a carry-forward from following ones).
-
-      pass 1: within each (source, day): last-known (idx, values) behind
-              each row and first-known ahead of it — wide parallelism;
-      pass 2: per-(source, day) summary: the day's last/first known
-              (idx, values);
-      pass 3: over the tiny day-summary table, per source: carry-in =
-              running last-known over preceding days, carry-forward =
-              running first-known over following days;
-      pass 4: broadcast-join carries back; flanking point = within-day
-              value if present else carry; interpolate.
-    """
-    idx = F.unix_timestamp("bucket_start")
-    known = ~F.col("filled")
-    joined = joined.withColumn(
-        "_gchunk", F.date_trunc("day", F.col("bucket_start"))
-    ).withColumn("_idx", idx)
-    w_back = (
-        Window.partitionBy("source", "_gchunk")
-        .orderBy("bucket_start")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_fwd = (
-        Window.partitionBy("source", "_gchunk")
-        .orderBy("bucket_start")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    joined = joined.withColumn(
-        "_ib", F.last(F.when(known, F.col("_idx")), ignorenulls=True).over(w_back)
-    ).withColumn(
-        "_if", F.first(F.when(known, F.col("_idx")), ignorenulls=True).over(w_fwd)
-    )
-    for c in fill_cols:
-        joined = joined.withColumn(
-            f"_vb_{c}",
-            F.last(F.when(known, F.col(c)), ignorenulls=True).over(w_back),
-        ).withColumn(
-            f"_vf_{c}",
-            F.first(F.when(known, F.col(c)), ignorenulls=True).over(w_fwd),
-        )
-
-    # day summaries: the row at the day's max idx carries the day's
-    # last-known (_ib/_vb_*), the row at min idx its first-known (_if/_vf_*)
-    summ = joined.groupBy("source", "_gchunk").agg(
-        F.max_by("_ib", "_idx").alias("_last_idx"),
-        F.min_by("_if", "_idx").alias("_first_idx"),
-        *[F.max_by(f"_vb_{c}", "_idx").alias(f"_lastv_{c}") for c in fill_cols],
-        *[F.min_by(f"_vf_{c}", "_idx").alias(f"_firstv_{c}") for c in fill_cols],
-    )
-    w_prev = (
-        Window.partitionBy("source")
-        .orderBy("_gchunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_next = (
-        Window.partitionBy("source")
-        .orderBy("_gchunk")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    carry = summ.select(
-        "source",
-        "_gchunk",
-        F.last("_last_idx", ignorenulls=True).over(w_prev).alias("_cin_idx"),
-        F.first("_first_idx", ignorenulls=True).over(w_next).alias("_cfwd_idx"),
-        *[
-            F.last(f"_lastv_{c}", ignorenulls=True)
-            .over(w_prev)
-            .alias(f"_cin_{c}")
-            for c in fill_cols
-        ],
-        *[
-            F.first(f"_firstv_{c}", ignorenulls=True)
-            .over(w_next)
-            .alias(f"_cfwd_{c}")
-            for c in fill_cols
-        ],
-    )
-    out = joined.join(F.broadcast(carry), ["source", "_gchunk"], "left")
-    ib = F.coalesce(F.col("_ib"), F.col("_cin_idx"))
-    fi = F.coalesce(F.col("_if"), F.col("_cfwd_idx"))
-    for c in fill_cols:
-        vb = F.coalesce(F.col(f"_vb_{c}"), F.col(f"_cin_{c}"))
-        vf = F.coalesce(F.col(f"_vf_{c}"), F.col(f"_cfwd_{c}"))
-        frac = (F.col("_idx") - ib) / (fi - ib)
-        interp = vb.cast("double") + (vf.cast("double") - vb.cast("double")) * frac
-        out = out.withColumn(
-            c,
-            F.when(~F.col("filled"), F.col(c))
-            .when(fi.isNull(), vb)  # trailing edge -> LOCF
-            .otherwise(interp),
-        )
-    drop = ["_gchunk", "_idx", "_ib", "_if", "_cin_idx", "_cfwd_idx"]
-    drop += [p.format(c) for c in fill_cols for p in ("_vb_{}", "_vf_{}", "_cin_{}", "_cfwd_{}")]
-    return out.drop(*drop)
-
-
-def _locf_chunked(joined: DataFrame, fill_cols: list[str]) -> DataFrame:
-    """LOCF with (source, day-chunk) window partitioning — exactly equal
-    to a global per-source LOCF but parallel WITHIN a source.
-
-    A single per-source running window serializes each source into one
-    task; a long-retention source (years of minute buckets) becomes the
-    straggler.  Instead:
-
-      pass 1: LOCF within each (source, day) — wide parallelism;
-      pass 2: per-(source, day) last-known value (row at max bucket);
-      pass 3: running LOCF over the tiny day-summary table gives each
-              day its carry-in from all previous days;
-      pass 4: broadcast-join the carry-in back; coalesce.
-
-    This is the classic two-level scan decomposition of a prefix
-    operator (LOCF is a running ``last(ignorenulls)``, which is
-    associative) — the same trick as parallel prefix sums.
-    """
-    chunk = F.date_trunc("day", F.col("bucket_start")).alias("_gchunk")
-    joined = joined.withColumn("_gchunk", chunk)
-    w1 = (
-        Window.partitionBy("source", "_gchunk")
-        .orderBy("bucket_start")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    for c in fill_cols:
-        joined = joined.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w1))
-
-    summaries = joined.groupBy("source", "_gchunk").agg(
-        *[F.max_by(F.col(c), F.col("bucket_start")).alias(f"_last_{c}")
-          for c in fill_cols]
-    )
-    w2 = (
-        Window.partitionBy("source")
-        .orderBy("_gchunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = summaries.select(
-        "source",
-        "_gchunk",
-        *[
-            F.last(F.col(f"_last_{c}"), ignorenulls=True)
-            .over(w2)
-            .alias(f"_carry_{c}")
-            for c in fill_cols
-        ],
-    )
-    out = joined.join(F.broadcast(carry), ["source", "_gchunk"], "left")
-    for c in fill_cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"_carry_{c}")))
-    return out.drop("_gchunk", *[f"_carry_{c}" for c in fill_cols])
 
 
 def gap_report(

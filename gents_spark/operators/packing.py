@@ -19,8 +19,10 @@ partition — fine while every key's corpus fits one task's sort.  For a
 GIANT single source (one key = half the corpus), ``pack_tokens_chunked``
 is the per-(key, chunk) parallel-prefix escape hatch — the same local
 prefix + tiny summary-lag + offset-join pattern as
-``sessions.sessionize_chunked`` / ``gapfill._locf_chunked`` — so no one
-task ever sorts a whole source.  Both are exact integer arithmetic in
+``sessions.sessionize_chunked`` and ``gapfill``'s day-summary carry
+(checked against the dense-spine ``oracle_gapfill_locf`` /
+``oracle_gapfill_linear`` in ``tests/oracle.py``) — so no one task ever
+sorts a whole source.  Both are exact integer arithmetic in
 whole-stage codegen (``div``/``%`` on longs — no double rounding, exact
 past 2^53), and chunked output is EXACTLY equal to the plain operator
 (pinned by test).

@@ -192,9 +192,11 @@ class TierPipeline:
         was that ~25 serial Spark jobs per run, not job SHAPE, capped the
         N->4N efficiency at 0.62):
 
-        - raw is shuffled ONCE, hash-partitioned on ``(source, _gchunk)``
-          where ``_gchunk = date_trunc(<chunk grain>, event_time)`` — the
-          one big exchange of the whole build;
+        - raw is hash-partitioned on ``(source, _gchunk)`` where
+          ``_gchunk = date_trunc(<chunk grain>, event_time)`` — the big
+          exchange of the build, planned once per tier (each persisted
+          tier base carries its own raw scan + exchange; see the comment
+          at the repartition);
         - every tier aggregation groups by ``(source, _gchunk, bucket)``
           and every gap-fill window partitions by ``(source, _gchunk)``
           — supersets of the partitioning keys, so Catalyst's
@@ -203,7 +205,7 @@ class TierPipeline:
           instead of a parquet read-back of the written tier — same rows
           (the written tier minus its gap-filled rows IS the base) —
           and join AFTER gap-fill so the payload aggregation has exactly
-          one consumer (gap-fill triple-scans its input; see the join
+          one consumer (gap-fill reads its input twice; see the join
           comment below).  That join's exchange is coarse-tier-sized;
         - all tiers are written in ONE dynamic-partition-overwrite job
           (``write_tiers_combined``) with NO pre-write shuffle (the
@@ -211,7 +213,7 @@ class TierPipeline:
           by the source count), plus one stats job over the written
           columns and one driver-side manifest append.
 
-        Remaining exchanges: the raw repartition, per-gapfill
+        Remaining exchanges: the per-tier raw repartitions, per-gapfill
         day-summary carries (tiny, |sources x chunks| rows), and the
         coarse-tier payload joins (coarse-tier row counts).  Skew note:
         the chunk-grain co-partition spreads a hot source over its
@@ -239,13 +241,15 @@ class TierPipeline:
         grain_unit = {"day": "day", "month": "month", "year": "year"}[
             self.chunk_grain
         ]
-        # NOT persisted: every tier agg consumes the SAME repartition
-        # exchange, which AQE materializes once as shuffle files and
-        # reuses (ReusedExchange) — a cache would hold a second copy of
-        # the raw rows in executor memory for no extra work saved, and
-        # at N=1-executor heap sizes that eviction pressure costs more
-        # than the shuffle-file re-reads (measured: 19.2M rows, 12g
-        # executor — cached-raw variant ran 25% slower end-to-end).
+        # NOT persisted.  The tier aggs do NOT share one exchange: a
+        # traced perfbench pipeline build (seed 5) plans 4 input scans,
+        # 9 exchanges and 0 ReusedExchange, because each persisted tier
+        # base below is its own cached plan with its own raw scan and
+        # repartition exchange — raw is read and shuffled once per tier.
+        # Caching raw would hold a second copy of the raw rows in
+        # executor memory, and at N=1-executor heap sizes that eviction
+        # pressure cost more than the re-shuffles (measured: 19.2M rows,
+        # 12g executor — cached-raw variant ran 25% slower end-to-end).
         raw = raw0.withColumn(
             "_gchunk", F.date_trunc(grain_unit, F.col("event_time"))
         ).repartition(n_shuffle, "source", "_gchunk")
@@ -315,8 +319,8 @@ class TierPipeline:
                     )
                 tier_df = base
                 # sketch columns join AFTER gap-fill (same reason as the
-                # payload join below: gap-fill triple-scans its input,
-                # and each scan would re-run the sketch aggregation over
+                # payload join below: gap-fill reads its input twice,
+                # and each read would re-run the sketch aggregation over
                 # raw); generated buckets get NULL sketches either way
                 side_joins: list[DataFrame] = []
                 if self.store_sketches and gck:
@@ -386,16 +390,16 @@ class TierPipeline:
                     )
                 if pay is not None:
                     # Joined AFTER gap-fill, on (source, bucket_start):
-                    # gap-fill scans its input ~3x (gen branch, chunk
-                    # summary, original passthrough), and with the join
-                    # inside, every scan re-ran the payload aggregation
+                    # gap-fill reads its input twice (the window pass
+                    # and the chunk-boundary carry), and with the join
+                    # inside, each read re-ran the payload aggregation
                     # + pandas-UDF encode.  Post-gap-fill the payload
                     # agg has exactly ONE consumer; generated buckets
                     # have no finer rows, so they get NULL payloads from
-                    # the left join exactly as the passthrough gave
-                    # them.  The exchange this adds is coarse-tier-sized
-                    # (payloads are never built for the finest tier
-                    # unless payloads='all').
+                    # the left join exactly as gap-fill gives its other
+                    # passthrough columns.  The exchange this adds is
+                    # coarse-tier-sized (payloads are never built for
+                    # the finest tier unless payloads='all').
                     tier_df = tier_df.join(
                         pay.select("source", "bucket_start", "payload"),
                         ["source", "bucket_start"],
@@ -403,9 +407,9 @@ class TierPipeline:
                     )
                 finals[tier] = tier_df
                 # every base is read at least twice inside the single
-                # write job (gap-fill's original + generated branches;
-                # plus the next tier's payload agg) — persist so the
-                # aggregation runs once per tier
+                # write job (gap-fill's window pass + chunk-boundary
+                # carry; plus the next tier's payload agg) — persist so
+                # the aggregation runs once per tier
                 base = base.persist()
                 bases.append(base)
                 prev_base = (base, gck)

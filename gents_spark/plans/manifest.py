@@ -102,28 +102,6 @@ def latest_status(m: DataFrame) -> DataFrame:
     )
 
 
-def completed_chunks(spark: SparkSession, manifest_dir: str, tier: str) -> DataFrame:
-    """Chunks a resume run must NOT rebuild: done, plus expired —
-    retention deleted those on purpose, and a resume that re-creates
-    them from still-available raw input would silently undo it.  Cover
-    checks (retention.expirable_chunks) filter on DONE alone, so an
-    expired chunk never gates another tier's expiry."""
-    m = read_manifest(spark, manifest_dir)
-    return (
-        latest_status(m.filter(F.col("tier") == tier))
-        .filter(F.col("status").isin(DONE, EXPIRED))
-        .select("chunk")
-    )
-
-
-def pending_chunks(
-    spark: SparkSession, planned: DataFrame, manifest_dir: str, tier: str
-) -> DataFrame:
-    """planned(chunk) minus completed — the S10 anti-join."""
-    done = completed_chunks(spark, manifest_dir, tier)
-    return planned.join(done, "chunk", "left_anti")
-
-
 CHUNK_FORMATS = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 
 
@@ -140,145 +118,15 @@ def chunk_col(bucket_col: str = "bucket_start", grain: str = "day") -> F.Column:
     return F.date_format(F.col(bucket_col), CHUNK_FORMATS[grain])
 
 
-def write_tier_chunks(
-    spark: SparkSession,
-    tier_df: DataFrame,
-    tier: str,
-    tiers_dir: str,
-    manifest_dir: str,
-    run_id: str,
-    resume: bool = True,
-    fail_after_chunks: int | None = None,
-    chunk_grain: str = "day",
-    planned_chunks: list[str] | None = None,
-    command: str | None = None,
-    compression: str = "snappy",
-) -> dict:
-    """Write a tier table with chunk-granular checkpoints.
-
-    One dynamic-partition-overwrite write covers every pending chunk
-    (Spark replaces exactly the partitions present in the data — the
-    parquet analog of Iceberg's atomic REPLACE per partition), then one
-    aggregation computes per-chunk lineage metrics and one append
-    commits the manifest rows.  Constant job count regardless of chunk
-    count — no per-chunk re-aggregation.
-
-    ``fail_after_chunks`` injects a crash after the first K pending
-    chunks are written+committed (kill/resume tests — the analog of
-    GenTS's interrupted-run scenario).  Returns {written, skipped}.
-    """
-    tier_df = tier_df.withColumn("chunk", chunk_col(grain=chunk_grain)).persist()
-    phases: dict[str, float] = {}
-    try:
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["chunk"]
-                for r in completed_chunks(spark, manifest_dir, tier).collect()
-            }
-        if planned_chunks is not None:
-            # cheap plan: the caller derived the chunk universe from the
-            # raw time range — an all-done resume never computes the tier
-            planned = sorted(planned_chunks)
-            todo = [c for c in planned if c not in done]
-            skipped = len(planned) - len(todo)
-            if not todo:
-                return {"written": 0, "skipped": skipped,
-                        "rows_written": 0, "phases": phases}
-        # one job: materialize the tier into the cache AND produce the
-        # per-chunk lineage stats (row counts, value sums; sums over
-        # non-filled rows only — see write_tiers_combined)
-        t0 = time.time()
-        if "filled" in tier_df.columns:
-            sc = F.when(~F.col("filled"), F.col("cnt"))
-            st = F.when(~F.col("filled"), F.col("sum_tok"))
-        else:
-            sc, st = F.col("cnt"), F.col("sum_tok")
-        stats_rows = (
-            tier_df.groupBy("chunk")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(sc.cast("long")).alias("sc"),
-                F.sum(st.cast("long")).alias("st"),
-            )
-            .collect()
-        )
-        stats_by_chunk = {s["chunk"]: s for s in stats_rows}
-        if planned_chunks is None:
-            planned = sorted(stats_by_chunk)
-            todo = [c for c in planned if c not in done]
-            skipped = len(planned) - len(todo)
-        phases["plan"] = round(time.time() - t0, 2)
-
-        inject = fail_after_chunks is not None and fail_after_chunks < len(todo)
-        write_now = todo[:fail_after_chunks] if inject else todo
-
-        rows_written = 0
-        if write_now:
-            t0 = time.time()
-            part = tier_df.filter(F.col("chunk").isin(write_now))
-            # Repartition on (chunk, source): without any repartition,
-            # every shuffle partition opens a file in every chunk dir ->
-            # O(partitions x chunks) tiny files; repartitioning on chunk
-            # ALONE caps write parallelism at the chunk count and makes
-            # one hot chunk one straggler task (round-1 VERDICT #5 — at
-            # month grain that is O(12) writer tasks for a year).  The
-            # (chunk, source) key spreads a chunk over its sources while
-            # keeping files-per-chunk bounded by the source count, the
-            # same granularity the tier agg itself shuffles on.
-            # partitionBy(tier, chunk): identical tier=X/chunk=Y layout
-            # as write_tiers_combined (tier path-encoded, read back via
-            # read_tier's basePath).
-            (
-                part.repartition(F.col("chunk"), F.col("source"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", compression)
-                .partitionBy("tier", "chunk")
-                .parquet(tiers_dir)
-            )
-            phases["write"] = round(time.time() - t0, 2)
-            now = time.time()
-            from gents_spark import __version__
-
-            # planned chunks with no tier rows (possible when the plan
-            # comes from the raw time range) commit as done with n=0
-            rows = []
-            rows_written = 0
-            for c in write_now:
-                s = stats_by_chunk.get(c)
-                if s is None:
-                    rows.append(
-                        (run_id, tier, c, DONE, 0, 0, 0, now,
-                         command, __version__)
-                    )
-                else:
-                    rows.append(
-                        (run_id, tier, c, DONE, s["n"], s["sc"], s["st"],
-                         now, command, __version__)
-                    )
-                    rows_written += s["n"]
-            _append_manifest_rows(manifest_dir, rows)
-        if inject:
-            raise RuntimeError(
-                f"injected failure after {len(write_now)} chunks"
-            )
-        return {
-            "written": len(write_now),
-            "skipped": skipped,
-            "rows_written": rows_written,
-            "phases": phases,
-        }
-    finally:
-        tier_df.unpersist()
-
-
 def completed_tier_chunks(
     spark: SparkSession, manifest_dir: str
 ) -> set[tuple[str, str]]:
-    """All (tier, chunk) units a resume must skip (latest row done OR
-    expired — see ``completed_chunks``) — ONE read for a whole
-    multi-tier resume instead of one job per tier."""
+    """All (tier, chunk) units a resume must NOT rebuild — ONE read for
+    a whole multi-tier resume: latest row done, plus expired — retention
+    deleted those on purpose, and a resume that re-creates them from
+    still-available raw input would silently undo it.  Cover checks
+    (retention.expirable_chunks) filter on DONE alone, so an expired
+    chunk never gates another tier's expiry."""
     m = read_manifest(spark, manifest_dir)
     return {
         (r["tier"], r["chunk"])
@@ -294,22 +142,21 @@ def write_tiers_combined(
     tiers_dir: str,
     manifest_dir: str,
     run_id: str,
+    planned_chunks: list[str],
     resume: bool = True,
     fail_after_chunks: int | None = None,
     chunk_grain: str = "day",
-    planned_chunks: list[str] | None = None,
     command: str | None = None,
     compression: str = "snappy",
     repartition_output: bool = False,
-    sort_output: bool = True,
 ) -> dict:
     """ALL tiers in one write job + one stats job + one manifest append.
 
-    The per-tier ``write_tier_chunks`` loop costs 3 serial Spark jobs per
-    tier (manifest read, stats collect, write) plus a parquet read-back
-    barrier between tiers; at two-cluster-size scaling that serial job
-    count is pure Amdahl overhead (round-2 BENCH/BASELINE.md analysis).
-    Here the tiers are unioned (each already carries its ``tier``
+    A per-tier write loop costs 3 serial Spark jobs per tier (manifest
+    read, stats collect, write) plus a parquet read-back barrier between
+    tiers; at two-cluster-size scaling that serial job count is pure
+    Amdahl overhead (round-2 BENCH/BASELINE.md analysis).  Here the
+    tiers are unioned (each already carries its ``tier``
     column) and written once with ``partitionBy(tier, chunk)`` — the
     same ``tier=X/chunk=Y`` physical layout, one dynamic-partition
     commit.  Per-chunk lineage stats then come from ONE aggregation over
@@ -317,15 +164,16 @@ def write_tiers_combined(
     transaction: REPLACE of the touched partitions + one metadata
     commit.
 
+    ``planned_chunks`` is the chunk universe, derived by the caller from
+    the raw time range — an all-done resume never computes a tier.
     ``fail_after_chunks`` counts (tier, chunk) units in (tier-order,
-    chunk) order — the kill/resume injection point, as before.
+    chunk) order — the kill/resume injection point.
     Returns {tier: {written, skipped, rows_written}, phases: {...}}.
     """
     tier_order = list(finals)
     done: set[tuple[str, str]] = set()
     if resume:
         done = completed_tier_chunks(spark, manifest_dir)
-    assert planned_chunks is not None
     planned = sorted(planned_chunks)
     units = [
         (t, c) for t in tier_order for c in planned if (t, c) not in done
@@ -373,20 +221,17 @@ def write_tiers_combined(
         to_write = union.repartition(
             F.col("tier"), F.col("chunk"), F.col("source")
         )
-    if sort_output:
-        # per-task sort, NO exchange (the zero-exchange build property is
-        # plan-pinned by test_plans.py): within each written file rows
-        # come out (source, bucket_start)-ordered, so parquet row-group/
-        # page min-max stats are tight and a time-sliced read (S6) prunes
-        # inside big files — at 100 TB a chunk file holds many row
-        # groups, and unordered buckets would smear every group's range
-        # across the whole chunk.  Side effect: long source runs RLE
-        # well.  Measured write-time cost at bench scale: none.
-        to_write = to_write.sortWithinPartitions(
-            "tier", "chunk", "source", "bucket_start"
-        )
+    # per-task sort, NO exchange (the zero-exchange build property is
+    # plan-pinned by test_plans.py): within each written file rows
+    # come out (source, bucket_start)-ordered, so parquet row-group/
+    # page min-max stats are tight and a time-sliced read (S6) prunes
+    # inside big files — at 100 TB a chunk file holds many row
+    # groups, and unordered buckets would smear every group's range
+    # across the whole chunk.  Side effect: long source runs RLE
+    # well.  Measured write-time cost at bench scale: none.
     (
-        to_write.write.mode("overwrite")
+        to_write.sortWithinPartitions("tier", "chunk", "source", "bucket_start")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("compression", compression)
         .partitionBy("tier", "chunk")
@@ -463,8 +308,7 @@ def write_tiers_combined(
 
 def read_tier(spark: SparkSession, tiers_dir: str, tier: str) -> DataFrame:
     # basePath: the combined writer path-encodes ``tier`` (partitionBy);
-    # anchoring discovery at tiers_dir surfaces it as a column again, so
-    # readers see the same schema the per-tier writer produced
+    # anchoring discovery at tiers_dir surfaces it as a column again.
     # mergeSchema: streaming increments (append_tier_increment) carry
     # only the additive stats, while batch files may add percentiles /
     # filled / payload / sketch columns.  Without merging, the inferred

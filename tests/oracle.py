@@ -67,3 +67,40 @@ def oracle_gapfill_locf(tiers: pd.DataFrame, tier: str, cols: list[str]) -> pd.D
         .sort_values(["source", "bucket_start"])
         .reset_index(drop=True)
     )
+
+
+def oracle_gapfill_linear(tiers: pd.DataFrame, tier: str, cols: list[str]) -> pd.DataFrame:
+    """Expected linear-filled table from a (possibly gappy) tier table.
+
+    Each missing bucket ``ts`` between known buckets ``t`` < ``ts`` <
+    ``t_next`` (values ``v``, ``v_next``) gets
+    ``v + (v_next - v) * ((ts - t) / (t_next - t))`` in float64, with
+    times in epoch seconds — the engine's arithmetic order
+    (``ts - t == k * step``), so equality is exact.  Known rows keep
+    their values, cast to float64.
+    """
+    freq = UNIT_FREQ[tier]
+    frames = []
+    for src, g in tiers.groupby("source"):
+        g = g.set_index("bucket_start").sort_index()
+        spine = pd.date_range(g.index.min(), g.index.max(), freq=freq)
+        r = g.reindex(spine)
+        r["filled"] = r["cnt"].isna()
+        secs = pd.Series(
+            (spine - pd.Timestamp(0)) // pd.Timedelta(seconds=1), index=spine
+        )
+        known_secs = secs.where(~r["filled"])
+        t_prev = known_secs.ffill()
+        t_next = known_secs.bfill()
+        frac = (secs - t_prev) / (t_next - t_prev)
+        for c in cols:
+            known = r[c].astype("float64")
+            v, v_next = known.ffill(), known.bfill()
+            r[c] = known.where(~r["filled"], v + (v_next - v) * frac)
+        r["source"] = src
+        frames.append(r.rename_axis("bucket_start").reset_index())
+    return (
+        pd.concat(frames)
+        .sort_values(["source", "bucket_start"])
+        .reset_index(drop=True)
+    )

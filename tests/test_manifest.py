@@ -331,13 +331,19 @@ def test_duplicate_manifest_rows_preserve_membership(spark, seqs, tmp_path):
     import shutil
     import time
 
-    from gents_spark.plans.manifest import completed_chunks, expire_snapshots
+    from gents_spark.plans.manifest import (
+        completed_tier_chunks,
+        expire_snapshots,
+    )
+
+    def done_1d():
+        return {c for t, c in completed_tier_chunks(spark, mdir) if t == "1d"}
 
     out = str(tmp_path / "dup")
     mdir = os.path.join(out, "manifest")
     pipe = TierPipeline(spark, step_s=3600, tiers=["1d"], gapfill_mode=None)
     pipe.run(seqs, out, run_id="rA")
-    before = {r["chunk"] for r in completed_chunks(spark, mdir, "1d").collect()}
+    before = done_1d()
     assert before
 
     # mid-compaction transient: every row present twice
@@ -346,10 +352,7 @@ def test_duplicate_manifest_rows_preserve_membership(spark, seqs, tmp_path):
             os.path.join(mdir, f), os.path.join(mdir, f"manifest-dup-{f[9:]}")
         )
     rows_dup = read_manifest(spark, mdir).count()
-    assert (
-        {r["chunk"] for r in completed_chunks(spark, mdir, "1d").collect()}
-        == before
-    )
+    assert done_1d() == before
     m = pipe.run(seqs, out, run_id="rB", resume=True)
     assert m["tiers"]["1d"]["written"] == 0
 
@@ -361,10 +364,7 @@ def test_duplicate_manifest_rows_preserve_membership(spark, seqs, tmp_path):
     after = read_manifest(spark, mdir)
     assert after.count() == rep["kept"]
     assert after.dropDuplicates().count() == after.count()
-    assert (
-        {r["chunk"] for r in completed_chunks(spark, mdir, "1d").collect()}
-        == before
-    )
+    assert done_1d() == before
     # empty/missing dirs degrade gracefully (r05 review: the explicit
     # file listing must not crash where read_manifest returned empty)
     assert expire_snapshots(

@@ -254,11 +254,11 @@ def test_stream_tier_ingest_into_manifest_layout(spark, tmp_path):
     emitted bucket matches the batch aggregation EXACTLY, increment
     rows demote chunks from done, and a subsequent batch resume
     consolidates to exact batch truth with no duplicates."""
+    from gents_spark.pipeline import TierPipeline
     from gents_spark.plans.manifest import (
-        completed_chunks,
+        completed_tier_chunks,
         read_manifest,
         read_tier,
-        write_tier_chunks,
     )
     from gents_spark.streaming.rollup_stream import stream_tier_ingest
     from gents_spark.timeparse import parse_seq
@@ -286,6 +286,12 @@ def test_stream_tier_ingest_into_manifest_layout(spark, tmp_path):
         )
         q.awaitTermination(180)
 
+    def done_1m():
+        return {
+            c for t, c in completed_tier_chunks(spark, out_dir + "/manifest")
+            if t == "1m"
+        }
+
     def tier_rows():
         return {
             (r["source"], r["bucket_start"]): (
@@ -309,7 +315,7 @@ def test_stream_tier_ingest_into_manifest_layout(spark, tmp_path):
     for k, v in got1.items():
         assert batch1[k] == v, k  # every emitted bucket exact
     # increments never mark chunks done (demote semantics)
-    assert completed_chunks(spark, out_dir + "/manifest", "1m").count() == 0
+    assert len(done_1m()) == 0
     m = read_manifest(spark, out_dir + "/manifest")
     assert m.filter(F.col("status") == "increment").count() > 0
 
@@ -340,17 +346,16 @@ def test_stream_tier_ingest_into_manifest_layout(spark, tmp_path):
     n_rows = read_tier(spark, out_dir + "/tiers", "1m").count()
     assert n_rows == len(got2)
 
-    # batch consolidation: resume rebuild over the full batch tier
-    # replaces the streamed partitions -> exact batch truth, no dups
-    full = batch_tier().withColumn("tier", F.lit("1m"))
-    write_tier_chunks(
-        spark, full, "1m", out_dir + "/tiers", out_dir + "/manifest",
-        run_id="consolidate", resume=True,
+    # batch consolidation: a batch resume rebuilds the chunks the
+    # increments demoted, replacing the streamed partitions -> exact
+    # batch truth, no dups
+    TierPipeline(spark, step_s=10, tiers=["1m"], gapfill_mode=None).run(
+        spark.read.parquet(in_path), out_dir, resume=True
     )
     got3 = tier_rows()
     assert got3 == batch2
     assert read_tier(spark, out_dir + "/tiers", "1m").count() == len(batch2)
-    assert completed_chunks(spark, out_dir + "/manifest", "1m").count() > 0
+    assert len(done_1m()) > 0
 
 
 def test_stream_matches_batch_custom_grain(spark, tmp_path):
