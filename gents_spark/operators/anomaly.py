@@ -621,7 +621,6 @@ def histogram_drift(
     value: str = "v",
     bin_width: int = 2500,
     min_rows: int = 1,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Day-over-day distribution drift per key: total-variation
     distance between consecutive days' binned value histograms — the
@@ -647,15 +646,10 @@ def histogram_drift(
     division is exact while ``|value| < 2^53``.
 
     Scale shape: one groupBy to (key, day, bin) counts — the only pass
-    over raw rows — then joins on the tiny aggregated tables
-    (|keys × days × bins|); day alignment is an equi-join of counts
-    shifted one day, never a window over raw data.  ``counts`` feeds
-    FOUR consumers (totals, shifted totals, both union branches), and
-    Spark does not reuse the exchange across them (the branches prune
-    differently), so it is PERSISTED — without this the raw table is
-    scanned 8x.  Same ``cache_handles`` contract as
-    ``dedup.ngram_jaccard_pairs``: pass a list to unpersist yourself,
-    else reclamation is the ContextCleaner's.
+    over raw rows — then the ``_tvd_from_counts`` core on that tiny
+    aggregated table (|keys × days × bins|): day alignment is a
+    map-side fan-out of each count into its own and the following day,
+    never a window over raw data, and nothing is persisted.
     """
     if bin_width < 1:
         raise ValueError(f"bin_width={bin_width}: expected >= 1")
@@ -666,7 +660,7 @@ def histogram_drift(
     counts = points.groupBy(F.col(key), day, b).agg(
         F.count("*").cast("decimal(38,0)").alias("c")
     )
-    return _tvd_from_counts(counts, key, min_rows, cache_handles)
+    return _tvd_from_counts(counts, key, min_rows)
 
 
 def categorical_drift(
@@ -675,7 +669,6 @@ def categorical_drift(
     ts: str = "ts",
     cat: str = "term",
     min_rows: int = 1,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """``histogram_drift`` for CATEGORICAL values (tokens, event names,
     schema fingerprints): day-over-day total-variation distance between
@@ -695,15 +688,10 @@ def categorical_drift(
         F.date_trunc("day", F.col(ts)).alias("day"),
         F.col(cat).alias("bin"),
     ).agg(F.count("*").cast("decimal(38,0)").alias("c"))
-    return _tvd_from_counts(counts, key, min_rows, cache_handles)
+    return _tvd_from_counts(counts, key, min_rows)
 
 
-def _tvd_from_counts(
-    counts: DataFrame,
-    key: str,
-    min_rows: int,
-    cache_handles: list | None,
-) -> DataFrame:
+def _tvd_from_counts(counts: DataFrame, key: str, min_rows: int) -> DataFrame:
     """Shared exact-TVD core over a (key, day, bin, c DECIMAL(38,0))
     count table.
 
@@ -718,10 +706,7 @@ def _tvd_from_counts(
     and every real bin row carries c >= 1, so presence == total >= 1.
     The previous shape persisted ``counts`` for four consumers and ran
     two aggregations plus three joins of it (5 exchanges); this is 3
-    exchanges, no joins, same exact decimal sums.
-
-    ``cache_handles`` is kept for API compatibility; nothing is
-    persisted here any more, so the list is left untouched."""
+    exchanges, no joins, same exact decimal sums."""
     zero = F.lit(0).cast("decimal(38,0)")
     both = F.explode(
         F.array(

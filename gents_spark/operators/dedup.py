@@ -409,7 +409,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
     max_band_df: int | None = None,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """LSH banding: 4 bands x 3 rows; candidate pairs = docs sharing >=1
     band key.  Output (doc_a, doc_b, n_common_bands).
@@ -425,10 +424,6 @@ def minhash_lsh_pairs(
     (band, key) buckets with document frequency <= the cap form
     candidates; pairs lost share a boilerplate-hot signature and would
     be re-found by the exact-verify stage of a full dedup chain.
-
-    ``cache_handles``: kept for API compatibility; since the r06
-    bucket-combos rewrite nothing is persisted here (the band table
-    has exactly one consumer), so the list is left untouched.
     """
     sig = minhash_signatures(docs, n)
     # Band extraction is a map-side posexplode over the signature row —
@@ -458,8 +453,8 @@ def minhash_lsh_pairs(
     # emitted by a map-side combination explode bounded by the cap —
     # the ``_pair_common_counts`` candidate shape.  The pair count per
     # (doc_a, doc_b) is then n_common_bands exactly as the join
-    # produced it.  Single consumer of the band table, so the persist
-    # (and its cache_handles contract) is gone with the self-join.
+    # produced it.  Single consumer of the band table, so nothing is
+    # persisted.
     buckets = allbands.groupBy("band", "key").agg(
         F.array_sort(F.collect_list("doc_id")).alias("_ds")
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
 
 def m4(
@@ -65,7 +66,15 @@ def m4(
     ts), t_min = min(ts | v = min v), t_max = min(ts | v = max v).
     Two hash aggs + one broadcast replace the global sort; both
     passes prune to the 3 needed columns.
+
+    A ``ts`` column that is neither a timestamp nor a date (e.g. a
+    string) is cast to timestamp once up front, so the bounds and the
+    t_* outputs are times, not strings compared lexically.
     """
+    if not isinstance(
+        points.schema[ts].dataType, (TimestampType, TimestampNTZType, DateType)
+    ):
+        points = points.withColumn(ts, F.col(ts).cast("timestamp"))
     us = F.unix_micros(F.col(ts).cast("timestamp"))  # NTZ-safe
     # min/max over the RAW ts column (unix_micros applied after): a
     # plain-column min/max is eligible for parquet aggregate pushdown

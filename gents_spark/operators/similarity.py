@@ -1,22 +1,29 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths per the training-data-pipeline requirement:
+Every path scores on the same exact arithmetic: vectors are quantized
+to integers (floor(e*1000)), so dot products and norms are EXACT and
+order-independent — bitwise-reproducible across engines and
+partitionings (float accumulation order would not be) — and the cosine
+is one IEEE-754 double sqrt/divide of those integers.
 
-- brute-force cosine top-k: the exactness baseline.  Quantized to
-  integer arithmetic (floor(e*1000)) so dot products and norms are
-  EXACT and order-independent — bitwise-reproducible across engines and
-  partitionings (float accumulation order would not be).
-- LSH-bucketed: sign-bit buckets on leading dimensions (axis-aligned
-  random-hyperplane LSH); candidate pairs only form inside a bucket —
-  the join is on the bucket key, never an all-pairs product.  This is
-  the 100 TB path: bucket count scales the candidate set down
-  quadratically.
+- brute-force cosine top-k (``cosine_topk``): the exactness baseline.
+- IVF-flat (``ivf_topk``): coarse-centroid cells; each query scores
+  only the vectors in its ``n_probe`` nearest cells.
+- banded sign-LSH (``lsh_bucket_pairs``, ``embedding_near_dup_docs``):
+  candidate pairs only form inside a bucket — the join is on the
+  bucket key, never an all-pairs product.
 
-All expressions are JVM-side (``transform``/``aggregate``/``zip_with``);
-no Python in the data path.
+The two top-k searches and the IVF cell assignment score in numpy, one
+int64 matmul per Arrow batch (``mapInPandas``) against a small
+driver-collected query/centroid matrix.  The LSH paths, k-means and
+the drift screen are JVM-side expressions (``transform``/``aggregate``
+/``zip_with``).  The JVM formulations of the Arrow scorers are the
+test references in ``tests/test_pipeline_ops.py``.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
@@ -52,14 +59,20 @@ def with_quantized(emb: DataFrame) -> DataFrame:
 
 
 def _collect_queries(base: DataFrame, n_queries: int):
-    """Driver-side (query_id, q, n2) for the first ``n_queries``
-    vectors — tiny (n_queries x dim ints), the same collect shape as
-    ``ivf_topk``'s centroid seed."""
-    rows = (
-        base.filter(F.col("vec_id") < n_queries).orderBy("vec_id").collect()
-    )
-    return [(int(r["vec_id"]), [int(x) for x in r["q"]], int(r["n2"]))
-            for r in rows]
+    """Driver-side (vec_id, q, n2) for the first ``n_queries`` vectors
+    of ``with_quantized`` output (tiny: n_queries x dim ints), and their
+    common length ``dim``: the most frequent length among them, ties to
+    the smallest vec_id's.  Vectors of another length are dropped."""
+    rows = [
+        (int(r["vec_id"]), [int(x) for x in r["q"]], int(r["n2"]))
+        for r in base.filter(F.col("vec_id") < n_queries)
+        .orderBy("vec_id")
+        .collect()
+    ]
+    if not rows:
+        return [], 0
+    dim = Counter(len(q) for _, q, _ in rows).most_common(1)[0][0]
+    return [r for r in rows if len(r[1]) == dim], dim
 
 
 def _np_quantize(vm32):
@@ -73,7 +86,32 @@ def _np_quantize(vm32):
     return q, (q * q).sum(axis=1)
 
 
-def _score_batches(queries, k, probe_sets=None, cents=None):
+def _cent_arrays(cents: list[tuple[int, list[int], int]]):
+    """Centroids as numpy int64 arrays, sorted by cid so that numpy's
+    first-max argmax tie-breaks toward the SMALLEST cid."""
+    import numpy as np
+
+    ordered = sorted(cents, key=lambda c: c[0])
+    cids = np.array([c[0] for c in ordered], dtype=np.int64)
+    cmat = np.array([c[1] for c in ordered], dtype=np.int64)  # k x dim
+    cn2 = np.array([c[2] for c in ordered], dtype=np.int64)
+    return cids, cmat, cn2
+
+
+def _argmax_cell(vm, n2, cids, cmat, cn2):
+    """Argmax-cosine cell id per row of the int64 batch ``vm`` (norms
+    ``n2``) against ``_cent_arrays`` output: ONE int64 matmul.  Dots are
+    exact (|dot| < 2^53 so the float64 cast is lossless; overflow needs
+    dim * Q^2 * sqrt(dim) > 2^63 — dim ~3000 at Q=1000), the cosine is
+    one IEEE-754 double sqrt/divide, and ties go to the smallest cid
+    (``cids`` is sorted, argmax takes the first maximum)."""
+    import numpy as np
+
+    den = np.sqrt((n2[:, None] * cn2[None, :]).astype(np.float64))
+    return cids[np.argmax((vm @ cmat.T) / den, axis=1)]
+
+
+def _score_batches(queries, k, probe_sets=None, cent_arrays=None):
     """mapInPandas closure over RAW (vec_id, embedding) batches:
     quantize (``_np_quantize``), score every corpus vector against the
     (driver-collected, closure-shipped) query matrix with ONE int64
@@ -85,16 +123,13 @@ def _score_batches(queries, k, probe_sets=None, cents=None):
     candidates returns results identical to scoring every pair — while
     the JVM<->Python traffic and the window shuffle carry
     O(batches x n_queries x k) rows instead of |corpus| x n_queries.
+    Dots are exact int64 and the cosine is one double sqrt/divide, as
+    in ``_argmax_cell``.
 
-    Bit-equality with the HOF formulation (same argument as
-    ``_assign_batches``): dots are exact int64, |dot| < 2^53 so the
-    float64 cast is lossless, and the cosine is the same IEEE-754
-    double sqrt/divide.
-
-    ``probe_sets``/``cents`` switch on IVF mode: each corpus vector is
-    first assigned its argmax-cosine cell (the ``_assign_batches``
-    matmul, ties to the smallest cid) and query j only scores vectors
-    whose cell is in ``probe_sets[j]``.
+    ``probe_sets``/``cent_arrays`` (``_cent_arrays`` output) switch on
+    IVF mode: each corpus vector is first assigned its cell
+    (``_argmax_cell``) and query j only scores vectors whose cell is in
+    ``probe_sets[j]``.
     """
     import numpy as np
     import pandas as pd
@@ -102,8 +137,6 @@ def _score_batches(queries, k, probe_sets=None, cents=None):
     qids = np.array([q[0] for q in queries], dtype=np.int64)
     qmat = np.array([q[1] for q in queries], dtype=np.int64)  # nq x dim
     qn2 = np.array([q[2] for q in queries], dtype=np.int64)
-    if cents is not None:
-        cids, cmat, cn2 = _cent_arrays(cents)
 
     def gen(batches):
         for pdf in batches:
@@ -118,14 +151,12 @@ def _score_batches(queries, k, probe_sets=None, cents=None):
                 continue
             dots = vm @ qmat.T  # batch x nq
             cos = dots / np.sqrt((n2[:, None] * qn2[None, :]).astype(np.float64))
-            if cents is not None:
-                cdots = vm @ cmat.T
-                cden = np.sqrt((n2[:, None] * cn2[None, :]).astype(np.float64))
-                cell = cids[np.argmax(cdots / cden, axis=1)]
+            if cent_arrays is not None:
+                cell = _argmax_cell(vm, n2, *cent_arrays)
             out_q, out_n, out_c = [], [], []
             for j in range(len(qids)):
                 mask = vid != qids[j]
-                if cents is not None:
+                if cent_arrays is not None:
                     mask &= np.isin(cell, probe_sets[j])
                 idx = np.nonzero(mask)[0]
                 if idx.size == 0:
@@ -151,7 +182,7 @@ def _score_batches(queries, k, probe_sets=None, cents=None):
 
 def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
     """Exact (cos desc, neighbor_id asc) top-k window over a candidate
-    table — the shared tail of both top-k paths."""
+    table — the shared tail of both top-k searches."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.asc("neighbor_id")
     )
@@ -165,57 +196,42 @@ def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    emb: DataFrame, k: int = 5, n_queries: int = 20, method: str = "arrow"
-) -> DataFrame:
+def _search(emb, queries, dim, k, probe_sets=None, cent_arrays=None):
+    """Score the corpus against ``queries`` in one mapInPandas pass and
+    rank the per-batch candidates.  Only vectors the batch can stack are
+    scored: exactly ``dim`` elements, none NULL (a NULL vector's size
+    is -1 or NULL)."""
+    schema = "query_id long, neighbor_id long, cos_raw double"
+    if not queries:
+        return _rank_candidates(emb.sparkSession.createDataFrame([], schema), k)
+    corpus = emb.select("vec_id", "embedding").filter(
+        (F.size("embedding") == dim)
+        & ~F.exists("embedding", lambda x: x.isNull())
+    )
+    cand = corpus.mapInPandas(
+        _score_batches(queries, k, probe_sets, cent_arrays), schema
+    )
+    return _rank_candidates(cand, k)
+
+
+def cosine_topk(emb: DataFrame, k: int = 5, n_queries: int = 20) -> DataFrame:
     """Brute-force top-k neighbors for the first ``n_queries`` vectors.
 
-    Output: (query_id, neighbor_id, rank, cos).  One pass over the
-    corpus per query batch — the classic broadcast-NN scan.
+    Output: (query_id, neighbor_id, rank, cos), ranked by (cos desc,
+    neighbor_id asc).  The query matrix is collected once (n_queries x
+    dim ints) and scoring runs as one numpy int64 matmul per Arrow
+    batch with per-batch top-k pruning (``_score_batches``) — the exact
+    window then ranks O(batches x n_queries x k) candidate rows instead
+    of |corpus| x n_queries scored pairs.  Row-equal to the crossJoin
+    reference (test_cosine_topk_matches_hof).
 
-    ``method="arrow"`` (default): the query matrix is collected once
-    (n_queries x dim ints, the ``ivf_topk`` centroid-collect shape) and
-    scoring runs as one numpy int64 matmul per Arrow batch with
-    per-batch top-k pruning (``_score_batches``) — the exact window
-    then ranks O(batches x n_queries x k) candidate rows instead of
-    |corpus| x n_queries scored pairs.  ``method="hof"`` keeps the
-    pure-JVM crossJoin formulation (zero driver actions); both produce
-    identical rows (pinned by test_cosine_topk_arrow_hof_equal).
+    Malformed vectors are dropped, on both sides: a NULL vector, a
+    vector with a NULL element, a zero vector, and a vector whose
+    length differs from the queries' common length (see
+    ``_collect_queries``).
     """
-    if method not in ("hof", "arrow"):
-        raise ValueError(f"method={method!r}: expected 'hof' or 'arrow'")
-    base = with_quantized(emb)
-    if method == "arrow":
-        queries = _collect_queries(base, n_queries)
-        if not queries:
-            sch = "query_id long, neighbor_id long, cos_raw double"
-            return _rank_candidates(
-                emb.sparkSession.createDataFrame([], sch), k
-            )
-        cand = emb.select("vec_id", "embedding").mapInPandas(
-            _score_batches(queries, k),
-            "query_id long, neighbor_id long, cos_raw double",
-        )
-        return _rank_candidates(cand, k)
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na"),
-    )
-    corpus = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb"),
-    )
-    pairs = F.broadcast(queries).crossJoin(corpus).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = pairs.withColumn(
-        "cos_raw",
-        _dot(F.col("qa"), F.col("qb"))
-        / F.sqrt((F.col("na") * F.col("nb")).cast("double")),
-    )
-    return _rank_candidates(scored, k)
+    queries, dim = _collect_queries(with_quantized(emb), n_queries)
+    return _search(emb, queries, dim, k)
 
 
 def lsh_bucket_pairs(
@@ -391,7 +407,6 @@ def embedding_near_dup_docs(
     threshold: float = 0.9,
     bands: int = 8,
     bits_per_band: int = 8,
-    exhaustive: bool = False,
     max_band_df: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs over documents, two-stage:
@@ -402,9 +417,7 @@ def embedding_near_dup_docs(
     2. exact quantized-cosine verification of candidates only.
 
     Recall is the standard banded-LSH tradeoff (any-band sign agreement);
-    tests pin it against the exhaustive baseline on the fixture.
-    ``exhaustive=True`` keeps that O(n^2) baseline available for small
-    fixtures/recall measurement — never the scale path.
+    tests pin it against an all-pairs baseline on the fixture.
     """
     base = with_quantized(emb).join(
         docs.select(F.col("doc_id").alias("vec_id"), "source"), "vec_id"
@@ -421,14 +434,11 @@ def embedding_near_dup_docs(
         F.col("n2").alias("nb"),
         F.col("source").alias("source_b"),
     )
-    if exhaustive:
-        pairs = a.join(b, F.col("va") < F.col("vb"))
-    else:
-        cand = lsh_candidate_pairs(
-            emb, bands=bands, bits_per_band=bits_per_band,
-            max_band_df=max_band_df,
-        )
-        pairs = cand.join(a, "va").join(b, "vb")
+    cand = lsh_candidate_pairs(
+        emb, bands=bands, bits_per_band=bits_per_band,
+        max_band_df=max_band_df,
+    )
+    pairs = cand.join(a, "va").join(b, "vb")
     scored = pairs.withColumn(
         "cos_raw",
         _dot(F.col("qa"), F.col("qb"))
@@ -443,133 +453,40 @@ def embedding_near_dup_docs(
     )
 
 
-def _cent_cos_arr(cents: list[tuple[int, list[int], int]]) -> F.Column:
-    """ONE array<struct(cos_c, ncid)> of centroid cosines against the
-    current row's (``q``, ``n2``) — centroids ride in as LITERALS
-    (k x dim ints), so the whole thing is a pure map-side projection:
-    zero joins, zero exchanges (the ``kmeans_lloyd.assign_cols`` shape,
-    r04 VERDICT #3).
-
-    ``ncid`` carries the NEGATED centroid id so that plain struct
-    ordering (cos_c first, ncid second) makes both the argmax and the
-    sorted probe ranking tie-break toward the SMALLEST cid, matching
-    ``row_number() OVER (ORDER BY cos DESC, cid ASC)`` in the oracle.
-
-    The whole centroid table rides in as THREE array literals (vectors,
-    sq-norms, negated ids) iterated by an index-aware ``transform`` —
-    the Catalyst tree is O(1) in k and dim (3 Literal nodes + one
-    lambda), where the previous per-centroid loop built O(k x dim)
-    Literal nodes (and the cut before it an O(k^2 x dim) when-chain
-    that OOMed the driver at plan time).  A production-sized index
-    (k=1024-4096 cells) only grows the literal VALUES, not the plan.
-
-    The literals are built by PARSING one SQL string per array rather
-    than ``F.lit`` on a nested Python list: py4j converts ``lit``
-    element-by-element (~0.85s for 16x64 ints, minutes at k=1024),
-    while the JVM parses the same values from a single string in
-    milliseconds (measured 0.037s at k=1024 x dim 64).
-    """
-    vecs = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{int(x)}L" for x in cvec) + ")"
-            for _, cvec, _ in cents
-        )
-        + ")"
-    )
-    n2s = F.expr(
-        "array(" + ",".join(f"{int(cn2)}L" for _, _, cn2 in cents) + ")"
-    )
-    ncids = F.expr(
-        "array(" + ",".join(f"{-int(cid)}L" for cid, _, _ in cents) + ")"
-    )
-
-    def entry(cv, i):
-        dot = F.aggregate(
-            F.zip_with(F.col("q"), cv, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        cos = dot / F.sqrt(
-            (F.col("n2") * F.element_at(n2s, i + 1)).cast("double")
-        )
-        return F.struct(
-            cos.alias("cos_c"),
-            F.element_at(ncids, i + 1).cast("long").alias("ncid"),
-        )
-
-    return F.transform(vecs, entry)
-
-
-def ivf_assign(
-    base: DataFrame, cents: list[tuple[int, list[int], int]]
-) -> DataFrame:
-    """(vec_id, cid): argmax-cosine cell per corpus vector, MAP-SIDE.
-
-    ``cents`` = [(cid, quantized_vector, sq_norm)].  ``array_max`` over
-    the literal-centroid struct array — no Exchange between the corpus
-    scan and the assignment projection (plan-pinned by test)."""
-    m = F.array_max(_cent_cos_arr(cents))
-    return base.select("vec_id", (-m["ncid"]).cast("int").alias("cid"))
-
-
-def _cent_arrays(cents: list[tuple[int, list[int], int]]):
-    """Centroids as numpy int64 arrays, sorted by cid so that numpy's
-    first-max argmax tie-breaks toward the SMALLEST cid exactly like the
-    HOF struct-max's negated-id ordering."""
-    import numpy as np
-
-    ordered = sorted(cents, key=lambda c: c[0])
-    cids = np.array([c[0] for c in ordered], dtype=np.int64)
-    cmat = np.array([c[1] for c in ordered], dtype=np.int64)  # k x dim
-    cn2 = np.array([c[2] for c in ordered], dtype=np.int64)
-    return cids, cmat, cn2
-
-
-def _assign_batches(cents, extra_cols):
-    """mapInPandas closure: per Arrow batch, ONE int64 matmul against
-    the centroid matrix replaces k x dim interpreted lambda steps per
-    row.  Bit-equal to the HOF path: dot products are exact int64
-    (|dot| < 2^53 so the float64 cast is lossless; overflow needs
-    dim * Q^2 * sqrt(dim) > 2^63 — dim ~3000 at Q=1000), the cosine is
-    the same IEEE-754 double sqrt/divide, and ties break to the
-    smallest cid on both sides."""
+def _assign_batches(cents):
+    """mapInPandas closure over (vec_id, q, n2) batches: each vector's
+    ``_argmax_cell`` — the cell assignment ``ivf_topk`` runs."""
     import numpy as np
     import pandas as pd
 
-    cids, cmat, cn2 = _cent_arrays(cents)
-    cmat_t = cmat.T
+    cent_arrays = _cent_arrays(cents)
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qm = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+            vm = np.stack(pdf["q"].to_numpy()).astype(np.int64)
             n2 = pdf["n2"].to_numpy().astype(np.int64)
-            dots = qm @ cmat_t
-            denom = np.sqrt((n2[:, None] * cn2[None, :]).astype(np.float64))
-            cell = cids[np.argmax(dots / denom, axis=1)].astype(np.int32)
-            out = {"vec_id": pdf["vec_id"], "cid": cell}
-            for c in extra_cols:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            cell = _argmax_cell(vm, n2, *cent_arrays)
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "cid": cell.astype(np.int32)}
+            )
 
     return gen
 
 
-def ivf_assign_arrow(
+def ivf_assign(
     base: DataFrame, cents: list[tuple[int, list[int], int]]
 ) -> DataFrame:
-    """Arrow/numpy twin of ``ivf_assign`` for production-scale k.
+    """(vec_id, cid): argmax-cosine cell per ``with_quantized`` vector,
+    MAP-SIDE (MapInPandas, no Exchange — plan-pinned by test).
 
-    The HOF argmax evaluates k x dim interpreted lambda steps per row
-    (~1µs each): exact and exchange-free, but at an index-sized
-    k=1024-4096 that is ~0.1-1 ms of expression time PER ROW.  This
-    path computes the SAME argmax with one numpy int64 matmul per Arrow
-    batch — still map-side (ArrowEvalPython, no Exchange), pinned
-    bit-equal to ``ivf_assign`` by tests including cosine ties."""
+    ``cents`` = [(cid, quantized_vector, sq_norm)]; ties go to the
+    smallest cid whatever the list order.  One numpy int64 matmul per
+    Arrow batch (``_argmax_cell``), so an index-sized k=1024-4096 costs
+    a matmul, not k x dim interpreted lambda steps per row."""
     return base.select("vec_id", "q", "n2").mapInPandas(
-        _assign_batches(cents, ()), "vec_id long, cid int"
+        _assign_batches(cents), "vec_id long, cid int"
     )
 
 
@@ -580,7 +497,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 8,
     centroids: list[list[int]] | None = None,
-    assign: str = "hof",
 ) -> DataFrame:
     """IVF-flat approximate top-k: coarse-centroid partitioned search.
 
@@ -592,137 +508,46 @@ def ivf_topk(
        oracle-expressible; pass ``centroids`` (quantized integer
        vectors, e.g. ``kmeans_lloyd(...)[1]``, cid = list index) for a
        trained production index.  Either way the centroid set is TINY
-       (k x dim ints) and collected once to the driver;
-    2. assignment: every corpus vector keeps its argmax-cosine cell —
-       ``ivf_assign``'s argmax expression projected INLINE on the
-       corpus scan, zero exchange (the r04 crossJoin + row_number
-       window shuffled corpus x n_centroids rows for what is a per-row
-       function; r05 also dropped the vec_id self-join that re-shuffled
-       the corpus to attach the cell id);
-    3. search: each query ranks the same literal centroids (a sorted
-       struct array, sliced to ``n_probe``, exploded — queries are
-       ``n_queries`` rows, so the explode is negligible), probes its
-       top cells, and scores exactly ONLY vectors assigned to probed
-       cells — an equi-join on cell id.  Scanned fraction
-       ~ n_probe/n_centroids of the corpus instead of all of it.
+       (k x dim ints) and collected once to the driver, in the same
+       collect as the queries;
+    2. probes: each query ranks the centroids on the driver by (cos
+       desc, cid asc) and keeps its top ``n_probe`` cells;
+    3. search: ONE mapInPandas pass assigns every corpus vector its
+       argmax-cosine cell (``_argmax_cell``, the ``ivf_assign`` code),
+       lets each query score only vectors in its probed cells (same
+       int64 matmul as ``cosine_topk``), and emits per-batch top-k
+       candidates to the exact window.  No join, and the only shuffle
+       is the window's, on query_id over candidate rows.  Scored
+       fraction ~ n_probe/n_centroids of the corpus.
 
-    Output matches ``cosine_topk``: (query_id, neighbor_id, rank, cos);
-    recall@k vs the exact scan is pinned by tests (trained >= seeded).
+    Output matches ``cosine_topk``: (query_id, neighbor_id, rank, cos),
+    with the same malformed-vector contract; recall@k vs the exact scan
+    is pinned by tests (trained >= seeded).
     """
-    if assign not in ("hof", "arrow"):
-        raise ValueError(
-            f"assign={assign!r}: expected 'hof' or 'arrow' (a typo here "
-            "would silently run the interpreted per-row argmax at "
-            "production index sizes)"
-        )
+    import numpy as np
+
     base = with_quantized(emb)
-    shared_rows = None
     if centroids is None:
-        # ONE collect serves both the seed centroids and (arrow path)
-        # the query matrix — the two prefixes overlap, so fetching
-        # max(n_centroids, n_queries) rows replaces two driver jobs
-        # with one (r06).
-        n_fetch = max(n_centroids, n_queries) if assign == "arrow" else (
-            n_centroids
-        )
-        shared_rows = (
-            base.filter(F.col("vec_id") < n_fetch)
-            .orderBy("vec_id")
-            .collect()
-        )
-        cents = [(int(r["vec_id"]), [int(x) for x in r["q"]], int(r["n2"]))
-                 for r in shared_rows if r["vec_id"] < n_centroids]
+        rows, dim = _collect_queries(base, max(n_centroids, n_queries))
+        cents = [r for r in rows if r[0] < n_centroids]
     else:
+        rows, dim = _collect_queries(base, n_queries)
         cents = [
             (i, [int(x) for x in c], sum(int(x) * int(x) for x in c))
             for i, c in enumerate(centroids)
         ]
     if not cents:
         raise ValueError("empty centroid set")
-    if assign == "arrow":
-        # Fused scorer (r06): ONE mapInPandas pass assigns each corpus
-        # vector its cell (the ``_assign_batches`` matmul), restricts
-        # each query to its probed cells, scores with the same int64
-        # matmul, and emits per-batch top-k candidates — replacing the
-        # probes-broadcast join + per-pair HOF dot + corpus-sized
-        # window with an O(batches x n_queries x k)-row exact window.
-        # The probe ranking is replayed on the driver in numpy: cos
-        # desc then cid asc, identical to the reversed array_sort of
-        # ``_cent_cos_arr`` structs (same IEEE doubles, same
-        # tie-break), pinned by test_ivf_topk_hof_arrow_equal.
-        import numpy as np
-
-        if shared_rows is not None:
-            queries = [
-                (int(r["vec_id"]), [int(x) for x in r["q"]], int(r["n2"]))
-                for r in shared_rows if r["vec_id"] < n_queries
-            ]
-        else:
-            queries = _collect_queries(base, n_queries)
-        if not queries:
-            sch = "query_id long, neighbor_id long, cos_raw double"
-            return _rank_candidates(
-                emb.sparkSession.createDataFrame([], sch), k
-            )
-        cids, cmat, cn2 = _cent_arrays(cents)
-        probe_sets = []
-        for _qid, qvec, qn2 in queries:
-            qv = np.array(qvec, dtype=np.int64)
-            cos_c = (cmat @ qv) / np.sqrt(
-                (cn2 * np.int64(qn2)).astype(np.float64)
-            )
-            order = np.lexsort((cids, -cos_c))[:n_probe]
-            probe_sets.append(np.sort(cids[order]))
-        cand = emb.select("vec_id", "embedding").mapInPandas(
-            _score_batches(queries, k, probe_sets=probe_sets, cents=cents),
-            "query_id long, neighbor_id long, cos_raw double",
+    queries = [r for r in rows if r[0] < n_queries]
+    cent_arrays = _cent_arrays(cents)
+    cids, cmat, cn2 = cent_arrays
+    probe_sets = []
+    for _qid, qvec, qn2 in queries:
+        cos_c = (cmat @ np.array(qvec, dtype=np.int64)) / np.sqrt(
+            (cn2 * np.int64(qn2)).astype(np.float64)
         )
-        return _rank_candidates(cand, k)
-    # probe ranking: default array_sort orders ascending (cos asc, ncid
-    # asc = cid desc); reversed, that is (cos desc, cid asc) — slice
-    # n_probe and explode, map-side on a tiny query set
-    probes = (
-        base.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.reverse(F.array_sort(_cent_cos_arr(cents))),
-                    1,
-                    n_probe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", (-F.col("p.ncid")).cast("int").alias("cid"))
-    )
-    qside = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na"),
-    )
-    # cell id is a pure per-row function of (q, n2) over centroid
-    # literals — project it INLINE instead of joining ``ivf_assign``'s
-    # output back onto the corpus (that join shuffled the corpus twice
-    # on vec_id for what is a map-side expression)
-    cside = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb"),
-        (-F.array_max(_cent_cos_arr(cents))["ncid"]).cast("int")
-        .alias("cid"),
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(cside, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(qside), "query_id")
-    )
-    scored = cand.withColumn(
-        "cos_raw",
-        _dot(F.col("qa"), F.col("qb"))
-        / F.sqrt((F.col("na") * F.col("nb")).cast("double")),
-    )
-    return _rank_candidates(scored, k)
+        probe_sets.append(np.sort(cids[np.lexsort((cids, -cos_c))[:n_probe]]))
+    return _search(emb, queries, dim, k, probe_sets, cent_arrays)
 
 
 def label_stats(emb: DataFrame) -> DataFrame:
@@ -776,12 +601,12 @@ def kmeans_lloyd(
         # distance columns + strict-< when-chain fold was semantically
         # identical, but project-collapse inlined the k distance
         # expressions into the chain — an O(k^2 x dim) Catalyst tree
-        # that OOMed the driver at k=16 (same failure mode as
-        # ``_cent_cos_arr``'s docstring notes for IVF).
+        # that OOMed the driver at k=16.
         # centroid matrix as ONE parsed array literal + index-aware
-        # transform (the ``_cent_cos_arr`` shape): plan is O(1) in k,
-        # and parsing beats k x dim per-element ``F.lit`` py4j round
-        # trips — which this loop would otherwise pay EVERY iteration
+        # transform: plan is O(1) in k, and the JVM parses the values
+        # from one SQL string in milliseconds, where ``F.lit`` on a
+        # nested list converts element by element over py4j (~0.85 s
+        # for 16 x 64 ints) — which this loop would pay EVERY iteration
         vecs = F.expr(
             "array("
             + ",".join(

@@ -193,6 +193,67 @@ def test_simhash_matches_hof(spark):
     assert hof == new
 
 
+def _ref_cos(qa, na, qb, nb):
+    """Reference cosine of two quantized vectors: the exact int64 dot
+    fold, then one double sqrt/divide."""
+    from gents_spark.operators.similarity import _dot
+
+    return _dot(qa, qb) / F.sqrt((na * nb).cast("double"))
+
+
+def _ref_cosine_topk(emb, k, n_queries):
+    """JVM reference for ``cosine_topk``: the broadcast query set
+    crossJoins the quantized corpus, one HOF cosine per pair, then the
+    exact (cos desc, neighbor_id asc) window."""
+    from pyspark.sql import Window
+
+    from gents_spark.operators.similarity import with_quantized
+
+    base = with_quantized(emb)
+    queries = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("q").alias("qa"),
+        F.col("n2").alias("na"),
+    )
+    corpus = base.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("q").alias("qb"),
+        F.col("n2").alias("nb"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_raw"), F.asc("neighbor_id")
+    )
+    return (
+        F.broadcast(queries)
+        .crossJoin(corpus)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos_raw", _ref_cos(*map(F.col, ("qa", "na", "qb", "nb"))))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", "rank",
+            F.round("cos_raw", 6).alias("cos"),
+        )
+    )
+
+
+def _ref_ivf_assign(base, cents):
+    """JVM reference for ``ivf_assign``: every quantized vector
+    crossJoins the centroid table and keeps max(struct(cos, -cid)) —
+    the argmax cell, ties to the smallest cid."""
+    c = base.sparkSession.createDataFrame(
+        cents, "cid long, cq array<long>, cn2 long"
+    )
+    cos = _ref_cos(*map(F.col, ("q", "n2", "cq", "cn2")))
+    return (
+        base.crossJoin(F.broadcast(c))
+        .groupBy("vec_id")
+        .agg(F.max(F.struct(cos.alias("cos"), (-F.col("cid")).alias("ncid")))
+             .alias("m"))
+        .select("vec_id", (-F.col("m.ncid")).cast("int").alias("cid"))
+    )
+
+
 def test_null_text_shingles_empty_not_null(spark):
     """shingles_col's contract is empty array (size 0), never NULL —
     split/slice/zip_with would otherwise propagate NULL text to a NULL
@@ -235,6 +296,46 @@ def test_cosine_topk_ranks_geometrically(emb):
     cos = {r["neighbor_id"]: r["cos"] for r in out}
     assert cos[2] == 0.0 and cos[3] == -1.0
     assert 4 not in cos  # zero vector excluded
+
+
+def test_cosine_topk_matches_hof(spark):
+    """The Arrow scorer is row-equal to the crossJoin reference on the
+    sf0.01 embeddings plus copies of vectors 0-39 under new ids: each
+    query's copy scores cos 1.0, and a copy of 20-39 ties its original
+    for every query, so the neighbor_id tie-break decides ranks.
+    Malformed vectors (NULL, NULL element, another length) are dropped
+    instead of failing the query."""
+    from gents_spark.operators.similarity import cosine_topk
+
+    base = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    top = base.agg(F.max("vec_id")).first()[0]
+    emb = base.unionByName(
+        base.filter(F.col("vec_id") < 40).withColumn(
+            "vec_id", F.col("vec_id") + top + 1
+        )
+    )
+    got = sorted(map(tuple, cosine_topk(emb, k=5, n_queries=20).collect()))
+    ref = sorted(
+        map(tuple, _ref_cosine_topk(emb, k=5, n_queries=20).collect())
+    )
+    assert got == ref and len(got) == 100
+    cos = [(q, c) for q, _, _, c in got]
+    assert len(set(cos)) < len(cos)  # ties were ranked
+
+    bad = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0], 0),
+            (1, [0.9, 0.1], 0),
+            (2, None, 0),
+            (3, [1.0], 0),
+            (4, [1.0, None], 0),
+        ],
+        "vec_id long, embedding array<float>, label int",
+    )
+    out = cosine_topk(bad, k=5, n_queries=1).collect()
+    assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in out] == [
+        (0, 1, 1)
+    ]
 
 
 def test_lang_id_deterministic(docs):
@@ -297,14 +398,17 @@ def test_multimodal_meta_matches_decode(docs):
 
 def test_near_dup_lsh_two_stage_recall(spark):
     """Banded sign-LSH near-dup: candidates via equi-join (no all-pairs),
-    results a strict subset of the exhaustive baseline, recall >= 0.9 on
+    results a strict subset of the all-pairs baseline, recall >= 0.9 on
     genuinely near-duplicate vectors (cos >= 0.9) — the regime the
     operator exists for.  Deterministic synthetic corpus: 60 base unit
     vectors + a small-angle perturbed copy of each."""
     import math
     import random
 
-    from gents_spark.operators.similarity import embedding_near_dup_docs
+    from gents_spark.operators.similarity import (
+        embedding_near_dup_docs,
+        with_quantized,
+    )
 
     rng = random.Random(7)
     rows = []
@@ -322,11 +426,16 @@ def test_near_dup_lsh_two_stage_recall(spark):
     )
     docs = emb.selectExpr("vec_id AS doc_id", "'s' AS source")
 
+    q = with_quantized(emb)
+    a = q.select(F.col("vec_id").alias("va"), F.col("q").alias("qa"),
+                 F.col("n2").alias("na"))
+    b = q.select(F.col("vec_id").alias("vb"), F.col("q").alias("qb"),
+                 F.col("n2").alias("nb"))
     ex = {
-        (r["doc_a"], r["doc_b"])
-        for r in embedding_near_dup_docs(
-            docs, emb, threshold=0.9, exhaustive=True
-        ).collect()
+        (r["va"], r["vb"])
+        for r in a.join(b, F.col("va") < F.col("vb"))
+        .filter(_ref_cos(*map(F.col, ("qa", "na", "qb", "nb"))) >= 0.9)
+        .collect()
     }
     got = {
         (r["doc_a"], r["doc_b"])
@@ -482,18 +591,6 @@ def test_embedding_lsh_candidate_band_cap(spark):
     assert (100, 101) in capped
 
 
-def test_ivf_topk_rejects_unknown_assign(spark):
-    """A typo'd assign= must raise, not silently run the interpreted
-    per-row argmax at production index sizes."""
-    import pytest as _pytest
-
-    from gents_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with _pytest.raises(ValueError, match="assign="):
-        ivf_topk(emb, k=2, n_queries=2, assign="Arrow")
-
-
 def test_ivf_topk_recall_and_shape(spark):
     """IVF-flat ANN: recall@5 >= 0.9 vs the exact scan at
     n_probe=8/16 cells on the sf0.01 embeddings, and every reported
@@ -517,19 +614,11 @@ def test_ivf_topk_recall_and_shape(spark):
             assert r["cos"] == ex_cos[k]
 
 
-def test_ivf_assign_arrow_bit_equal(spark):
-    """The numpy-matmul Arrow assignment is bit-identical to the HOF
-    argmax — including cosine TIES (two identical centroids must both
-    resolve to the smaller cid) — and the full ivf_topk output is
-    row-identical under assign="arrow"."""
-    import pyspark.sql.functions as F  # noqa: F811
-
-    from gents_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_arrow,
-        ivf_topk,
-        with_quantized,
-    )
+def test_ivf_assign_matches_hof(spark):
+    """The numpy-matmul cell assignment (the code ivf_topk runs) equals
+    the crossJoin reference's argmax — including cosine TIES: two
+    identical centroids must both resolve to the smaller cid."""
+    from gents_spark.operators.similarity import ivf_assign, with_quantized
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     base = with_quantized(emb)
@@ -541,25 +630,19 @@ def test_ivf_assign_arrow_bit_equal(spark):
         for r in rows
     ]
     # duplicate centroid 3 as cid 99: every vector equidistant from both
-    # must land on 3 in both implementations (and list order must not
-    # matter for the arrow path — pass 99 first)
+    # must land on 3 (and list order must not matter — pass 99 first)
     cents_tied = [(99, cents[3][1], cents[3][2])] + cents
-    hof = {
+    ref = {
+        (r["vec_id"], r["cid"])
+        for r in _ref_ivf_assign(base, cents_tied).collect()
+    }
+    got = {
         (r["vec_id"], r["cid"])
         for r in ivf_assign(base, cents_tied).collect()
     }
-    arw = {
-        (r["vec_id"], r["cid"])
-        for r in ivf_assign_arrow(base, cents_tied).collect()
-    }
-    assert hof == arw
-    assert not any(cid == 99 for _, cid in hof)
-
-    k_h = ivf_topk(emb, k=5, n_queries=20).collect()
-    k_a = ivf_topk(emb, k=5, n_queries=20, assign="arrow").collect()
-    assert sorted(map(tuple, k_h), key=lambda t: (t[0], t[2])) == sorted(
-        map(tuple, k_a), key=lambda t: (t[0], t[2])
-    )
+    assert got == ref and len(got) == base.count()
+    assert (3, 3) in got
+    assert not any(cid == 99 for _, cid in got)
 
 
 def test_classify_columns_data_driven(spark):

@@ -191,6 +191,23 @@ def test_m4_tiebreaks_are_deterministic(spark):
     assert out.v_first == 5.0 and out.v_last == 1.0
 
 
+def test_m4_string_ts_matches_timestamp(spark):
+    """A string ts is cast to timestamp once up front: the result is the
+    timestamp-typed input's single row (raw string bounds compared
+    '10:00' < '9:00' lexically and scattered the points over buckets)."""
+    rows = [
+        (1, "2026-01-05 9:00:00", 3.0),
+        (1, "2026-01-05 10:00:00", 1.0),
+        (1, "2026-01-05 11:30:00", 2.0),
+    ]
+    s = spark.createDataFrame(rows, "user_id bigint, ts string, value double")
+    t = s.withColumn("ts", F.col("ts").cast("timestamp"))
+    got = m4(s, n_buckets=1).collect()
+    assert got == m4(t, n_buckets=1).collect()
+    assert len(got) == 1 and got[0].bucket == 0 and got[0].n_points == 3
+    assert got[0].t_first == datetime(2026, 1, 5, 9, 0, 0)
+
+
 def test_lttb_properties(wave):
     out = lttb(wave, n_out=20).collect()
     assert len(out) == 20

@@ -4,9 +4,10 @@ Compiles each ``__spark_entry__.queries()`` entry against an sf dir —
 WITHOUT running the query's own action — and reports the plan features
 that matter at 100 TB.  (A few operators run bounded driver-side jobs
 at DataFrame-construction time and therefore execute during the audit
-too: ivf_topk collects its k seed centroids, kmeans/trained-IVF run the
-k-row-per-iteration Lloyd loop, dup_clusters runs its convergence loop
-— all metadata-scale by design, but not free.)
+too: cosine_topk and ivf_topk collect their query vectors and seed
+centroids, kmeans/trained-IVF run the k-row-per-iteration Lloyd loop,
+dup_clusters runs its convergence loop — all metadata-scale by design,
+but not free.)
 
 - ``shuf``   hash-partitioning Exchanges (each is a full shuffle of its
              input; the number that must survive a 1000-executor run)
@@ -22,7 +23,7 @@ k-row-per-iteration Lloyd loop, dup_clusters runs its convergence loop
              cannot express the op: codecs, LTTB, multimodal decode)
 - ``cart``   CartesianProduct / BroadcastNestedLoopJoin (quadratic —
              only acceptable on provably tiny inputs, e.g. the
-             ``exhaustive=True`` recall baselines, never a gate query)
+             all-pairs recall baselines in tests, never a gate query)
 - ``cache``  InMemoryTableScan occurrences.  NOTE: when this is > 0 the
              other counts OVERCOUNT what actually executes —
              ``executedPlan().toString()`` recursively prints every
