@@ -62,11 +62,6 @@ def _zigzag(x: np.ndarray) -> np.ndarray:
     return ((x.astype(np.int64) << 1) ^ (x.astype(np.int64) >> 63)).astype(np.uint64)
 
 
-def _unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64)
-    return ((u >> np.uint64(1)).astype(np.int64)) ^ -(u & np.uint64(1)).astype(np.int64)
-
-
 def _bitpack(codes: np.ndarray, lens: np.ndarray) -> bytes:
     """Pack variable-length codes (value in ``codes``, bit-length in
     ``lens``, MSB-first) into bytes — fully vectorized."""

@@ -17,13 +17,13 @@ from pyspark.sql.types import (
     IntegerType,
 )
 
-from gents_spark.functions.codec import (
-    decode_f64,
-    decode_i64,
-    encode_f64,
-    encode_i64,
+from gents_spark.functions.codec import decode_i64
+from gents_spark.operators.rollup import (
+    bucket_col,
+    bucket_end_col,
+    per_tier,
+    tier_list,
 )
-from gents_spark.operators.rollup import bucket_col, bucket_end_col
 
 
 @pandas_udf(BinaryType())
@@ -41,12 +41,6 @@ def decode_tokens(payload: pd.Series) -> pd.Series:
 
 
 @pandas_udf(BinaryType())
-def encode_f64_stream(values: pd.Series) -> pd.Series:
-    """array<double> -> Gorilla-XOR binary."""
-    return values.map(lambda a: encode_f64(a))
-
-
-@pandas_udf(BinaryType())
 def encode_i64_stream(values: pd.Series) -> pd.Series:
     """array<long> -> DoD binary (whole-batch vectorized)."""
     from gents_spark.functions.codec import encode_i64_batch
@@ -56,7 +50,7 @@ def encode_i64_stream(values: pd.Series) -> pd.Series:
 
 def attach_payload(
     finer: DataFrame,
-    coarser_tier: str,
+    coarser_tier: str | list[str],
     value_col: str = "sum_tok",
     ts_col: str = "bucket_start",
     gchunk_col: str | None = None,
@@ -69,23 +63,33 @@ def attach_payload(
     value_col='sum_tok') or the raw rows (ts_col='event_time',
     value_col='n_tok') for the finest tier's payload.
 
+    ``coarser_tier`` is one tier label, or a list of them: then each
+    ``finer`` row's ``tier`` column names the coarser tier it feeds, its
+    parent bucket is a CASE over that column, and the output keeps
+    ``tier`` — one aggregate and one encode for every coarse tier.
+
     The sort + encode happen inside one JVM aggregation + one pandas UDF
     call: ``sort_array(collect_list(struct(ts, v)))`` keeps ordering
     distributed (no driver collect), then the codec sees a clean int64
     array per group.  Group size is time-bounded (finer buckets per
     coarser bucket), so collect_list cannot blow memory.
 
-    ``gchunk_col``: existing day-grain column on ``finer``; when given it
-    joins the grouping keys and the output, so an input hash-partitioned
-    on ``(source, gchunk_col)`` aggregates with zero exchange and the
-    caller's payload join on ``(source, gchunk_col, bucket_start)`` stays
-    co-located (see operators.rollup.rollup for the clustering rule).
+    ``gchunk_col``: existing chunk-grain column on ``finer``; when given
+    it joins the grouping keys and the output, so an input
+    hash-partitioned on ``(source, gchunk_col)`` aggregates with zero
+    exchange and the caller's payload join on ``(source, gchunk_col,
+    [tier,] bucket_start)`` stays co-located (see operators.rollup.rollup
+    for the clustering rule).
     """
+    tiers = tier_list(coarser_tier)
     keys = ["source"]
     if gchunk_col:
         keys.append(gchunk_col)
+    if len(tiers) > 1:
+        keys.append("tier")
     grouped = finer.groupBy(
-        *keys, bucket_col(ts_col, coarser_tier).alias("bucket_start")
+        *keys,
+        per_tier(tiers, lambda t: bucket_col(ts_col, t)).alias("bucket_start"),
     ).agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct(ts_col, value_col))),
@@ -95,8 +99,6 @@ def attach_payload(
     return grouped.select(
         *keys,
         "bucket_start",
-        bucket_end_col(coarser_tier).alias(
-            "bucket_end"
-        ),
+        bucket_end_col(tiers).alias("bucket_end"),
         encode_i64_stream(F.col("_stream")).alias("payload"),
     )

@@ -4,13 +4,18 @@ GenTS leaves missing timesteps absent (no analog); the north_rule adds
 them.  Design (SURVEY.md §2.3 J4 / §2.5 W5):
 
 Every input tier row looks at the NEXT known bucket of its source
-(``lead`` over a (source, day-chunk) window, with a tiny day-summary
+(``lead`` over a (source, chunk[, tier]) window, with a tiny chunk-summary
 carry for chunk boundaries) and directly GENERATES the missing buckets
 between them, carrying its own values (LOCF) or interpolating toward
 the next row's (linear).  One generator pass emits the input rows and
 the gaps together: each row explodes ``sequence(0, gap_n)``, where k=0
 is the row itself (``filled=false``) and k>=1 are its generated
 successors (``filled=true``) — identical to a dense min..max spine.
+
+``tier`` is one label or a list of them: a multi-tier frame (rows carry
+a ``tier`` column, as ``rollup(df, [...])`` emits) is filled in the SAME
+pass — the window and the carry add ``tier`` to their keys, and the step
+and ``bucket_end`` are a CASE over it (``rollup.per_tier``).
 
 Why not the textbook spine-join (materialize a dense per-source
 sequence of buckets, left-join the tier onto it, window-fill the
@@ -22,10 +27,10 @@ gaps exist.  Measured on the bench tier: ~3x faster.  The equality
 references are the dense-spine pandas fillers ``oracle_gapfill_locf`` /
 ``oracle_gapfill_linear`` in ``tests/oracle.py``.
 
-Scale note: windows are partitioned by (source, day) — parallel WITHIN
+Scale note: windows are partitioned by (source, chunk) — parallel WITHIN
 a source (a long-retention source is not one straggler task); the
-boundary carry travels through a day-summary table that is ~|days x
-sources| rows, broadcast back.
+boundary carry travels through a chunk-summary table that is ~|chunks x
+sources x tiers| rows, broadcast back.
 """
 
 from __future__ import annotations
@@ -37,10 +42,12 @@ from pyspark.sql import DataFrame, Window
 # tier_grain accepts named tiers + '<N>s' labels, so gap-fill composes
 # with rollup.time_bucket grids (gapfill(g, '900s') == 15-min resample;
 # alignment only needs bucket_starts congruent mod step)
-from gents_spark.operators.rollup import (  # noqa: F401 (re-exports)
-    TIER_SECONDS,
-    TIER_UNITS,
+from gents_spark.operators.rollup import (
+    bucket_end_col,
+    per_tier,
+    tier_col,
     tier_grain,
+    tier_list,
 )
 
 
@@ -51,12 +58,16 @@ _ADDITIVE_COLS = ["cnt", "sum_tok"]
 
 def gapfill(
     tiers: DataFrame,
-    tier: str,
+    tier: str | list[str],
     mode: str = "locf",
     fill_cols: list[str] | None = None,
     gchunk_col: str | None = None,
 ) -> DataFrame:
     """Fill missing buckets; adds ``filled`` boolean.
+
+    ``tier``: the frame's tier label, or the list of tiers a multi-tier
+    frame holds (its ``tier`` column says which; each tier is filled on
+    its own grid, as if filled alone).
 
     ``mode='locf'``: last observation carried forward.
     ``mode='linear'``: straight-line interpolation between flanking known
@@ -74,19 +85,24 @@ def gapfill(
     stats stay NULL on generated rows; pass ``fill_cols`` explicitly to
     widen (on your own semantics).
 
-    ``gchunk_col``: an existing day-grain column to use as the window
+    ``gchunk_col``: an existing chunk-grain column to use as the window
     chunk instead of recomputing ``date_trunc('day', bucket_start)``.
     Same values, but reusing the ATTRIBUTE lets Catalyst see that an
     input already hash-partitioned on ``(source, gchunk_col)`` satisfies
     the window's clustering — the lead/gap-generation window then needs
-    only a sort, no exchange.  The column is consumed, not emitted.
+    only a sort, no exchange.  The column is passed through (a generated
+    row keeps its anchor's chunk), so a join keyed on it stays
+    exchange-free too.
     """
     if mode not in ("locf", "linear", "zero"):
         raise ValueError(f"unknown gapfill mode: {mode}")
     if fill_cols is None and mode == "zero":
         fill_cols = [c for c in _ADDITIVE_COLS if c in tiers.columns]
     fill_cols = fill_cols or [c for c in _FILL_COLS if c in tiers.columns]
-    unit, step = tier_grain(tier)
+    names = tier_list(tier)
+    by_tier = ["tier"] if len(names) > 1 else []
+    keys = ["source", "_gchunk", *by_tier]
+    step = per_tier(names, lambda t: F.lit(tier_grain(t)[1]))
 
     keep_cols = [
         c for c in tiers.columns if c not in ("tier", "bucket_end", gchunk_col)
@@ -96,45 +112,48 @@ def gapfill(
         if gchunk_col
         else F.date_trunc("day", F.col("bucket_start"))
     )
-    t = (
-        tiers.select(*keep_cols, gchunk.alias("_gchunk"))
-        .withColumn("_idx", F.unix_timestamp("bucket_start"))
+    t = tiers.select(
+        *keep_cols, *by_tier, gchunk.alias("_gchunk"),
+        F.unix_timestamp("bucket_start").alias("_idx"),
     )
-    w = Window.partitionBy("source", "_gchunk").orderBy("bucket_start")
-    t = t.withColumn("_nidx", F.lead("_idx").over(w))
-    if mode == "linear":
-        # LOCF generates gap rows from the anchor's own values; the
-        # next-row value columns are only read by the linear branch
-        for c in fill_cols:
-            t = t.withColumn(f"_n_{c}", F.lead(c).over(w))
+    w = Window.partitionBy(*keys).orderBy("bucket_start")
+    # LOCF generates gap rows from the anchor's own values; the
+    # next-row value columns are only read by the linear branch
+    t = t.select(
+        "*",
+        F.lead("_idx").over(w).alias("_nidx"),
+        *[
+            F.lead(c).over(w).alias(f"_n_{c}")
+            for c in (fill_cols if mode == "linear" else [])
+        ],
+    )
 
-    # chunk-boundary carry: first known row of the FOLLOWING days.
+    # chunk-boundary carry: first known row of the FOLLOWING chunks.
     # LOCF only needs the next known INDEX (to bound gap_n); the next
     # known VALUES are read only by the linear interpolation.
     carry_vals = fill_cols if mode == "linear" else []
-    summ = t.groupBy("source", "_gchunk").agg(
+    summ = t.groupBy(*keys).agg(
         F.min("_idx").alias("_fidx"),
         *[F.min_by(c, "_idx").alias(f"_f_{c}") for c in carry_vals],
     )
     w_next = (
-        Window.partitionBy("source")
+        Window.partitionBy("source", *by_tier)
         .orderBy("_gchunk")
         .rowsBetween(1, Window.unboundedFollowing)
     )
     carry = summ.select(
-        "source",
-        "_gchunk",
+        *keys,
         F.first("_fidx").over(w_next).alias("_cidx"),
         *[
             F.first(f"_f_{c}").over(w_next).alias(f"_c_{c}")
             for c in carry_vals
         ],
     )
-    t = t.join(F.broadcast(carry), ["source", "_gchunk"], "left")
+    t = t.join(F.broadcast(carry), keys, "left")
     eff_nidx = F.coalesce(F.col("_nidx"), F.col("_cidx"))
     gap_n = F.when(
         eff_nidx.isNotNull(),
-        ((eff_nidx - F.col("_idx")) / F.lit(step)).cast("long") - 1,
+        ((eff_nidx - F.col("_idx")) / step).cast("long") - 1,
     ).otherwise(F.lit(0))
 
     # k=0 is the input row itself, k>=1 the generated buckets; the clamp
@@ -157,7 +176,7 @@ def gapfill(
         # frac over unix secs, double interpolation -> known rows also
         # become double (tests/oracle.py oracle_gapfill_linear mirrors
         # this arithmetic order exactly)
-        frac = (F.col("_k") * F.lit(step)) / (eff_nidx - F.col("_idx"))
+        frac = (F.col("_k") * step) / (eff_nidx - F.col("_idx"))
         fill = [
             F.when(orig, F.col(c).cast("double")).otherwise(
                 F.col(c).cast("double")
@@ -178,23 +197,17 @@ def gapfill(
     out = out.select(
         "source",
         F.when(orig, F.col("bucket_start"))
-        .otherwise((F.col("_idx") + F.col("_k") * F.lit(step)).cast("timestamp"))
+        .otherwise((F.col("_idx") + F.col("_k") * step).cast("timestamp"))
         .alias("bucket_start"),
         (~orig).alias("filled"),
         *[f.alias(c) for f, c in zip(fill, fill_cols)],
         # non-filled passthrough columns (e.g. payload) are null on
         # generated rows
         *[F.when(orig, F.col(c)).alias(c) for c in extra],
+        tier_col(names),
+        *([F.col("_gchunk").alias(gchunk_col)] if gchunk_col else []),
     )
-
-    end = (
-        F.timestamp_add(unit.upper(), F.lit(1), F.col("bucket_start"))
-        if unit
-        else F.timestamp_add("SECOND", F.lit(step), F.col("bucket_start"))
-    )
-    return out.withColumn("tier", F.lit(tier)).withColumn(
-        "bucket_end", end
-    )
+    return out.withColumn("bucket_end", bucket_end_col(names))
 
 
 def gap_report(

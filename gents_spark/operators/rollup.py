@@ -3,25 +3,33 @@
 GenTS's central transform is "group files by stream, window them by time,
 emit one planned output per (group, window)" (``gents/hfcollection.py:903-1005``
 slice windows; ``gents/timeseries.py:411-527`` order planner).  Here the
-same semantics are one declarative aggregation per tier:
+same semantics are one declarative aggregation:
 
-    groupBy(source, date_trunc(unit, event_time))
+    groupBy(source, tier, bucket_start)
       .agg(count, sum, min, max, exact percentiles)
+
+``tier`` is one label or a list of them.  One tier groups on its bucket
+expression directly; several tiers first inline each input row into one
+``(tier, bucket_start)`` row per tier (``fan_out``: a map-side Generate,
+no exchange), so ONE aggregate builds every grain of the raw->1m->1h->1d
+cascade from one pass over the finest data — the nested-time-grain
+aggregation of PAPERS "Continuous Maintenance of Range Sum Heat Maps"
+(ICDE'18).  Per-tier expressions (bucket end, gap-fill step, percentile
+path) are a CASE over the row's ``tier`` (``per_tier``).
 
 Scale notes (100 TB design point):
 
 - The groupBy shuffles on (source, bucket) — high cardinality, so the
   shuffle is well-spread; Spark's partial (map-side) aggregation reduces
   each input partition to ~|distinct buckets| rows before the exchange.
+  Input already hash-partitioned on ``(source, gchunk_col)`` needs no
+  exchange at all (see ``rollup``).
 - Additive stats (cnt/sum/min/max) for coarser tiers compose from the
-  finer tier (``rollup_from_finer``) — that input is already tiny
-  (tier-1m rows, not raw rows), so the cascade costs one cheap shuffle
-  per tier.  Exact percentiles do NOT compose (p50 of 1h != f(p50 of 1m),
-  SURVEY.md §7.3); ``rollup`` recomputes them from the rows it is given,
-  and ``cascade`` recomputes each tier's percentiles from raw.  At
-  petabyte scale you would carry a t-digest sketch column instead; the
-  exact path is kept because the correctness gate demands exact
-  tier-point equality.
+  finer tier (``rollup_from_finer``).  Exact percentiles do NOT compose
+  (p50 of 1h != f(p50 of 1m), SURVEY.md §7.3); ``rollup`` computes every
+  tier's percentiles from the raw values.  At petabyte scale you would
+  carry a t-digest sketch column instead; the exact path is kept because
+  the correctness gate demands exact tier-point equality.
 - Skewed sources are handled upstream by ``operators.skew.salted_rollup``.
 """
 
@@ -63,6 +71,55 @@ def tier_grain(tier: str) -> tuple[str | None, int]:
     if not m or int(m.group(1)) < 1:
         raise ValueError(f"unknown tier: {tier}")
     return None, int(m.group(1))
+
+
+def tier_list(tier: str | list[str]) -> list[str]:
+    """A tier argument as a list: one label, or the tiers of one frame."""
+    return [tier] if isinstance(tier, str) else list(tier)
+
+
+def per_tier(tiers: list[str], fn) -> F.Column:
+    """``fn(t)`` for a one-tier frame; over several tiers, a CASE on the
+    row's ``tier`` column.  The last tier is the ELSE branch, so the
+    result is non-null wherever every ``fn(t)`` is (parquet writes a
+    non-null column as REQUIRED, whatever the tier count)."""
+    *head, last = tiers
+    out = None
+    for t in head:
+        cond = F.col("tier") == t
+        out = F.when(cond, fn(t)) if out is None else out.when(cond, fn(t))
+    return fn(last) if out is None else out.otherwise(fn(last))
+
+
+def fan_out(
+    df: DataFrame, tier: str | list[str], ts: str | F.Column
+) -> tuple[DataFrame, list[F.Column]]:
+    """Rows to group and their ``[tier,] bucket_start`` grouping keys.
+
+    One tier groups on its bucket expression as-is (the caller adds the
+    ``tier`` literal after the aggregate, ``tier_col``).  Several tiers inline every
+    input row into one ``(tier, bucket_start)`` row per tier — a Generate
+    that keeps the input's partitioning, so one aggregate over the result
+    builds every tier without a further exchange."""
+    tiers = tier_list(tier)
+    if len(tiers) == 1:
+        return df, [bucket_col(ts, tiers[0]).alias("bucket_start")]
+    rows = df.select(
+        "*",
+        F.inline(F.array(*[
+            F.struct(
+                F.lit(t).alias("tier"), bucket_col(ts, t).alias("bucket_start")
+            )
+            for t in tiers
+        ])),
+    )
+    return rows, [F.col("tier"), F.col("bucket_start")]
+
+
+def tier_col(tiers: list[str]) -> F.Column:
+    """The output ``tier`` column: a one-tier frame's literal, or the
+    ``tier`` a multi-tier frame groups by."""
+    return (F.lit(tiers[0]) if len(tiers) == 1 else F.col("tier")).alias("tier")
 
 
 PCTS = [0.5, 0.95, 0.99]
@@ -186,12 +243,16 @@ def sliding_rollup(
     )
 
 
-def bucket_end_col(tier: str) -> F.Column:
+def bucket_end_col(tier: str | list[str]) -> F.Column:
     """``bucket_start + one tier width`` for named or ``<N>s`` grains."""
-    unit, step = tier_grain(tier)
-    if unit:
-        return F.timestamp_add(unit.upper(), F.lit(1), F.col("bucket_start"))
-    return F.timestamp_add("SECOND", F.lit(step), F.col("bucket_start"))
+
+    def end(t: str) -> F.Column:
+        unit, step = tier_grain(t)
+        if unit:
+            return F.timestamp_add(unit.upper(), F.lit(1), F.col("bucket_start"))
+        return F.timestamp_add("SECOND", F.lit(step), F.col("bucket_start"))
+
+    return per_tier(tier_list(tier), end)
 
 
 #: W2 window-assignment alignments (GenTS offers the same four for
@@ -286,7 +347,7 @@ def max_bucket_count(
 
 def rollup(
     df: DataFrame,
-    tier: str,
+    tier: str | list[str],
     source_col: str = "source",
     ts_col: str = "event_time",
     value_col: str = "n_tok",
@@ -298,13 +359,14 @@ def rollup(
     ts_end_col: str | None = None,
     alignment: str = "direct",
 ) -> DataFrame:
-    """One continuous-aggregate tier from raw rows.
+    """Continuous-aggregate tiers from raw rows: one tier label, or a
+    list of them built by ONE aggregate over the ``fan_out`` rows.
 
     Output schema (SURVEY.md §1.3 tier model):
     (source, tier, bucket_start, bucket_end, cnt, sum_tok, min_tok,
      max_tok, p50_tok, p95_tok, p99_tok)
 
-    ``gchunk_col``: name of an EXISTING day-grain column on ``df``
+    ``gchunk_col``: name of an EXISTING chunk-grain column on ``df``
     (functionally dependent on the bucket — e.g.
     ``date_trunc('day', ts)``).  When given it joins the groupBy keys and
     the output.  Semantically a no-op (same groups, same stats); the
@@ -339,17 +401,34 @@ def rollup(
       map-side partial merge, so a 10^8-row hot bucket costs the same
       task memory as a 10^3-row one.  Rank error <= 1/sketch_accuracy.
       This is the 100 TB path the survey's t-digest note asks for.
-    - ``'auto'``: probe ``max_bucket_count``; exact when every bucket is
-      under ``hot_bucket_limit``, sketch otherwise.
+    - ``'auto'``: probe ``max_bucket_count`` per tier; a tier is exact
+      when every bucket is under ``hot_bucket_limit``, sketch otherwise.
+      Each aggregate then sees only its own tiers' values.
     """
     if percentile_mode not in ("exact", "sketch", "auto"):
         raise ValueError(f"unknown percentile_mode: {percentile_mode}")
+    tiers = tier_list(tier)
+    ts = aligned_ts(ts_col, ts_end_col, alignment)
+    modes = {t: percentile_mode for t in tiers}
     if with_percentiles and percentile_mode == "auto":
-        hot = max_bucket_count(
-            df, tier, source_col, ts_col, ts_end_col, alignment
-        )
-        percentile_mode = "sketch" if hot > hot_bucket_limit else "exact"
+        modes = {
+            t: "sketch"
+            if max_bucket_count(
+                df, t, source_col, ts_col, ts_end_col, alignment
+            ) > hot_bucket_limit
+            else "exact"
+            for t in tiers
+        }
+    exact = [t for t in tiers if modes[t] == "exact"]
     v = F.col(value_col)
+
+    def values_of(chosen: list[str]) -> F.Column:
+        # NULL outside the chosen tiers: both aggregates skip NULLs
+        vd = v.cast("double")
+        return vd if len(chosen) == len(tiers) else F.when(
+            F.col("tier").isin(chosen), vd
+        )
+
     aggs = [
         F.count("*").alias("cnt"),
         F.sum(v.cast("long")).alias("sum_tok"),
@@ -357,45 +436,40 @@ def rollup(
         F.max(v).alias("max_tok"),
     ]
     if with_percentiles:
-        if percentile_mode == "exact":
-            aggs.append(
-                F.sort_array(F.collect_list(v.cast("double"))).alias("_sv")
-            )
-        else:
+        if exact:
+            aggs.append(F.sort_array(F.collect_list(values_of(exact))).alias("_sv"))
+        if len(exact) < len(tiers):
             aggs.append(
                 F.approx_percentile(
-                    v.cast("double"),
+                    values_of([t for t in tiers if t not in exact]),
                     F.array(*[F.lit(p) for p in PCTS]),
                     F.lit(sketch_accuracy),
                 ).alias("_qs")
             )
+    rows, bucket_keys = fan_out(df, tiers, ts)
     group_keys = [F.col(source_col).alias("source")]
     if gchunk_col:
         group_keys.append(F.col(gchunk_col))
-    group_keys.append(
-        bucket_col(
-            aligned_ts(ts_col, ts_end_col, alignment), tier
-        ).alias("bucket_start")
-    )
-    out = (
-        df.groupBy(*group_keys)
-        .agg(*aggs)
-        .withColumn("tier", F.lit(tier))
-        .withColumn("bucket_end", bucket_end_col(tier))
-    )
+    out = rows.groupBy(*group_keys, *bucket_keys).agg(*aggs)
+    cols = [
+        "source",
+        tier_col(tiers),
+        "bucket_start",
+        bucket_end_col(tiers).alias("bucket_end"),
+        "cnt", "sum_tok", "min_tok", "max_tok",
+    ]
     if with_percentiles:
-        if percentile_mode == "exact":
-            for p, name in zip(PCTS, _PCT_NAMES):
-                out = out.withColumn(name, sorted_percentile(F.col("_sv"), p))
-            out = out.drop("_sv")
-        else:
-            for i, name in enumerate(_PCT_NAMES):
-                out = out.withColumn(name, F.element_at(F.col("_qs"), i + 1))
-            out = out.drop("_qs")
-    cols = ["source", "tier", "bucket_start", "bucket_end", "cnt", "sum_tok",
-            "min_tok", "max_tok"]
-    if with_percentiles:
-        cols += _PCT_NAMES
+        # one expression when every tier takes the same path
+        pct_tiers = tiers if len(set(modes.values())) > 1 else tiers[:1]
+        cols += [
+            per_tier(
+                pct_tiers,
+                lambda t: sorted_percentile(F.col("_sv"), p)
+                if modes[t] == "exact"
+                else F.element_at(F.col("_qs"), i + 1),
+            ).alias(name)
+            for i, (p, name) in enumerate(zip(PCTS, _PCT_NAMES))
+        ]
     if gchunk_col:
         cols.append(gchunk_col)
     return out.select(*cols)

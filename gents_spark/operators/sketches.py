@@ -35,32 +35,37 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from gents_spark.operators.rollup import PCTS, _PCT_NAMES, bucket_col
+from gents_spark.operators.rollup import PCTS, _PCT_NAMES, bucket_col, fan_out
 
 
 def value_histogram(
     df: DataFrame,
-    tier: str,
+    tier: str | list[str],
     value_col: str = "n_tok",
     source_col: str = "source",
     ts_col: str = "event_time",
     scale: int = 1,
     gchunk_col: str | None = None,
 ) -> DataFrame:
-    """(source[, gchunk], bucket_start, cnt, vh) — one histogram sketch
-    per tier bucket; ``vh: map<long,long>`` maps ``floor(value * scale)``
-    to its row count.  ``scale=1`` is exact for integer measures."""
+    """(source[, gchunk][, tier], bucket_start, cnt, vh) — one histogram
+    sketch per tier bucket; ``vh: map<long,long>`` maps
+    ``floor(value * scale)`` to its row count.  ``scale=1`` is exact for
+    integer measures.  A tier list builds every tier over the same
+    ``fan_out`` rows as ``rollup``."""
+    rows, bucket_keys = fan_out(df, tier, ts_col)
     keys = [F.col(source_col).alias("source")]
     if gchunk_col:
         keys.append(F.col(gchunk_col))
-    keys.append(bucket_col(ts_col, tier).alias("bucket_start"))
     qv = F.floor(F.col(value_col).cast("double") * scale).cast("long")
-    per_value = df.groupBy(*keys, qv.alias("_v")).agg(
+    per_value = rows.groupBy(*keys, *bucket_keys, qv.alias("_v")).agg(
         F.count("*").alias("_c")
     )
-    group_names = ["source"] + ([gchunk_col] if gchunk_col else []) + [
-        "bucket_start"
-    ]
+    group_names = (
+        ["source"]
+        + ([gchunk_col] if gchunk_col else [])
+        + (["tier"] if len(bucket_keys) > 1 else [])
+        + ["bucket_start"]
+    )
     return per_value.groupBy(*group_names).agg(
         F.sum("_c").alias("cnt"),
         F.map_from_entries(F.collect_list(F.struct("_v", "_c"))).alias("vh"),
@@ -161,7 +166,7 @@ def histogram_percentiles(
 
 def distinct_sketch(
     df: DataFrame,
-    tier: str,
+    tier: str | list[str],
     key_col: str = "doc_id",
     source_col: str = "source",
     ts_col: str = "event_time",
@@ -178,14 +183,15 @@ def distinct_sketch(
     survives retention expiry and re-aggregates upward losslessly
     (register-wise max under union, so a merged coarser sketch is
     IDENTICAL to one built from raw — pinned by test).  lgk=12: ~1.6%
-    relative standard error at 2 KB per bucket.
+    relative standard error at 2 KB per bucket.  A tier list builds
+    every tier over the same ``fan_out`` rows as ``rollup``.
     """
+    rows, bucket_keys = fan_out(df, tier, ts_col)
     keys = [F.col(source_col).alias("source")]
     if gchunk_col:
         keys.append(F.col(gchunk_col))
-    keys.append(bucket_col(ts_col, tier).alias("bucket_start"))
     return (
-        df.groupBy(*keys)
+        rows.groupBy(*keys, *bucket_keys)
         .agg(
             F.hll_sketch_agg(F.col(key_col).cast("string"), F.lit(lgk))
             .alias("dv_sketch"),

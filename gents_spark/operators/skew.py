@@ -24,7 +24,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from gents_spark.operators.rollup import bucket_col, bucket_end_col
+from gents_spark.operators.rollup import (
+    bucket_end_col,
+    fan_out,
+    tier_col,
+    tier_list,
+)
 
 
 def with_salt(df: DataFrame, n_salt: int, salt_from: str = "doc_id") -> DataFrame:
@@ -35,21 +40,19 @@ def with_salt(df: DataFrame, n_salt: int, salt_from: str = "doc_id") -> DataFram
 
 def salted_rollup(
     df: DataFrame,
-    tier: str,
+    tier: str | list[str],
     n_salt: int = 16,
     source_col: str = "source",
     ts_col: str = "event_time",
     value_col: str = "n_tok",
 ) -> DataFrame:
-    """Two-phase additive rollup immune to hot-source stragglers."""
+    """Two-phase additive rollup immune to hot-source stragglers; a tier
+    list builds every tier over the same ``fan_out`` rows as ``rollup``."""
+    tiers = tier_list(tier)
     v = F.col(value_col)
+    rows, bucket_keys = fan_out(with_salt(df, n_salt), tiers, ts_col)
     phase1 = (
-        with_salt(df, n_salt)
-        .groupBy(
-            F.col(source_col).alias("source"),
-            bucket_col(ts_col, tier).alias("bucket_start"),
-            "_salt",
-        )
+        rows.groupBy(F.col(source_col).alias("source"), *bucket_keys, "_salt")
         .agg(
             F.count("*").alias("cnt"),
             F.sum(v.cast("long")).alias("sum_tok"),
@@ -57,23 +60,16 @@ def salted_rollup(
             F.max(v).alias("max_tok"),
         )
     )
-    return (
-        phase1.groupBy("source", "bucket_start")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_tok").alias("sum_tok"),
-            F.min("min_tok").alias("min_tok"),
-            F.max("max_tok").alias("max_tok"),
-        )
-        .withColumn("tier", F.lit(tier))
-        .withColumn(
-            "bucket_end",
-            bucket_end_col(tier),
-        )
-        .select(
-            "source", "tier", "bucket_start", "bucket_end",
-            "cnt", "sum_tok", "min_tok", "max_tok",
-        )
+    keys = ["source", *(["tier"] if len(tiers) > 1 else []), "bucket_start"]
+    return phase1.groupBy(*keys).agg(
+        F.sum("cnt").alias("cnt"),
+        F.sum("sum_tok").alias("sum_tok"),
+        F.min("min_tok").alias("min_tok"),
+        F.max("max_tok").alias("max_tok"),
+    ).select(
+        "source", tier_col(tiers), "bucket_start",
+        bucket_end_col(tiers).alias("bucket_end"),
+        "cnt", "sum_tok", "min_tok", "max_tok",
     )
 
 

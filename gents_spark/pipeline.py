@@ -2,8 +2,9 @@
 checkpointed writes -> cascade -> retention (SURVEY.md §3.4 lifecycle).
 
 The GenTS lifecycle (``gents/cli.py:121-206``: discover -> filter -> slice
--> plan orders -> parallel execute with integrity-skip) becomes a sequence
-of DataFrame jobs with a manifest checkpoint between tiers.
+-> plan orders -> parallel execute with integrity-skip) becomes one
+multi-tier DataFrame plan, written in one job and checkpointed per
+(tier, chunk) unit in the manifest.
 """
 
 from __future__ import annotations
@@ -16,8 +17,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import TIER_ORDER, rollup
+from gents_spark.operators.rollup import TIER_ORDER, per_tier, rollup
 from gents_spark.operators.skew import hot_sources, salted_rollup
+from gents_spark.plans import manifest
 from gents_spark.plans.manifest import write_tiers_combined
 from gents_spark.timeparse import (
     split_modal_fingerprint,
@@ -188,36 +190,42 @@ class TierPipeline:
     ) -> dict:
         """Full raw->1m->1h->1d build, checkpointed at (tier, chunk) grain.
 
-        Physical shape (the round-2 scaling finding — BENCH/BASELINE.md —
-        was that ~25 serial Spark jobs per run, not job SHAPE, capped the
-        N->4N efficiency at 0.62):
+        Physical shape: ONE plan builds every tier (the round-2 scaling
+        finding — BENCH/BASELINE.md — was that serial Spark jobs, not job
+        SHAPE, capped the N->4N efficiency at 0.62; a per-tier plan also
+        re-read and re-shuffled raw once per tier):
 
         - raw is hash-partitioned on ``(source, _gchunk)`` where
-          ``_gchunk = date_trunc(<chunk grain>, event_time)`` — the big
-          exchange of the build, planned once per tier (each persisted
-          tier base carries its own raw scan + exchange; see the comment
-          at the repartition);
-        - every tier aggregation groups by ``(source, _gchunk, bucket)``
-          and every gap-fill window partitions by ``(source, _gchunk)``
-          — supersets of the partitioning keys, so Catalyst's
-          clustering rule makes them ZERO-exchange (sorts only);
-        - payloads compose from the in-memory finer-tier base (persisted)
-          instead of a parquet read-back of the written tier — same rows
-          (the written tier minus its gap-filled rows IS the base) —
-          and join AFTER gap-fill so the payload aggregation has exactly
-          one consumer (gap-fill reads its input twice; see the join
-          comment below).  That join's exchange is coarse-tier-sized;
+          ``_gchunk = date_trunc(<chunk grain>, event_time)`` — the one
+          big exchange of the build, planned once for all tiers;
+        - each raw row is inlined into one ``(tier, bucket_start)`` row
+          per tier, and ONE aggregate keyed ``(source, _gchunk, tier,
+          bucket_start)`` computes every tier's stats and exact
+          percentiles (``rollup(raw, tiers)``); it is persisted once;
+        - ONE gap-fill pass windows by ``(source, _gchunk, tier)`` with a
+          CASE-over-tier step, and ONE payload aggregate feeds each finer
+          row into its parent bucket of the next tier, encoded by one
+          pandas-UDF node.  All of them group or partition by supersets
+          of the partitioning keys, so Catalyst's clustering rule makes
+          them ZERO-exchange (sorts only), and the payload and sketch
+          joins are co-partitioned on ``(source, _gchunk, ...)`` too.
+          (The initial plan still shows exchanges over the cached base:
+          its partitioning is known only once the cache is built, and
+          adaptive execution drops them then);
         - all tiers are written in ONE dynamic-partition-overwrite job
           (``write_tiers_combined``) with NO pre-write shuffle (the
           chunk-grain co-partitioning keeps files per chunk dir bounded
           by the source count), plus one stats job over the written
           columns and one driver-side manifest append.
 
-        Remaining exchanges: the per-tier raw repartitions, per-gapfill
-        day-summary carries (tiny, |sources x chunks| rows), and the
-        coarse-tier payload joins (coarse-tier row counts).  Skew note:
-        the chunk-grain co-partition spreads a hot source over its
-        chunks; a pathological single (source, chunk) hotspot is what
+        A resume reads the manifest once, before any tier is planned; an
+        all-done resume returns there.  The remaining exchanges of a
+        traced cold build (``perfbench`` pipeline, 3 tiers, month chunks)
+        are the raw repartition, the gap-fill chunk-boundary carry (tiny,
+        |sources x chunks x tiers| rows), the chunk-plan min/max and the
+        stats aggregate over the written files.  Skew note: the
+        chunk-grain co-partition spreads a hot source over its chunks; a
+        pathological single (source, chunk) hotspot is what
         ``use_salting`` remains for.
 
         Returns metrics: per-tier written/skipped chunk counts + row counts.
@@ -226,6 +234,41 @@ class TierPipeline:
         tiers_dir = os.path.join(out_dir, "tiers")
         manifest_dir = os.path.join(out_dir, "manifest")
         raw0, bad = self.prepare(sequences)
+        tiers = list(self.tiers)
+        metrics: dict = {"run_id": run_id, "tiers": {}}
+        if self.validate or self.modal_quarantine:
+            n_bad = bad.count()
+            metrics["quarantined_rows"] = n_bad
+            if n_bad:
+                # quarantined rows are data, not log lines: they land
+                # in their own table for later inspection/repair
+                # (GenTS returns the outlier set, hfcollection.py:358)
+                bad.write.mode("overwrite").parquet(
+                    os.path.join(out_dir, "quarantine")
+                )
+        # chunk plan from the raw time range — ONE job on the
+        # PRE-repartition rows (scan + agg, no shuffle), so the
+        # co-partition exchange + cache build happen inside the big
+        # write job instead of a serial planning barrier.  The manifest
+        # is read once, here: an all-done resume returns before any
+        # tier DataFrame is built.
+        planned_chunks = self._planned_chunks(raw0)
+        planned = [(t, c) for t in tiers for c in planned_chunks]
+        done = (
+            manifest.completed_tier_chunks(self.spark, manifest_dir)
+            if resume
+            else set()
+        )
+        if done.issuperset(planned):
+            for tier in tiers:
+                metrics["tiers"][tier] = {
+                    "written": 0,
+                    "skipped": len(planned_chunks),
+                    "rows_written": 0,
+                    "rows": 0,
+                    "seconds": 0.0,
+                }
+            return metrics
         n_shuffle = int(
             self.spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
@@ -237,193 +280,111 @@ class TierPipeline:
         # chunk style.  A hot (source, chunk) partition is the
         # use_salting escape hatch.  Explicit partition count: AQE would
         # otherwise coalesce this exchange to the advisory size, capping
-        # every downstream tier agg / window at a handful of tasks.
-        grain_unit = {"day": "day", "month": "month", "year": "year"}[
-            self.chunk_grain
-        ]
-        # NOT persisted.  The tier aggs do NOT share one exchange: a
-        # traced perfbench pipeline build (seed 5) plans 4 input scans,
-        # 9 exchanges and 0 ReusedExchange, because each persisted tier
-        # base below is its own cached plan with its own raw scan and
-        # repartition exchange — raw is read and shuffled once per tier.
-        # Caching raw would hold a second copy of the raw rows in
-        # executor memory, and at N=1-executor heap sizes that eviction
-        # pressure cost more than the re-shuffles (measured: 19.2M rows,
-        # 12g executor — cached-raw variant ran 25% slower end-to-end).
+        # the tier aggregate / windows at a handful of tasks.
+        # NOT persisted: raw is read and shuffled once, by the one
+        # persisted base below (sketch columns and payloads='all' read
+        # it again).  Caching raw would hold a second copy of the raw
+        # rows in executor memory, and at N=1-executor heap sizes that
+        # eviction pressure cost more than re-reads (measured: 19.2M
+        # rows, 12g executor — cached-raw variant ran 25% slower).
         raw = raw0.withColumn(
-            "_gchunk", F.date_trunc(grain_unit, F.col("event_time"))
+            "_gchunk", F.date_trunc(self.chunk_grain, F.col("event_time"))
         ).repartition(n_shuffle, "source", "_gchunk")
-        bases: list[DataFrame] = []
-        try:
-            metrics: dict = {"run_id": run_id, "tiers": {}}
-            if self.validate or self.modal_quarantine:
-                n_bad = bad.count()
-                metrics["quarantined_rows"] = n_bad
-                if n_bad:
-                    # quarantined rows are data, not log lines: they land
-                    # in their own table for later inspection/repair
-                    # (GenTS returns the outlier set, hfcollection.py:358)
-                    bad.write.mode("overwrite").parquet(
-                        os.path.join(out_dir, "quarantine")
-                    )
-            # Salting note: the tier groupBy keys on (source, bucket) — a
-            # HIGH-cardinality key even when one source is hot, because a
-            # hot source's rows spread over its many buckets (rows per
-            # key are time-bounded).  So the default single aggregation
-            # is already skew-safe here, and the exact-percentile pass
-            # cannot be salted regardless (needs all of a bucket's values
-            # together).  use_salting=True switches the additive stats to
-            # the two-phase salted plan (operators/skew.py) — the right
-            # tool when buckets are coarse relative to the data (e.g. a
-            # 1d-only build over a few hot sources).
-            hot = (
-                hot_sources(raw, self.salt_threshold_frac)
-                if self.use_salting
-                else []
+        # Salting note: the tier groupBy keys on (source, bucket) — a
+        # HIGH-cardinality key even when one source is hot, because a
+        # hot source's rows spread over its many buckets (rows per
+        # key are time-bounded).  So the default single aggregation
+        # is already skew-safe here, and the exact-percentile pass
+        # cannot be salted regardless (needs all of a bucket's values
+        # together).  use_salting=True switches the additive stats to
+        # the two-phase salted plan (operators/skew.py) — the right
+        # tool when buckets are coarse relative to the data (e.g. a
+        # 1d-only build over a few hot sources).
+        hot = (
+            hot_sources(raw, self.salt_threshold_frac)
+            if self.use_salting
+            else []
+        )
+        if hot:
+            # salted path: legacy join shape (extreme single-key skew
+            # defense); not chunk-aligned, so every later join keys on
+            # (source, tier, bucket_start) and the write repartitions
+            gck = None
+            base = salted_rollup(raw, tiers, n_salt=self.n_salt).join(
+                rollup(
+                    raw, tiers, percentile_mode=self.percentile_mode
+                ).select(
+                    "source", "tier", "bucket_start",
+                    "p50_tok", "p95_tok", "p99_tok",
+                ),
+                ["source", "tier", "bucket_start"],
             )
-            # chunk plan from the raw time range — ONE job, shared by
-            # every tier; lets an all-done resume skip tier computation.
-            # Runs on the PRE-repartition rows (scan + agg, no shuffle),
-            # so the co-partition exchange + cache build happen inside
-            # the big write job instead of a serial planning barrier.
-            planned_chunks = self._planned_chunks(raw0)
-            if not planned_chunks:
-                for tier in self.tiers:
-                    metrics["tiers"][tier] = {
-                        "written": 0,
-                        "skipped": 0,
-                        "rows_written": 0,
-                        "rows": 0,
-                        "seconds": 0.0,
-                    }
-                return metrics
-            finals: dict[str, DataFrame] = {}
-            prev_base: tuple[DataFrame, str | None] | None = None
-            for tier in self.tiers:
-                if hot:
-                    # salted path: legacy join shape (extreme single-key
-                    # skew defense); not gchunk-aligned
-                    gck = None
-                    additive = salted_rollup(raw, tier, n_salt=self.n_salt)
-                    pct = rollup(
-                        raw, tier, percentile_mode=self.percentile_mode
-                    ).select(
-                        "source", "bucket_start", "p50_tok", "p95_tok", "p99_tok"
-                    )
-                    base = additive.join(pct, ["source", "bucket_start"])
-                else:
-                    gck = "_gchunk"
-                    base = rollup(
-                        raw, tier, percentile_mode=self.percentile_mode,
-                        gchunk_col=gck,
-                    )
-                tier_df = base
-                # sketch columns join AFTER gap-fill (same reason as the
-                # payload join below: gap-fill reads its input twice,
-                # and each read would re-run the sketch aggregation over
-                # raw); generated buckets get NULL sketches either way
-                side_joins: list[DataFrame] = []
-                if self.store_sketches and gck:
-                    # mergeable percentile sketch column on every tier
-                    # row (operators/sketches.py): after retention
-                    # expires raw, coarser percentiles recompose by
-                    # merging stored finer-tier sketches
-                    from gents_spark.operators.sketches import (
-                        value_histogram,
-                    )
+        else:
+            gck = "_gchunk"
+            base = rollup(
+                raw, tiers, percentile_mode=self.percentile_mode,
+                gchunk_col=gck,
+            )
+        # read by gap-fill's window pass AND its chunk-boundary carry,
+        # plus the payload aggregate — persist so the aggregation runs
+        # once
+        base = base.persist()
+        try:
+            tier_df = (
+                gapfill(base, tiers, mode=self.gapfill_mode, gchunk_col=gck)
+                if self.gapfill_mode
+                else base.withColumn("filled", F.lit(False))
+            )
+            # Sketch columns and payloads join AFTER gap-fill: gap-fill
+            # reads its input twice, and each read would re-run them.
+            # Generated buckets have no raw rows, so they get NULL from
+            # the left joins exactly as gap-fill gives its other
+            # passthrough columns.  Keyed on (source, _gchunk, ...) both
+            # sides keep raw's partitioning: no exchange.
+            keyed = ["source", *([gck] if gck else [])]
+            if len(tiers) > 1:
+                keyed.append("tier")
+            side = []
+            if self.store_sketches and gck:
+                # mergeable percentile sketch column on every tier
+                # row (operators/sketches.py): after retention
+                # expires raw, coarser percentiles recompose by
+                # merging stored finer-tier sketches
+                from gents_spark.operators.sketches import value_histogram
 
-                    side_joins.append(
-                        value_histogram(raw, tier, gchunk_col=gck).select(
-                            "source", "bucket_start", "vh"
-                        )
-                    )
-                if self.store_distinct and gck:
-                    # mergeable HLL distinct-doc sketch per tier row:
-                    # distinct counts survive raw expiry and union
-                    # losslessly upward (register-wise max)
-                    from gents_spark.operators.sketches import (
-                        distinct_sketch,
-                    )
+                side.append(
+                    (value_histogram(raw, tiers, gchunk_col=gck), "vh")
+                )
+            if self.store_distinct and gck:
+                # mergeable HLL distinct-doc sketch per tier row:
+                # distinct counts survive raw expiry and union
+                # losslessly upward (register-wise max)
+                from gents_spark.operators.sketches import distinct_sketch
 
-                    side_joins.append(
-                        distinct_sketch(
-                            raw, tier, key_col="doc_id",
-                            ts_col="event_time", gchunk_col=gck,
-                        ).select("source", "bucket_start", "dv_sketch")
-                    )
-                pay = None
-                if self.payloads and (
-                    prev_base is not None or self.payloads == "all"
-                ):
-                    # Gorilla/DoD payload: the finer value stream encoded
-                    # per coarser bucket — raw n_tok stream for the finest
-                    # tier (payloads='all' only: one pandas-UDF row per
-                    # bucket is wasteful at minute grain), the finer
-                    # tier's sum_tok stream above it.  The finer BASE
-                    # (pre-gap-fill aggregate, persisted) holds exactly
-                    # the written tier's non-filled rows, so composing
-                    # from it equals the old parquet read-back — without
-                    # the write barrier between tiers.
-                    from gents_spark.functions.codec_udfs import attach_payload
-
-                    if prev_base is None:
-                        pay = attach_payload(
-                            raw, tier, value_col="n_tok", ts_col="event_time",
-                            gchunk_col=gck,
-                        )
-                    else:
-                        finer_df, pay_gck = prev_base
-                        pay = attach_payload(
-                            finer_df, tier, gchunk_col=pay_gck
-                        )
-                if self.gapfill_mode:
-                    tier_df = gapfill(
-                        tier_df, tier, mode=self.gapfill_mode, gchunk_col=gck
-                    )
-                else:
-                    tier_df = tier_df.withColumn("filled", F.lit(False))
-                    if gck:
-                        tier_df = tier_df.drop(gck)
-                for sj in side_joins:
-                    tier_df = tier_df.join(
-                        sj, ["source", "bucket_start"], "left"
-                    )
-                if pay is not None:
-                    # Joined AFTER gap-fill, on (source, bucket_start):
-                    # gap-fill reads its input twice (the window pass
-                    # and the chunk-boundary carry), and with the join
-                    # inside, each read re-ran the payload aggregation
-                    # + pandas-UDF encode.  Post-gap-fill the payload
-                    # agg has exactly ONE consumer; generated buckets
-                    # have no finer rows, so they get NULL payloads from
-                    # the left join exactly as gap-fill gives its other
-                    # passthrough columns.  The exchange this adds is
-                    # coarse-tier-sized (payloads are never built for
-                    # the finest tier unless payloads='all').
-                    tier_df = tier_df.join(
-                        pay.select("source", "bucket_start", "payload"),
-                        ["source", "bucket_start"],
-                        "left",
-                    )
-                finals[tier] = tier_df
-                # every base is read at least twice inside the single
-                # write job (gap-fill's window pass + chunk-boundary
-                # carry; plus the next tier's payload agg) — persist so
-                # the aggregation runs once per tier
-                base = base.persist()
-                bases.append(base)
-                prev_base = (base, gck)
+                side.append((distinct_sketch(
+                    raw, tiers, key_col="doc_id", ts_col="event_time",
+                    gchunk_col=gck,
+                ), "dv_sketch"))
+            for sj, col in side:
+                cols = tier_df.columns
+                tier_df = tier_df.join(
+                    sj.select(*keyed, "bucket_start", col),
+                    [*keyed, "bucket_start"], "left",
+                ).select(*cols, col)
+            tier_df = self._with_payloads(tier_df, base, raw, gck)
+            if gck:
+                tier_df = tier_df.drop(gck)
             t0 = time.time()
             m = write_tiers_combined(
                 self.spark,
-                finals,
+                tier_df,
                 tiers_dir,
                 manifest_dir,
                 run_id,
-                resume=resume,
+                planned,
+                done=done,
                 fail_after_chunks=fail_after_chunks,
                 chunk_grain=self.chunk_grain,
-                planned_chunks=planned_chunks,
                 command=command,
                 compression=self.compression,
                 repartition_output=bool(hot),
@@ -431,7 +392,7 @@ class TierPipeline:
             phases = m.pop("phases", {})
             phases["total"] = round(time.time() - t0, 3)
             metrics["phases"] = phases
-            for tier in self.tiers:
+            for tier in tiers:
                 mt = m[tier]
                 mt["rows"] = mt["rows_written"]
                 # tiers share one write job; per-tier wall isn't separable
@@ -439,5 +400,68 @@ class TierPipeline:
                 metrics["tiers"][tier] = mt
             return metrics
         finally:
-            for b in bases:
-                b.unpersist()
+            base.unpersist()
+
+    def _with_payloads(
+        self,
+        tier_df: DataFrame,
+        base: DataFrame,
+        raw: DataFrame,
+        gck: str | None,
+    ) -> DataFrame:
+        """Gorilla/DoD ``payload`` column: each coarse tier row encodes
+        its finer neighbour's ``sum_tok`` stream; with payloads='all'
+        the finest tier encodes the raw ``n_tok`` stream (off by
+        default: one encoded row per minute bucket is wasteful).
+
+        The finer BASE (pre-gap-fill aggregate, persisted) holds exactly
+        the written finer tier's non-filled rows, so composing from it
+        equals a parquet read-back of the written tier.  Every finer row
+        feeds its parent bucket through ONE aggregate and ONE pandas-UDF
+        encode, left-joined to the payload tiers' rows only: the join
+        stays coarse-sized and the finest tier keeps a NULL payload."""
+        tiers = list(self.tiers)
+        pay_tiers = tiers if self.payloads == "all" else tiers[1:]
+        if not self.payloads or not pay_tiers:
+            return tier_df
+        from gents_spark.functions.codec_udfs import attach_payload
+
+        keyed = ["source", *([gck] if gck else [])]
+        parent = dict(zip(tiers, tiers[1:]))
+        streams = []
+        if parent:
+            streams.append(
+                base.filter(F.col("tier").isin(list(parent))).select(
+                    *keyed,
+                    per_tier(list(parent), lambda t: F.lit(parent[t]))
+                    .alias("tier"),
+                    "bucket_start",
+                    "sum_tok",
+                )
+            )
+        if self.payloads == "all":
+            streams.append(raw.select(
+                *keyed,
+                F.lit(tiers[0]).alias("tier"),
+                F.col("event_time").alias("bucket_start"),
+                F.col("n_tok").alias("sum_tok"),
+            ))
+        stream = streams[0]
+        for s in streams[1:]:
+            stream = stream.unionByName(s)
+        if len(pay_tiers) > 1:
+            keyed.append("tier")
+        pay = attach_payload(stream, pay_tiers, gchunk_col=gck).select(
+            *keyed, "bucket_start", "payload"
+        )
+        target = F.col("tier").isin(pay_tiers)
+        joined = (
+            tier_df.filter(target)
+            .join(pay, [*keyed, "bucket_start"], "left")
+            .select(*tier_df.columns, "payload")
+        )
+        if len(pay_tiers) == len(tiers):
+            return joined
+        return tier_df.filter(~target).unionByName(
+            joined, allowMissingColumns=True
+        )

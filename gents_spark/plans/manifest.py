@@ -138,12 +138,12 @@ def completed_tier_chunks(
 
 def write_tiers_combined(
     spark: SparkSession,
-    finals: dict[str, DataFrame],
+    tiers_df: DataFrame,
     tiers_dir: str,
     manifest_dir: str,
     run_id: str,
-    planned_chunks: list[str],
-    resume: bool = True,
+    planned: list[tuple[str, str]],
+    done: set[tuple[str, str]] = frozenset(),
     fail_after_chunks: int | None = None,
     chunk_grain: str = "day",
     command: str | None = None,
@@ -155,34 +155,30 @@ def write_tiers_combined(
     A per-tier write loop costs 3 serial Spark jobs per tier (manifest
     read, stats collect, write) plus a parquet read-back barrier between
     tiers; at two-cluster-size scaling that serial job count is pure
-    Amdahl overhead (round-2 BENCH/BASELINE.md analysis).  Here the
-    tiers are unioned (each already carries its ``tier``
-    column) and written once with ``partitionBy(tier, chunk)`` — the
-    same ``tier=X/chunk=Y`` physical layout, one dynamic-partition
-    commit.  Per-chunk lineage stats then come from ONE aggregation over
-    the same (persisted) union.  On Iceberg both become a single
-    transaction: REPLACE of the touched partitions + one metadata
-    commit.
+    Amdahl overhead (round-2 BENCH/BASELINE.md analysis).  Here
+    ``tiers_df`` holds every tier's rows (its ``tier`` column says
+    which), filtered to the (tier, chunk) units left to write and
+    written once with ``partitionBy(tier, chunk)`` — the ``tier=X/chunk=Y``
+    physical layout, one dynamic-partition commit.  Per-chunk lineage
+    stats then come from ONE aggregation over the written files.  On
+    Iceberg both become a single transaction: REPLACE of the touched
+    partitions + one metadata commit.
 
-    ``planned_chunks`` is the chunk universe, derived by the caller from
-    the raw time range — an all-done resume never computes a tier.
-    ``fail_after_chunks`` counts (tier, chunk) units in (tier-order,
-    chunk) order — the kill/resume injection point.
+    ``planned`` is the (tier, chunk) unit universe in write order,
+    derived by the caller from the raw time range; ``done`` the units a
+    resume skips (``completed_tier_chunks``, read once by the caller).
+    ``fail_after_chunks`` counts units in that order — the kill/resume
+    injection point.
     Returns {tier: {written, skipped, rows_written}, phases: {...}}.
     """
-    tier_order = list(finals)
-    done: set[tuple[str, str]] = set()
-    if resume:
-        done = completed_tier_chunks(spark, manifest_dir)
-    planned = sorted(planned_chunks)
-    units = [
-        (t, c) for t in tier_order for c in planned if (t, c) not in done
-    ]
-    skipped = {
-        t: sum(1 for c in planned if (t, c) in done) for t in tier_order
-    }
+    tier_order = list(dict.fromkeys(t for t, _ in planned))
+    units = [u for u in planned if u not in done]
     metrics = {
-        t: {"written": 0, "skipped": skipped[t], "rows_written": 0}
+        t: {
+            "written": 0,
+            "skipped": sum(1 for u in planned if u[0] == t and u in done),
+            "rows_written": 0,
+        }
         for t in tier_order
     }
     phases: dict[str, float] = {}
@@ -194,20 +190,15 @@ def write_tiers_combined(
     write_units = units[:fail_after_chunks] if inject else units
     if not write_units:
         raise RuntimeError("injected failure after 0 chunks")
-    chunks_by_tier = {
-        t: [c for tt, c in write_units if tt == t] for t in tier_order
-    }
-
-    parts = []
-    for t in tier_order:
-        todo = chunks_by_tier[t]
-        if not todo:
-            continue
-        df = finals[t].withColumn("chunk", chunk_col(grain=chunk_grain))
-        parts.append(df.filter(F.col("chunk").isin(todo)))
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p, allowMissingColumns=True)
+    chunks_by_tier: dict[str, list[str]] = {}
+    for t, c in write_units:
+        chunks_by_tier.setdefault(t, []).append(c)
+    df = tiers_df.withColumn("chunk", chunk_col(grain=chunk_grain))
+    todo = None
+    for t, cs in chunks_by_tier.items():
+        unit = (F.col("tier") == t) & F.col("chunk").isin(cs)
+        todo = unit if todo is None else todo | unit
+    to_write = df.filter(todo)
     t0 = time.time()
     # With the pipeline's chunk-grain co-partitioning every input
     # partition maps to one (source, chunk), so writing AS-IS keeps
@@ -216,9 +207,8 @@ def write_tiers_combined(
     # ``repartition_output`` restores the explicit (tier, chunk,
     # source) spread for callers whose tier rows are NOT chunk-
     # co-partitioned (the salted-rollup path).
-    to_write = union
     if repartition_output:
-        to_write = union.repartition(
+        to_write = to_write.repartition(
             F.col("tier"), F.col("chunk"), F.col("source")
         )
     # per-task sort, NO exchange (the zero-exchange build property is
@@ -241,7 +231,7 @@ def write_tiers_combined(
 
     t0 = time.time()
     # Lineage stats from the WRITTEN parquet, not a cached copy of the
-    # union: caching every tier row just for this aggregation holds the
+    # tier rows: caching every tier row just for this aggregation holds the
     # widest table of the build in executor memory, where the gap-fill
     # sorts evict it and the stats job silently recomputes the whole
     # plan (measured: 48s "stats" under memory pressure).  The written

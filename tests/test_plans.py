@@ -56,11 +56,12 @@ def test_anti_join_stays_a_join(spark):
 
 def test_copartitioned_tier_build_has_no_data_exchange(spark):
     """The one-big-shuffle pipeline shape: with raw hash-partitioned on
-    (source, _gchunk), the tier aggregation AND the gap-fill lead window
-    must need no further exchange — only the tiny day-summary carry
-    (hash(source) over |sources x days| rows) and its broadcast remain.
-    This is the round-2 scaling fix; a regression here silently
-    reintroduces two full shuffles of tier rows per tier."""
+    (source, _gchunk), the multi-tier fan-out aggregation AND the
+    gap-fill lead window over every tier must need no further exchange —
+    only the tiny chunk-summary carry (hash(source, tier) over
+    |sources x days x tiers| rows) and its broadcast remain.  A
+    regression here silently reintroduces a full shuffle of every tier
+    row."""
     import pyspark.sql.functions as F
 
     from gents_spark.operators.gapfill import gapfill
@@ -77,8 +78,9 @@ def test_copartitioned_tier_build_has_no_data_exchange(spark):
         .persist()
     )
     raw.count()  # materialize: plan shows InMemoryRelation, as in run()
+    tiers = ["1m", "1h", "1d"]
     final = gapfill(
-        rollup(raw, "1m", gchunk_col="_gchunk"), "1m", mode="locf",
+        rollup(raw, tiers, gchunk_col="_gchunk"), tiers, mode="locf",
         gchunk_col="_gchunk",
     )
     p = final._jdf.queryExecution().explainString(

@@ -1,0 +1,102 @@
+"""Reference tier build: one plan per tier, composed by hand.
+
+The equality reference for ``TierPipeline.run``'s one multi-tier plan:
+each tier is rolled up, gap-filled, given its sketch columns and its
+payload on its own (the one-tier ``rollup`` / ``gapfill`` /
+``attach_payload`` calls), and the tiers are unioned.  A coarse tier's
+payload encodes the previous tier's pre-gap-fill ``sum_tok`` stream; the
+finest tier's (``payloads='all'`` only) the raw ``n_tok`` stream.
+"""
+
+from __future__ import annotations
+
+from collections import Counter
+
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
+
+from gents_spark.functions.codec_udfs import attach_payload
+from gents_spark.operators.gapfill import gapfill
+from gents_spark.operators.rollup import rollup
+from gents_spark.operators.sketches import distinct_sketch, value_histogram
+from gents_spark.plans.manifest import chunk_col
+
+
+def reference_tiers(pipe, sequences: DataFrame) -> DataFrame:
+    """Every tier row ``pipe.run(sequences, ...)`` writes, built per tier
+    (unsalted path; ``chunk`` is the written chunk key)."""
+    raw0, _bad = pipe.prepare(sequences)
+    planned = pipe._planned_chunks(raw0)
+    gck = "_gchunk"
+    # the pipeline's raw partitioning: an HLL sketch's bytes depend on
+    # the order its rows arrive in
+    n = int(pipe.spark.conf.get("spark.sql.shuffle.partitions"))
+    raw = raw0.withColumn(
+        gck, F.date_trunc(pipe.chunk_grain, "event_time")
+    ).repartition(n, "source", gck)
+    finals = []
+    prev = None
+    for tier in pipe.tiers:
+        base = rollup(
+            raw, tier, percentile_mode=pipe.percentile_mode, gchunk_col=gck
+        )
+        if pipe.gapfill_mode:
+            tier_df = gapfill(base, tier, mode=pipe.gapfill_mode, gchunk_col=gck)
+        else:
+            tier_df = base.withColumn("filled", F.lit(False))
+        tier_df = tier_df.drop(gck)
+        side = []
+        if pipe.store_sketches:
+            side.append(value_histogram(raw, tier, gchunk_col=gck).select(
+                "source", "bucket_start", "vh"))
+        if pipe.store_distinct:
+            side.append(distinct_sketch(
+                raw, tier, key_col="doc_id", gchunk_col=gck
+            ).select("source", "bucket_start", "dv_sketch"))
+        if pipe.payloads and (prev is not None or pipe.payloads == "all"):
+            side.append(
+                (
+                    attach_payload(
+                        raw, tier, value_col="n_tok", ts_col="event_time",
+                        gchunk_col=gck,
+                    )
+                    if prev is None
+                    else attach_payload(prev, tier, gchunk_col=gck)
+                ).select("source", "bucket_start", "payload")
+            )
+        for s in side:
+            tier_df = tier_df.join(s, ["source", "bucket_start"], "left")
+        finals.append(tier_df)
+        prev = base
+    out = finals[0]
+    for f in finals[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    out = out.withColumn("chunk", chunk_col(grain=pipe.chunk_grain))
+    return out.filter(F.col("chunk").isin(planned))
+
+
+def written_tiers(spark, out_dir: str) -> DataFrame:
+    """All tier rows of a finished run, ``chunk`` read back as a string."""
+    tiers = out_dir + "/tiers"
+    return (
+        spark.read.option("basePath", tiers)
+        .option("mergeSchema", "true")
+        .parquet(tiers)
+        .withColumn("chunk", F.col("chunk").cast("string"))
+    )
+
+
+def _canon(v):
+    if isinstance(v, dict):
+        return tuple(sorted(v.items()))
+    if isinstance(v, (bytearray, memoryview)):
+        return bytes(v)
+    return v
+
+
+def row_multiset(df: DataFrame, cols: list[str]) -> Counter:
+    """Rows over ``cols`` as a hashable multiset (maps and binaries
+    canonicalized), so two tables compare row for row, every column."""
+    return Counter(
+        tuple(_canon(r[c]) for c in cols) for r in df.select(*cols).collect()
+    )
