@@ -30,7 +30,6 @@ from gents_spark.session import get_spark  # noqa: E402
 from gents_spark.synth import synth_sequences  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: per-query repetitions, run as INTERLEAVED round-robin passes with
 #: best-of reported per query (round-3 VERDICT: single-shot per-query
 #: timings picked up ~2x host-steal artifacts on several queries; with
@@ -185,19 +184,25 @@ def ensure_input(spark) -> str:
 
 
 def main() -> None:
+    from perfbench.run import host_sizing
+
+    # sized like perfbench: half the usable cores as task threads (or
+    # $SPARK_GRAFT_CPUS), a driver heap of a quarter of RAM
+    sizing = host_sizing()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or sizing["gc_threads"])
     spark = get_spark(
-        master=f"local[{CPUS}]",
+        master=f"local[{cpus}]",
         app_name="gents_spark-bench",
-        shuffle_partitions=max(2 * CPUS, 16),
+        shuffle_partitions=max(2 * cpus, 16),
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "48g",
+            "spark.driver.memory": sizing["driver_memory"],
             "spark.local.dir": f"{WORK}/gents_bench_spark_local",
             # fair N-core measurement: GC threads default to ALL machine
             # cores regardless of local[N], which silently donates extra
             # cores to small-N runs and corrupts the scaling comparison
             "spark.driver.extraJavaOptions": (
-                f"-XX:ParallelGCThreads={CPUS} -XX:ConcGCThreads={max(1, CPUS // 4)}"
+                f"-XX:ParallelGCThreads={cpus} -XX:ConcGCThreads={max(1, cpus // 4)}"
             ),
         },
     )
@@ -214,7 +219,7 @@ def main() -> None:
     # the chunk-planning job and the write job
     import pyspark.sql.functions as F
 
-    warm_dir = f"{WORK}/gents_bench_warm_{CPUS}"
+    warm_dir = f"{WORK}/gents_bench_warm_{cpus}"
     shutil.rmtree(warm_dir, ignore_errors=True)
     warm = seqs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(512)) == 0)
     TierPipeline(spark, step_s=STEP_S, gapfill_mode="locf", validate=False, chunk_grain=CHUNK_GRAIN).run(
@@ -229,10 +234,10 @@ def main() -> None:
     )
     t_pipe = None
     for rep in range(max(REPEATS, 1)):
-        out_dir = f"{WORK}/gents_bench_out_{CPUS}"
+        out_dir = f"{WORK}/gents_bench_out_{cpus}"
         shutil.rmtree(out_dir, ignore_errors=True)
         t0 = time.time()
-        metrics = pipe.run(seqs, out_dir, resume=False, run_id=f"bench{CPUS}-{rep}")
+        metrics = pipe.run(seqs, out_dir, resume=False, run_id=f"bench{cpus}-{rep}")
         t = time.time() - t0
         t_pipe = t if t_pipe is None else min(t_pipe, t)
     timings["pipeline_raw_to_1d"] = round(t_pipe, 3)
@@ -282,7 +287,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "cpus": CPUS,
+                "cpus": cpus,
                 "input_sequences": n_seqs,
                 "rolled_up_points": points,
                 "seqs_per_sec": round(n_ingest / t_ingest, 1),

@@ -13,7 +13,8 @@ A from-scratch re-expression of the capabilities of AgentOxygen/GenTS
   — GenTS analog: netCDF zlib compression knob, ``gents/timeseries.py:617-658``
 - checkpoint + lineage-manifest resume via anti-join
   — GenTS analog: integrity-check skip, ``gents/timeseries.py:136-142``
-- explicit salt/range partitioning for hot-source skew (new vs reference)
+- chunk-grain co-partitioning that spreads a hot source over its chunks,
+  plus sketch percentiles for hot buckets (new vs reference)
 
 Everything is DataFrame/SQL; the only Python execution is vectorized
 pandas/Arrow UDFs (codec, multimodal stubs).

@@ -147,10 +147,6 @@ def parse_arguments(argv: list[str] | None = None) -> argparse.Namespace:
                    help="minimum |forward - backward| 12-bucket frame-"
                         "mean contrast (rows per bucket) for a "
                         "level_shift alarm in --screen-report")
-    p.add_argument("--salted", action="store_true",
-                   help="two-phase salted aggregation for hot sources")
-    p.add_argument("--n-salt", type=int, default=16,
-                   help="salt fan-out when --salted")
     p.add_argument("-v", "--verbose", action="count", default=0,
                    help="-v: spark WARN + run progress; -vv: spark INFO "
                         "(GenTS -v analog)")
@@ -232,8 +228,6 @@ def main(argv: list[str] | None = None) -> int:
         ),
         include_sources=prof.include_sources,
         exclude_sources=prof.exclude_sources,
-        n_salt=args.n_salt,
-        use_salting=args.salted,
         chunk_grain=args.chunk_grain or prof.chunk_grain,
         compression="uncompressed" if compression == "none" else compression,
         percentile_mode=args.percentiles,
@@ -247,7 +241,6 @@ def main(argv: list[str] | None = None) -> int:
             "chunk_grain": pipe.chunk_grain, "compression": pipe.compression,
             "include_sources": pipe.include_sources,
             "exclude_sources": pipe.exclude_sources,
-            "salted": pipe.use_salting,
         }), file=sys.stderr)
     if args.dryrun:
         raw, bad = pipe.prepare(seqs)

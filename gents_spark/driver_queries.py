@@ -5312,11 +5312,11 @@ ORACLES["freshness"] = """
         SELECT max(ts)::TIMESTAMP AS wm FROM events
     ), j AS (
         SELECT g.*, w.wm,
-               CAST(floor((epoch(w.wm) - epoch(g.last_ts)) / 3600)
-                    AS BIGINT) AS hours_stale,
-               CAST(floor((epoch(date_trunc('hour', g.last_ts))
-                           - epoch(date_trunc('hour', g.first_ts)))
-                          / 3600) AS BIGINT) + 1 AS span_hours
+               (epoch_us(w.wm) - epoch_us(g.last_ts))
+                   // 3600000000 AS hours_stale,
+               (epoch_us(date_trunc('hour', g.last_ts))
+                - epoch_us(date_trunc('hour', g.first_ts)))
+                   // 3600000000 + 1 AS span_hours
         FROM g, w
     )
     SELECT user_id, n_events, first_ts, last_ts, hours_stale,

@@ -30,7 +30,9 @@ Scale notes (100 TB design point):
   tier's percentiles from the raw values.  At petabyte scale you would
   carry a t-digest sketch column instead; the exact path is kept because
   the correctness gate demands exact tier-point equality.
-- Skewed sources are handled upstream by ``operators.skew.salted_rollup``.
+- A skewed source spreads over its chunks when the input is partitioned
+  on ``(source, gchunk_col)``; a hot bucket's percentiles take the
+  sketch under ``percentile_mode='auto'``.
 """
 
 from __future__ import annotations

@@ -157,7 +157,8 @@ def freshness_report(
 
     Output per key: (key, n_events, first_ts, last_ts, hours_stale,
     active_hours, span_hours, activity_ratio, is_stale) — hours_stale
-    = whole hours between the key's last event and the watermark;
+    = whole hours between the key's last event and the watermark
+    (exact to the microsecond);
     active_hours = distinct hours with >=1 event; span_hours = whole
     hours first->last + 1; activity_ratio = active/span (the duty
     cycle).  All exact integers plus one final division.
@@ -178,17 +179,22 @@ def freshness_report(
     )
     wm = events.agg(F.max(ts).alias("_wm"))
     out = g.crossJoin(F.broadcast(wm))
+    # integer micros: unix_timestamp drops fractional seconds, so a
+    # 3,599.95 s gap would read as a whole hour
+    def us(c):
+        return F.unix_micros(c.cast("timestamp"))
+
+    hour_us = F.lit(3_600_000_000)
     hours_stale = F.floor(
-        (F.unix_timestamp("_wm") - F.unix_timestamp("last_ts"))
-        / F.lit(3600)
+        (us(F.col("_wm")) - us(F.col("last_ts"))) / hour_us
     ).cast("bigint")
     span = (
         F.floor(
             (
-                F.unix_timestamp(F.date_trunc("hour", "last_ts"))
-                - F.unix_timestamp(F.date_trunc("hour", "first_ts"))
+                us(F.date_trunc("hour", "last_ts"))
+                - us(F.date_trunc("hour", "first_ts"))
             )
-            / F.lit(3600)
+            / hour_us
         ).cast("bigint")
         + 1
     )

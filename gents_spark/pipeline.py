@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gents_spark.operators.gapfill import gapfill
 from gents_spark.operators.rollup import TIER_ORDER, per_tier, rollup
-from gents_spark.operators.skew import hot_sources, salted_rollup
 from gents_spark.plans import manifest
 from gents_spark.plans.manifest import write_tiers_combined
 from gents_spark.timeparse import (
@@ -44,11 +43,8 @@ class TierPipeline:
         gapfill_mode: str | None = "locf",
         include_sources: list[str] | None = None,
         exclude_sources: list[str] | None = None,
-        salt_threshold_frac: float = 0.25,
-        n_salt: int = 16,
         payloads: str | None = "coarse",
         validate: bool = True,
-        use_salting: bool = False,
         chunk_grain: str = "day",
         compression: str = "snappy",
         percentile_mode: str = "exact",
@@ -64,11 +60,8 @@ class TierPipeline:
         self.gapfill_mode = gapfill_mode
         self.include_sources = include_sources
         self.exclude_sources = exclude_sources
-        self.salt_threshold_frac = salt_threshold_frac
-        self.n_salt = n_salt
         self.payloads = payloads
         self.validate = validate
-        self.use_salting = use_salting
         self.chunk_grain = chunk_grain
         self.compression = compression
         self.percentile_mode = percentile_mode
@@ -102,13 +95,11 @@ class TierPipeline:
             valid = valid.filter(F.col("source").isin(self.include_sources))
         if self.exclude_sources:
             valid = valid.filter(~F.col("source").isin(self.exclude_sources))
-        # doc_id is kept only when something consumes it: the salted
-        # path (it seeds the deterministic salt, computed map-side
-        # before any shuffle) and the distinct-doc sketch column.
+        # doc_id is kept only for the distinct-doc sketch column.
         # Otherwise it is pruned — it is the widest narrow column and
         # every byte rides the build's one big exchange.
         cols = ["source", "event_time", "n_tok"]
-        if self.use_salting or self.store_distinct:
+        if self.store_distinct:
             cols = ["doc_id", *cols]
         raw = with_event_time(valid, step_s=self.step_s).select(*cols)
         return raw, bad
@@ -223,10 +214,12 @@ class TierPipeline:
         traced cold build (``perfbench`` pipeline, 3 tiers, month chunks)
         are the raw repartition, the gap-fill chunk-boundary carry (tiny,
         |sources x chunks x tiers| rows), the chunk-plan min/max and the
-        stats aggregate over the written files.  Skew note: the
-        chunk-grain co-partition spreads a hot source over its chunks; a
-        pathological single (source, chunk) hotspot is what
-        ``use_salting`` remains for.
+        stats aggregate over the written files.  Skew: the chunk-grain
+        co-partition spreads a hot source over its chunks, and within a
+        chunk the tier aggregate keys on (source, bucket), whose rows per
+        key are time-bounded; ``percentile_mode='auto'`` moves a tier with
+        a hot bucket to the approximate percentile sketch, and adaptive
+        execution splits skewed join partitions.
 
         Returns metrics: per-tier written/skipped chunk counts + row counts.
         """
@@ -277,10 +270,10 @@ class TierPipeline:
         # final write needs NO repartition (files per (tier, chunk) stay
         # bounded by the source count) — the chunk grain is both the
         # commit granularity AND the parallelism spread, TimescaleDB-
-        # chunk style.  A hot (source, chunk) partition is the
-        # use_salting escape hatch.  Explicit partition count: AQE would
-        # otherwise coalesce this exchange to the advisory size, capping
-        # the tier aggregate / windows at a handful of tasks.
+        # chunk style: a hot source spreads over its chunks.  Explicit
+        # partition count: AQE would otherwise coalesce this exchange to
+        # the advisory size, capping the tier aggregate / windows at a
+        # handful of tasks.
         # NOT persisted: raw is read and shuffled once, by the one
         # persisted base below (sketch columns and payloads='all' read
         # it again).  Caching raw would hold a second copy of the raw
@@ -290,48 +283,20 @@ class TierPipeline:
         raw = raw0.withColumn(
             "_gchunk", F.date_trunc(self.chunk_grain, F.col("event_time"))
         ).repartition(n_shuffle, "source", "_gchunk")
-        # Salting note: the tier groupBy keys on (source, bucket) — a
-        # HIGH-cardinality key even when one source is hot, because a
-        # hot source's rows spread over its many buckets (rows per
-        # key are time-bounded).  So the default single aggregation
-        # is already skew-safe here, and the exact-percentile pass
-        # cannot be salted regardless (needs all of a bucket's values
-        # together).  use_salting=True switches the additive stats to
-        # the two-phase salted plan (operators/skew.py) — the right
-        # tool when buckets are coarse relative to the data (e.g. a
-        # 1d-only build over a few hot sources).
-        hot = (
-            hot_sources(raw, self.salt_threshold_frac)
-            if self.use_salting
-            else []
-        )
-        if hot:
-            # salted path: legacy join shape (extreme single-key skew
-            # defense); not chunk-aligned, so every later join keys on
-            # (source, tier, bucket_start) and the write repartitions
-            gck = None
-            base = salted_rollup(raw, tiers, n_salt=self.n_salt).join(
-                rollup(
-                    raw, tiers, percentile_mode=self.percentile_mode
-                ).select(
-                    "source", "tier", "bucket_start",
-                    "p50_tok", "p95_tok", "p99_tok",
-                ),
-                ["source", "tier", "bucket_start"],
-            )
-        else:
-            gck = "_gchunk"
-            base = rollup(
-                raw, tiers, percentile_mode=self.percentile_mode,
-                gchunk_col=gck,
-            )
-        # read by gap-fill's window pass AND its chunk-boundary carry,
-        # plus the payload aggregate — persist so the aggregation runs
-        # once
-        base = base.persist()
+        # The tier aggregate runs on raw's partitioning (no exchange):
+        # one (source, chunk) is one task, and its per-key state is one
+        # time-bounded bucket.  Read by gap-fill's window pass AND its
+        # chunk-boundary carry, plus the payload aggregate — persist so
+        # the aggregation runs once.
+        base = rollup(
+            raw, tiers, percentile_mode=self.percentile_mode,
+            gchunk_col="_gchunk",
+        ).persist()
         try:
             tier_df = (
-                gapfill(base, tiers, mode=self.gapfill_mode, gchunk_col=gck)
+                gapfill(
+                    base, tiers, mode=self.gapfill_mode, gchunk_col="_gchunk"
+                )
                 if self.gapfill_mode
                 else base.withColumn("filled", F.lit(False))
             )
@@ -341,11 +306,11 @@ class TierPipeline:
             # the left joins exactly as gap-fill gives its other
             # passthrough columns.  Keyed on (source, _gchunk, ...) both
             # sides keep raw's partitioning: no exchange.
-            keyed = ["source", *([gck] if gck else [])]
+            keyed = ["source", "_gchunk"]
             if len(tiers) > 1:
                 keyed.append("tier")
             side = []
-            if self.store_sketches and gck:
+            if self.store_sketches:
                 # mergeable percentile sketch column on every tier
                 # row (operators/sketches.py): after retention
                 # expires raw, coarser percentiles recompose by
@@ -353,9 +318,9 @@ class TierPipeline:
                 from gents_spark.operators.sketches import value_histogram
 
                 side.append(
-                    (value_histogram(raw, tiers, gchunk_col=gck), "vh")
+                    (value_histogram(raw, tiers, gchunk_col="_gchunk"), "vh")
                 )
-            if self.store_distinct and gck:
+            if self.store_distinct:
                 # mergeable HLL distinct-doc sketch per tier row:
                 # distinct counts survive raw expiry and union
                 # losslessly upward (register-wise max)
@@ -363,7 +328,7 @@ class TierPipeline:
 
                 side.append((distinct_sketch(
                     raw, tiers, key_col="doc_id", ts_col="event_time",
-                    gchunk_col=gck,
+                    gchunk_col="_gchunk",
                 ), "dv_sketch"))
             for sj, col in side:
                 cols = tier_df.columns
@@ -371,9 +336,7 @@ class TierPipeline:
                     sj.select(*keyed, "bucket_start", col),
                     [*keyed, "bucket_start"], "left",
                 ).select(*cols, col)
-            tier_df = self._with_payloads(tier_df, base, raw, gck)
-            if gck:
-                tier_df = tier_df.drop(gck)
+            tier_df = self._with_payloads(tier_df, base, raw).drop("_gchunk")
             t0 = time.time()
             m = write_tiers_combined(
                 self.spark,
@@ -387,7 +350,6 @@ class TierPipeline:
                 chunk_grain=self.chunk_grain,
                 command=command,
                 compression=self.compression,
-                repartition_output=bool(hot),
             )
             phases = m.pop("phases", {})
             phases["total"] = round(time.time() - t0, 3)
@@ -407,7 +369,6 @@ class TierPipeline:
         tier_df: DataFrame,
         base: DataFrame,
         raw: DataFrame,
-        gck: str | None,
     ) -> DataFrame:
         """Gorilla/DoD ``payload`` column: each coarse tier row encodes
         its finer neighbour's ``sum_tok`` stream; with payloads='all'
@@ -426,7 +387,7 @@ class TierPipeline:
             return tier_df
         from gents_spark.functions.codec_udfs import attach_payload
 
-        keyed = ["source", *([gck] if gck else [])]
+        keyed = ["source", "_gchunk"]
         parent = dict(zip(tiers, tiers[1:]))
         streams = []
         if parent:
@@ -451,7 +412,7 @@ class TierPipeline:
             stream = stream.unionByName(s)
         if len(pay_tiers) > 1:
             keyed.append("tier")
-        pay = attach_payload(stream, pay_tiers, gchunk_col=gck).select(
+        pay = attach_payload(stream, pay_tiers, gchunk_col="_gchunk").select(
             *keyed, "bucket_start", "payload"
         )
         target = F.col("tier").isin(pay_tiers)

@@ -148,7 +148,6 @@ def write_tiers_combined(
     chunk_grain: str = "day",
     command: str | None = None,
     compression: str = "snappy",
-    repartition_output: bool = False,
 ) -> dict:
     """ALL tiers in one write job + one stats job + one manifest append.
 
@@ -204,14 +203,7 @@ def write_tiers_combined(
     # partition maps to one (source, chunk), so writing AS-IS keeps
     # files-per-chunk-dir bounded by the source count — and skips a
     # full shuffle of every tier row (the round-3 scaling fix).
-    # ``repartition_output`` restores the explicit (tier, chunk,
-    # source) spread for callers whose tier rows are NOT chunk-
-    # co-partitioned (the salted-rollup path).
-    if repartition_output:
-        to_write = to_write.repartition(
-            F.col("tier"), F.col("chunk"), F.col("source")
-        )
-    # per-task sort, NO exchange (the zero-exchange build property is
+    # Per-task sort, NO exchange (the zero-exchange build property is
     # plan-pinned by test_plans.py): within each written file rows
     # come out (source, bucket_start)-ordered, so parquet row-group/
     # page min-max stats are tight and a time-sliced read (S6) prunes

@@ -16,7 +16,7 @@ def test_parse_defaults():
     a = parse_arguments(["--input", "/i", "--output", "/o"])
     # tiers/gapfill default at RESOLUTION time (profile-aware), not parse
     assert a.tiers is None and a.gapfill is None
-    assert not a.resume and not a.dryrun and not a.salted
+    assert not a.resume and not a.dryrun
     prof = resolve_profile(None, a.include_sources, a.exclude_sources)
     assert prof.tiers == ["1m", "1h", "1d"]
     assert prof.gapfill == "locf"
@@ -107,33 +107,6 @@ def test_cli_provenance_and_compression(spark, tmp_path, capsys):
     f = glob.glob(out + "/tiers/tier=1d/chunk=*/*.parquet")[0]
     meta = pq.ParquetFile(f).metadata
     assert meta.row_group(0).column(0).compression == "ZSTD"
-
-
-def test_cli_salted_wired(spark, tmp_path, capsys):
-    """--salted actually enables the two-phase salted aggregation path
-    (round-1 ADVICE: --n-salt was a silent no-op)."""
-    in_path = str(tmp_path / "seqs_salt")
-    out = str(tmp_path / "out_salt")
-    synth_sequences(spark, 3, 600, hot_source_frac=0.6).write.parquet(in_path)
-    rc = main([
-        "--input", in_path, "--output", out,
-        "--tiers", "1d", "--gapfill", "none", "--step-s", "3600",
-        "--salted", "--n-salt", "4", "--master", "local[4]",
-    ])
-    assert rc == 0
-    unsalted = str(tmp_path / "out_unsalted")
-    rc = main([
-        "--input", in_path, "--output", unsalted,
-        "--tiers", "1d", "--gapfill", "none", "--step-s", "3600",
-        "--master", "local[4]",
-    ])
-    assert rc == 0
-    a = read_tier(spark, out + "/tiers", "1d")
-    b = read_tier(spark, unsalted + "/tiers", "1d")
-    cols = ["source", "bucket_start", "cnt", "sum_tok", "min_tok", "max_tok"]
-    assert sorted(map(tuple, a.select(cols).collect())) == sorted(
-        map(tuple, b.select(cols).collect())
-    )
 
 
 def test_cli_empty_after_quarantine(spark, tmp_path, capsys):

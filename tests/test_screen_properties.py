@@ -1422,6 +1422,35 @@ def test_freshness_report_matches_python(spark):
     assert got["live"][4] == 1.0 and got["sparse"][4] < 0.4
 
 
+def test_freshness_fractional_seconds_match_oracle(spark):
+    """A last event 3,599.95 s before the watermark is 0 whole hours
+    stale: the engine and its DuckDB oracle both count in integer
+    micros, so neither truncates the fractional seconds."""
+    import duckdb
+
+    from gents_spark.driver_queries import ORACLES
+    from gents_spark.operators.screens import freshness_report
+
+    events = [
+        ("a", datetime(2024, 5, 1, 10, 0, 0, 900_000)),
+        ("b", datetime(2024, 5, 1, 9, 0, 0, 950_000)),
+        ("b", datetime(2024, 5, 1, 8, 59, 59, 990_000)),
+    ]
+    df = spark.createDataFrame(events, "user_id string, ts timestamp")
+    got = sorted(
+        tuple(r)
+        for r in freshness_report(
+            df, key="user_id", ts="ts", stale_after_h=24
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (user_id VARCHAR, ts TIMESTAMP)")
+    con.executemany("INSERT INTO events VALUES (?, ?)", events)
+    want = sorted(con.sql(ORACLES["freshness"]).fetchall())
+    assert got == want
+    assert {r[0]: r[4] for r in got} == {"a": 0, "b": 0}
+
+
 def test_gap_percentiles_matches_python(spark):
     """Inter-event gap percentiles vs a pure-Python replay of the same
     interpolation formula over exact integer-micros gaps (UNROUNDED:

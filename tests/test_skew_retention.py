@@ -1,56 +1,13 @@
-"""Skew salting (M6) + retention expiry (M2) tests."""
+"""Retention expiry (M2) tests."""
 
 from __future__ import annotations
 
 import os
 
-import pandas as pd
-import pyspark.sql.functions as F
-
 from gents_spark.operators.retention import expirable_chunks, expire
-from gents_spark.operators.rollup import rollup
-from gents_spark.operators.skew import hot_sources, salted_rollup, with_salt
 from gents_spark.pipeline import TierPipeline
 from gents_spark.plans.manifest import read_tier
 from gents_spark.synth import synth_sequences
-from gents_spark.timeparse import with_event_time
-
-
-def test_salted_equals_unsalted(spark):
-    """FIXTURES.md `skewed`: one source holds ~50% of rows; salted
-    two-phase agg must equal the direct rollup exactly."""
-    df = synth_sequences(spark, 5, 2000, hot_source_frac=0.5)
-    raw = with_event_time(df, step_s=10)
-    a = (
-        salted_rollup(raw, "1m", n_salt=8)
-        .orderBy("source", "bucket_start")
-        .toPandas()
-    )
-    b = (
-        rollup(raw, "1m", with_percentiles=False)
-        .orderBy("source", "bucket_start")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
-
-
-def test_hot_source_detection(spark):
-    df = synth_sequences(spark, 5, 1000, hot_source_frac=0.5)
-    assert hot_sources(df, 0.3) == ["src_00"]
-    assert hot_sources(synth_sequences(spark, 5, 200), 0.3) == []
-
-
-def test_salt_spreads_hot_key(spark):
-    """The hot key's rows must land on n_salt distinct partial-agg keys."""
-    df = synth_sequences(spark, 3, 900, hot_source_frac=0.6)
-    n = (
-        with_salt(df, 8)
-        .filter(F.col("source") == "src_00")
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert n == 8
 
 
 def test_retention_requires_coarser_cover(spark, tmp_path):
@@ -97,62 +54,6 @@ def test_retention_coarse_grain_no_overdelete(spark, tmp_path):
     assert read_tier(spark, out + "/tiers", "1m").count() > 0
     # cutoff at/after month end: now it expires
     assert expirable_chunks(spark, out + "/manifest", "1m", "2026-03-01")
-
-
-def test_salting_spreads_shuffle_partitions_under_skew(spark):
-    """r04 VERDICT next-step #7: a stress fixture where salting is
-    LOAD-BEARING.  One source holds 60% of all rows and the tier is 1d
-    (a single bucket), so the unsalted (source, bucket) shuffle puts
-    the hot source's entire corpus into ONE reduce partition — the
-    straggler whose wall-clock IS the job at 100 TB.  The salted key
-    spreads it ~n_salt ways.  The assertion is on actual partition
-    sizes under Spark's own hash partitioning, so it fails if
-    ``with_salt`` stops salting (e.g. returns a constant) or the salt
-    column is dropped from the phase-1 key."""
-    from gents_spark.operators.rollup import bucket_col
-
-    df = synth_sequences(spark, 3, 3000, hot_source_frac=0.6)
-    raw = with_event_time(df, step_s=1).withColumn(
-        "bucket_start", bucket_col("event_time", "1d")
-    )
-    n_parts = 16
-
-    def max_frac(keyed):
-        counts = (
-            keyed.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .count()
-            .collect()
-        )
-        total = sum(r["count"] for r in counts)
-        return max(r["count"] for r in counts) / total
-
-    unsalted = max_frac(
-        raw.repartition(n_parts, F.col("source"), F.col("bucket_start"))
-    )
-    salted = max_frac(
-        with_salt(raw, 8).repartition(
-            n_parts, F.col("source"), F.col("bucket_start"), F.col("_salt")
-        )
-    )
-    # hot source = 60% of rows in one partition unsalted; salted spreads
-    # it across salt values (bound leaves room for hash collisions)
-    assert unsalted >= 0.55
-    assert salted <= 0.30
-    # and the salted two-phase rollup still equals the direct one here
-    a = (
-        salted_rollup(raw, "1d", n_salt=8)
-        .orderBy("source", "bucket_start")
-        .toPandas()
-    )
-    b = (
-        rollup(raw, "1d", with_percentiles=False)
-        .orderBy("source", "bucket_start")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), b.reset_index(drop=True)
-    )
 
 
 def test_retention_custom_grain_gates_on_nearest_coarser(spark, tmp_path):

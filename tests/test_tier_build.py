@@ -45,6 +45,13 @@ def month_seqs(spark):
                       700, 780).persist()
 
 
+@pytest.fixture(scope="module")
+def skewed_seqs(spark):
+    # FIXTURES.md `skewed`: src_00 holds 60% of the rows (1,080 of 1,800)
+    return synth_sequences(spark, 3, 600, hot_source_frac=0.6,
+                           n_tok_lo=4, n_tok_hi=40).persist()
+
+
 TIERS3 = ["1m", "1h", "1d"]
 CASES = {
     "locf": dict(step_s=1800, tiers=TIERS3, gapfill_mode="locf"),
@@ -64,16 +71,21 @@ CASES = {
         step_s=1800, tiers=TIERS3, percentile_mode="sketch"
     ),
     "month_chunks": dict(step_s=3600, tiers=["1h", "1d"], chunk_grain="month"),
+    "skewed": dict(
+        step_s=1800, tiers=TIERS3, store_sketches=True, store_distinct=True
+    ),
 }
+#: the input fixture of each case that does not build from ``seqs``
+INPUTS = {"month_chunks": "month_seqs", "skewed": "skewed_seqs"}
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_one_plan_build_equals_per_tier_reference(
-    spark, seqs, month_seqs, tmp_path, case
+    spark, request, tmp_path, case
 ):
     kw = dict(validate=False, **CASES[case])
     pipe = TierPipeline(spark, **kw)
-    data = month_seqs if case == "month_chunks" else seqs
+    data = request.getfixturevalue(INPUTS.get(case, "seqs"))
     out = str(tmp_path / case)
     pipe.run(data, out, run_id=case)
     got = written_tiers(spark, out)

@@ -10,6 +10,7 @@ finest tier's (``payloads='all'`` only) the raw ``n_tok`` stream.
 
 from __future__ import annotations
 
+import struct
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -24,7 +25,7 @@ from gents_spark.plans.manifest import chunk_col
 
 def reference_tiers(pipe, sequences: DataFrame) -> DataFrame:
     """Every tier row ``pipe.run(sequences, ...)`` writes, built per tier
-    (unsalted path; ``chunk`` is the written chunk key)."""
+    (``chunk`` is the written chunk key)."""
     raw0, _bad = pipe.prepare(sequences)
     planned = pipe._planned_chunks(raw0)
     gck = "_gchunk"
@@ -94,9 +95,31 @@ def _canon(v):
     return v
 
 
+def hll_content(sketch: bytes):
+    """A DataSketches HLL sketch (``hll_sketch_agg``) as its content.
+
+    In LIST and SET mode (low cardinality) the coupons are stored in the
+    order the rows reached the aggregate, and an aggregate that falls
+    back to sort-based merging reorders them; the content is the header
+    plus the sorted non-empty coupons.  HLL mode (registers) is kept as
+    bytes."""
+    pre_ints, cur_mode = sketch[0], sketch[7] & 3
+    if cur_mode == 2:
+        return sketch
+    body = sketch[4 * pre_ints:]
+    coupons = struct.unpack(f"<{len(body) // 4}I", body)
+    return sketch[:4 * pre_ints], tuple(sorted(c for c in coupons if c))
+
+
 def row_multiset(df: DataFrame, cols: list[str]) -> Counter:
     """Rows over ``cols`` as a hashable multiset (maps and binaries
-    canonicalized), so two tables compare row for row, every column."""
+    canonicalized, HLL sketches by content), so two tables compare row
+    for row, every column."""
+    def canon(c, v):
+        if c == "dv_sketch" and v is not None:
+            return hll_content(bytes(v))
+        return _canon(v)
+
     return Counter(
-        tuple(_canon(r[c]) for c in cols) for r in df.select(*cols).collect()
+        tuple(canon(c, r[c]) for c in cols) for r in df.select(*cols).collect()
     )
