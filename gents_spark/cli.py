@@ -244,27 +244,20 @@ def main(argv: list[str] | None = None) -> int:
         }), file=sys.stderr)
     if args.dryrun:
         raw, bad = pipe.prepare(seqs)
-        import pyspark.sql.functions as F
-
+        # every tier plans the same chunks: the run's own chunk plan
+        n_chunks = len(pipe._planned_chunks(raw))
         plan = {
             "valid_rows": raw.count(),
             "quarantined_rows": bad.count(),
             "sources": raw.select("source").distinct().count(),
-            "chunks_per_tier": {
-                t: raw.select(
-                    F.date_format(F.date_trunc("day", "event_time"), "yyyy-MM-dd")
-                ).distinct().count()
-                for t in pipe.tiers
-            },
+            "chunks_per_tier": {t: n_chunks for t in pipe.tiers},
         }
         print(json.dumps({"dryrun": plan}))
         return 0
     if args.stream:
         import os
 
-        import pyspark.sql.functions as F
-
-        from gents_spark.plans.manifest import read_manifest
+        from gents_spark.plans.manifest import INCREMENT, read_manifest
         from gents_spark.streaming.rollup_stream import stream_tier_ingest
 
         # every requested tier streams (sequentially, each through its
@@ -285,21 +278,16 @@ def main(argv: list[str] | None = None) -> int:
                 tier=tier, step_s=args.step_s, watermark=args.watermark,
             )
             q.awaitTermination()
-            m = read_manifest(spark, os.path.join(args.output, "manifest"))
-            agg = (
-                m.filter(
-                    (F.col("status") == "increment")
-                    & (F.col("tier") == tier)
-                )
-                .agg(
-                    F.count("*").alias("chunks"),
-                    F.sum("n_rows").alias("rows"),
-                )
-                .collect()[0]
-            )
+            inc = [
+                r["n_rows"] or 0
+                for r in read_manifest(
+                    os.path.join(args.output, "manifest")
+                ).to_pylist()
+                if r["status"] == INCREMENT and r["tier"] == tier
+            ]
             report[tier] = {
-                "increment_chunks": agg["chunks"],
-                "increment_rows": agg["rows"] or 0,
+                "increment_chunks": len(inc),
+                "increment_rows": sum(inc),
             }
         print(json.dumps({"stream": report}))
         return 0

@@ -19,14 +19,15 @@ import os
 import shutil
 from datetime import datetime
 
-import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from gents_spark.plans.manifest import (
     DONE,
     EXPIRED,
-    latest_status,
+    chunk_start,
+    latest_rows,
     read_manifest,
+    shift_chunk,
 )
 
 #: default retention horizon per tier (days of bucket age)
@@ -42,11 +43,12 @@ def _grain_step(tier: str) -> int:
     return tier_grain(tier)[1]
 
 
-def _split_by_grain(m, tier: str) -> tuple[list[str], list[str]]:
+def _split_by_grain(
+    done: set[tuple[str, str]], tier: str
+) -> tuple[list[str], list[str]]:
     """(coarser, finer) committed tiers relative to ``tier``, by GRAIN
-    WIDTH — one distinct-tier job, consumed by both retention gates.
-    Generalizes the old fixed raw->1m->1h->1d chain to custom ``<N>s``
-    grains.
+    WIDTH — consumed by both retention gates.  Generalizes the old fixed
+    raw->1m->1h->1d chain to custom ``<N>s`` grains.
 
     Cover semantics (enforced in ``expirable_chunks``): a chunk may
     expire once ANY committed coarser tier covers it.  Deliberate
@@ -59,7 +61,7 @@ def _split_by_grain(m, tier: str) -> tuple[list[str], list[str]]:
     so a single-tier deployment (or a top-tier chunk whose finer copies
     were themselves already expired) never deletes the last copy."""
     step = _grain_step(tier)
-    present = [r["tier"] for r in m.select("tier").distinct().collect()]
+    present = sorted({t for t, _ in done})
     return (
         [t for t in present if _grain_step(t) > step],
         [t for t in present if _grain_step(t) < step],
@@ -79,29 +81,18 @@ def expirable_chunks(
     coarse grains ('2026-01' < '2026-01-15' would expire the whole month,
     including buckets after the 15th).  The chunk's grain is recovered
     from its key length (10=day, 7=month, 4=year) and its exclusive end
-    date compared to the cutoff instead.
+    date compared to the cutoff instead.  Reads the manifest on the
+    driver: no Spark job.
     """
     # latest-status rule: a chunk invalidated by reconciliation (stale)
     # is NOT done — neither expirable itself nor valid coarser cover
-    m = latest_status(read_manifest(spark, manifest_dir)).filter(
-        F.col("status") == DONE
-    )
-    chunk_end = (
-        F.when(F.length("chunk") == 10, F.date_add(F.to_date("chunk"), 1))
-        .when(
-            F.length("chunk") == 7,
-            F.add_months(F.to_date(F.concat(F.col("chunk"), F.lit("-01"))), 1),
-        )
-        .otherwise(
-            F.add_months(
-                F.to_date(F.concat(F.col("chunk"), F.lit("-01-01"))), 12
-            )
-        )
-    )
-    mine = m.filter(
-        (F.col("tier") == tier) & (chunk_end <= F.to_date(F.lit(cutoff_date)))
-    )
-    coarser, finer = _split_by_grain(m, tier)
+    done = {
+        u
+        for u, r in latest_rows(read_manifest(manifest_dir)).items()
+        if r["status"] == DONE
+    }
+    cutoff = datetime.strptime(cutoff_date, "%Y-%m-%d").date()
+    coarser, finer = _split_by_grain(done, tier)
     if coarser:
         gate_tiers = coarser  # 'generate before you delete'
     elif finer:
@@ -113,13 +104,14 @@ def expirable_chunks(
         # single-tier deployment: the only copy of the data never
         # expires ('generate before you delete' has nowhere to point)
         return []
-    covered = (
-        m.filter(F.col("tier").isin(gate_tiers))
-        .select("chunk")
-        .distinct()
+    covered = {c for t, c in done if t in gate_tiers}
+    return sorted(
+        c
+        for t, c in done
+        if t == tier
+        and c in covered
+        and chunk_start(shift_chunk(c, 1)).date() <= cutoff
     )
-    mine = mine.join(covered, "chunk", "left_semi")
-    return sorted(r["chunk"] for r in mine.select("chunk").distinct().collect())
 
 
 def expire(

@@ -347,6 +347,31 @@ def max_bucket_count(
     return row[0] or 0
 
 
+def percentile_modes(
+    df: DataFrame,
+    tiers: list[str],
+    percentile_mode: str = "exact",
+    hot_bucket_limit: int = HOT_BUCKET_LIMIT,
+    source_col: str = "source",
+    ts_col: str = "event_time",
+    ts_end_col: str | None = None,
+    alignment: str = "direct",
+) -> dict[str, str]:
+    """{tier: 'exact' | 'sketch'} for ``rollup``: ``'auto'`` probes
+    ``max_bucket_count`` of each tier over ``df``."""
+    if percentile_mode not in ("exact", "sketch", "auto"):
+        raise ValueError(f"unknown percentile_mode: {percentile_mode}")
+    if percentile_mode != "auto":
+        return {t: percentile_mode for t in tiers}
+    return {
+        t: "sketch"
+        if max_bucket_count(df, t, source_col, ts_col, ts_end_col, alignment)
+        > hot_bucket_limit
+        else "exact"
+        for t in tiers
+    }
+
+
 def rollup(
     df: DataFrame,
     tier: str | list[str],
@@ -354,7 +379,7 @@ def rollup(
     ts_col: str = "event_time",
     value_col: str = "n_tok",
     with_percentiles: bool = True,
-    percentile_mode: str = "exact",
+    percentile_mode: str | dict[str, str] = "exact",
     sketch_accuracy: int = SKETCH_ACCURACY,
     hot_bucket_limit: int = HOT_BUCKET_LIMIT,
     gchunk_col: str | None = None,
@@ -406,21 +431,19 @@ def rollup(
     - ``'auto'``: probe ``max_bucket_count`` per tier; a tier is exact
       when every bucket is under ``hot_bucket_limit``, sketch otherwise.
       Each aggregate then sees only its own tiers' values.
+    - a ``{tier: 'exact' | 'sketch'}`` dict: a choice already made, e.g.
+      by ``percentile_modes`` over a wider input than ``df``.
     """
-    if percentile_mode not in ("exact", "sketch", "auto"):
-        raise ValueError(f"unknown percentile_mode: {percentile_mode}")
     tiers = tier_list(tier)
     ts = aligned_ts(ts_col, ts_end_col, alignment)
-    modes = {t: percentile_mode for t in tiers}
-    if with_percentiles and percentile_mode == "auto":
-        modes = {
-            t: "sketch"
-            if max_bucket_count(
-                df, t, source_col, ts_col, ts_end_col, alignment
-            ) > hot_bucket_limit
-            else "exact"
-            for t in tiers
-        }
+    modes = (
+        percentile_mode
+        if isinstance(percentile_mode, dict)
+        else percentile_modes(
+            df, tiers, percentile_mode if with_percentiles else "exact",
+            hot_bucket_limit, source_col, ts_col, ts_end_col, alignment,
+        )
+    )
     exact = [t for t in tiers if modes[t] == "exact"]
     v = F.col(value_col)
 

@@ -17,9 +17,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import TIER_ORDER, per_tier, rollup
+from gents_spark.operators.rollup import (
+    TIER_ORDER,
+    per_tier,
+    percentile_modes,
+    rollup,
+)
 from gents_spark.plans import manifest
 from gents_spark.plans.manifest import write_tiers_combined
+from gents_spark.plans.reconcile import nests, read_units, repair_sources
 from gents_spark.timeparse import (
     split_modal_fingerprint,
     split_valid,
@@ -117,25 +123,44 @@ class TierPipeline:
         build), compares against each committed chunk's manifest
         fingerprint, and appends ``stale`` rows for every (tier, chunk)
         whose source changed — post-watermark stream drops, late files,
-        backfills.  A following ``run(..., resume=True)`` then rewrites
-        exactly the invalidated chunks (GenTS's delete-and-rewrite of
-        incomplete outputs, ``gents/timeseries.py:136-142``, as an
+        backfills.  Under gap-fill it also marks the done units whose
+        filled rows a changed chunk's rows start, end or shape across a
+        chunk boundary (``reconcile.fill_dependent_units``), from the
+        same one per-(source, chunk) aggregation over raw.  A following
+        ``run(..., resume=True)`` then rewrites the marked units,
+        recomputing only the sources that need it (GenTS's delete-and-rewrite
+        of incomplete outputs, ``gents/timeseries.py:136-142``, as an
         acting path).  Returns the detection report plus
         ``n_invalidated``.
         """
         import uuid as _uuid
 
         from gents_spark.plans.reconcile import (
+            SourceChunks,
             detect_stale_chunks,
+            fill_dependent_units,
             invalidate_chunks,
+            source_chunk_stats,
         )
 
         run_id = run_id or ("reconcile-" + _uuid.uuid4().hex[:8])
         manifest_dir = os.path.join(out_dir, "manifest")
         raw, _bad = self.prepare(sequences)
-        report = detect_stale_chunks(
-            self.spark, raw, manifest_dir, chunk_grain=self.chunk_grain
+        sources = SourceChunks(
+            source_chunk_stats(raw, self.chunk_grain).collect()
         )
+        report = detect_stale_chunks(
+            self.spark, raw, manifest_dir, chunk_grain=self.chunk_grain,
+            sources=sources,
+        )
+        if self.gapfill_mode and (report["stale"] or report["new"]):
+            latest = manifest.latest_rows(manifest.read_manifest(manifest_dir))
+            report["stale"] = sorted(
+                report["stale"]
+                + fill_dependent_units(
+                    sources, latest, report, self.gapfill_mode
+                )
+            )
         report["n_invalidated"] = invalidate_chunks(
             manifest_dir, report["stale"], run_id, command=command
         )
@@ -143,10 +168,6 @@ class TierPipeline:
 
     def _planned_chunks(self, raw: DataFrame) -> list[str]:
         """All checkpoint chunks the raw time range touches."""
-        from datetime import timedelta
-
-        from gents_spark.plans.manifest import CHUNK_FORMATS
-
         lo, hi = raw.agg(
             F.min("event_time"), F.max("event_time")
         ).collect()[0]
@@ -157,17 +178,9 @@ class TierPipeline:
         fmt = {"day": "%Y-%m-%d", "month": "%Y-%m", "year": "%Y"}[
             self.chunk_grain
         ]
-        assert CHUNK_FORMATS[self.chunk_grain]  # grains stay in sync
-        out = []
-        cur = lo
-        while cur.strftime(fmt) <= hi.strftime(fmt):
-            out.append(cur.strftime(fmt))
-            if self.chunk_grain == "day":
-                cur = cur + timedelta(days=1)
-            elif self.chunk_grain == "month":
-                cur = (cur.replace(day=1) + timedelta(days=32)).replace(day=1)
-            else:
-                cur = cur.replace(year=cur.year + 1, month=1, day=1)
+        out = [lo.strftime(fmt)]
+        while out[-1] < hi.strftime(fmt):
+            out.append(manifest.shift_chunk(out[-1], 1))
         return out
 
     def run(
@@ -210,18 +223,34 @@ class TierPipeline:
           columns and one driver-side manifest append.
 
         A resume reads the manifest once, before any tier is planned; an
-        all-done resume returns there.  The remaining exchanges of a
-        traced cold build (``perfbench`` pipeline, 3 tiers, month chunks)
-        are the raw repartition, the gap-fill chunk-boundary carry (tiny,
-        |sources x chunks x tiers| rows), the chunk-plan min/max and the
-        stats aggregate over the written files.  Skew: the chunk-grain
+        all-done resume returns there.  A repair — a resume whose every
+        pending unit ``reconcile`` marked stale — recomputes from raw
+        only the sources that need it (``reconcile.repair_sources``):
+        in some pending unit, the source's raw fingerprint no longer
+        matches that unit's written rows, or a gap-fill of the source
+        crosses the unit's boundary.  Each is recomputed over all of its
+        raw rows and unioned with the other sources' rows of those units
+        read back from the written files, into the same one write.  The
+        decision is per unit, so a repair interrupted part-way resumes
+        the same way.  The chunk plan and the ``percentile_mode='auto'``
+        probe still see the whole prepared input.  Any other pending
+        unit (never written, demoted by a streaming increment, left by a
+        crash), a pending tier whose buckets cross chunks (``1w``) or a
+        repair that every source needs makes the build whole.
+
+        The remaining exchanges of a traced cold build (``perfbench``
+        pipeline, 3 tiers, month chunks) are the raw repartition, the
+        gap-fill chunk-boundary carry (tiny, |sources x chunks x tiers|
+        rows), the chunk-plan min/max and the stats aggregate over the
+        written files.  Skew: the chunk-grain
         co-partition spreads a hot source over its chunks, and within a
         chunk the tier aggregate keys on (source, bucket), whose rows per
         key are time-bounded; ``percentile_mode='auto'`` moves a tier with
         a hot bucket to the approximate percentile sketch, and adaptive
         execution splits skewed join partitions.
 
-        Returns metrics: per-tier written/skipped chunk counts + row counts.
+        Returns metrics: per-tier written/skipped chunk counts + row
+        counts, plus ``sources_recomputed`` on a repair.
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         tiers_dir = os.path.join(out_dir, "tiers")
@@ -247,11 +276,12 @@ class TierPipeline:
         # tier DataFrame is built.
         planned_chunks = self._planned_chunks(raw0)
         planned = [(t, c) for t in tiers for c in planned_chunks]
-        done = (
-            manifest.completed_tier_chunks(self.spark, manifest_dir)
+        latest = (
+            manifest.latest_rows(manifest.read_manifest(manifest_dir))
             if resume
-            else set()
+            else {}
         )
+        done = manifest.completed_units(latest)
         if done.issuperset(planned):
             for tier in tiers:
                 metrics["tiers"][tier] = {
@@ -262,6 +292,29 @@ class TierPipeline:
                     "seconds": 0.0,
                 }
             return metrics
+        # A repair — every pending unit was marked stale by reconcile —
+        # recomputes only the sources that need it, each over ALL of its
+        # raw rows (gap-fill carries stay exact), and copies every other
+        # source's rows of those units from the written files.  Any
+        # other pending unit (never written, demoted by a streaming
+        # increment, left by a crash) needs every source, and so does a
+        # tier whose buckets cross chunks: the build is whole.
+        pending = [u for u in planned if u not in done]
+        changed = None
+        if all(
+            u in latest
+            and latest[u]["status"] == manifest.STALE
+            and nests(u[0])
+            for u in pending
+        ):
+            changed = repair_sources(
+                self.spark, raw0, tiers_dir, pending, self.chunk_grain
+            )
+            if changed is not None:
+                metrics["sources_recomputed"] = len(changed)
+        # decided over the whole prepared input, whatever the repair
+        # recomputes
+        modes = percentile_modes(raw0, tiers, self.percentile_mode)
         n_shuffle = int(
             self.spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
@@ -280,6 +333,8 @@ class TierPipeline:
         # rows in executor memory, and at N=1-executor heap sizes that
         # eviction pressure cost more than re-reads (measured: 19.2M
         # rows, 12g executor — cached-raw variant ran 25% slower).
+        if changed is not None:
+            raw0 = raw0.filter(F.col("source").isin(changed))
         raw = raw0.withColumn(
             "_gchunk", F.date_trunc(self.chunk_grain, F.col("event_time"))
         ).repartition(n_shuffle, "source", "_gchunk")
@@ -289,8 +344,7 @@ class TierPipeline:
         # chunk-boundary carry, plus the payload aggregate — persist so
         # the aggregation runs once.
         base = rollup(
-            raw, tiers, percentile_mode=self.percentile_mode,
-            gchunk_col="_gchunk",
+            raw, tiers, percentile_mode=modes, gchunk_col="_gchunk"
         ).persist()
         try:
             tier_df = (
@@ -337,6 +391,16 @@ class TierPipeline:
                     [*keyed, "bucket_start"], "left",
                 ).select(*cols, col)
             tier_df = self._with_payloads(tier_df, base, raw).drop("_gchunk")
+            if changed is not None:
+                kept = read_units(
+                    self.spark, tiers_dir, pending, tier_df.schema
+                )
+                if kept is not None:
+                    tier_df = tier_df.unionByName(
+                        kept.filter(~F.col("source").isin(changed)).select(
+                            *tier_df.columns
+                        )
+                    )
             t0 = time.time()
             m = write_tiers_combined(
                 self.spark,

@@ -5,13 +5,19 @@ completed ones (``gents/timeseries.py:136-142``; ``check_timeseries_integrity``
 ``:26-46`` — a ``gents_version`` attribute stamped at ``:225`` marks a
 complete write).  The Spark-native equivalent:
 
-- work unit = one (tier, time_chunk) partition of the tier table
-  (chunk = calendar day of bucket_start — the same grain the output is
-  physically partitioned by);
-- the manifest is an append-only table of
-  (run_id, tier, chunk, status, n_rows, metrics, checkpoint_ts);
-- resume = anti-join of planned chunks against ``status='done'`` manifest
-  rows (SURVEY.md §2.1 S10);
+- work unit = one (tier, chunk) partition of the tier table (chunk = the
+  calendar day, month or year of bucket_start, the ``chunk_grain`` — the
+  same grain the output is physically partitioned by);
+- the manifest is an append-only directory of small parquet files of
+  (run_id, tier, chunk, status, n_rows, sum_cnt, sum_tok,
+  checkpoint_ts, command, engine_version) rows.  It is driver-scale
+  data, so it is read and written on the driver with pyarrow: no
+  manifest read or write starts a Spark job;
+- the newest row of a unit is its status (``latest_rows``): ``done``,
+  ``stale`` (reconciliation found late data), ``increment`` (a
+  streaming append landed) or ``expired`` (retention removed it);
+- resume = the planned units minus the done and expired ones
+  (SURVEY.md §2.1 S10);
 - idempotency = each chunk's output directory is atomically replaced
   (dynamic partition overwrite), so a re-run of a half-written chunk
   converges instead of double-counting (SURVEY.md §7.3 "exactly-once
@@ -27,14 +33,27 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-MANIFEST_SCHEMA = (
-    "run_id string, tier string, chunk string, status string, "
-    "n_rows long, sum_cnt long, sum_tok long, checkpoint_ts double, "
-    "command string, engine_version string"
+ARROW_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("tier", pa.string()),
+        ("chunk", pa.string()),
+        ("status", pa.string()),
+        ("n_rows", pa.int64()),
+        ("sum_cnt", pa.int64()),
+        ("sum_tok", pa.int64()),
+        ("checkpoint_ts", pa.float64()),
+        # run provenance: the GenTS `gents_command` attribute stamped
+        # into every output (gents/cli.py:197, timeseries.py:900-913)
+        ("command", pa.string()),
+        ("engine_version", pa.string()),
+    ]
 )
 
 DONE = "done"
@@ -43,66 +62,113 @@ EXPIRED = "expired"  # retention removed the chunk's data
 
 
 def _append_manifest_rows(manifest_dir: str, rows: list[tuple]) -> None:
-    """Driver-side manifest append (pyarrow).
-
-    The manifest is driver-scale data (one row per checkpoint chunk);
-    spinning a Spark job + Python worker per append costs ~2s/tier for
-    no benefit.  On Iceberg this is the metadata-commit path anyway.
-    """
-    import pyarrow as pa
+    """Commit manifest rows (tuples in ``ARROW_SCHEMA`` order) as one new
+    file, written on the driver: the manifest is driver-scale data, and
+    a Spark job per append would cost more than the rows it writes.  On
+    Iceberg this is the metadata-commit path anyway."""
     import pyarrow.parquet as pq
 
     os.makedirs(manifest_dir, exist_ok=True)
-    cols = list(zip(*rows)) if rows else [[]] * 10
+    cols = list(zip(*rows)) if rows else [[]] * len(ARROW_SCHEMA)
     table = pa.table(
-        {
-            "run_id": pa.array(cols[0], pa.string()),
-            "tier": pa.array(cols[1], pa.string()),
-            "chunk": pa.array(cols[2], pa.string()),
-            "status": pa.array(cols[3], pa.string()),
-            "n_rows": pa.array(cols[4], pa.int64()),
-            "sum_cnt": pa.array([int(x) if x is not None else None for x in cols[5]], pa.int64()),
-            "sum_tok": pa.array([int(x) if x is not None else None for x in cols[6]], pa.int64()),
-            "checkpoint_ts": pa.array(cols[7], pa.float64()),
-            # run provenance: the GenTS `gents_command` attribute stamped
-            # into every output (gents/cli.py:197, timeseries.py:900-913)
-            "command": pa.array(cols[8], pa.string()),
-            "engine_version": pa.array(cols[9], pa.string()),
-        }
+        [
+            pa.array(
+                [None if v is None else int(v) for v in col]
+                if pa.types.is_integer(f.type)
+                else col,
+                f.type,
+            )
+            for f, col in zip(ARROW_SCHEMA, cols)
+        ],
+        schema=ARROW_SCHEMA,
     )
     # temp name + atomic rename: a concurrent reader or
     # expire_snapshots listing must never see a half-written parquet
-    # footer.  The temp name is "_"-prefixed — Spark's default path
-    # filter skips _/. files, so even a whole-directory
-    # spark.read.parquet(manifest_dir) cannot pick it up mid-write.
+    # footer.  The temp name is "_"-prefixed, which every manifest
+    # reader skips (``_manifest_files``).
     name = f"manifest-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(manifest_dir, "_" + name + ".tmp")
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(manifest_dir, name))
 
 
-def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    if os.path.isdir(manifest_dir) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(manifest_dir) for f in fs
-    ):
-        # mergeSchema: manifests written before the provenance columns
-        # (command, engine_version) existed stay readable on resume
-        return spark.read.option("mergeSchema", "true").parquet(manifest_dir)
-    return spark.createDataFrame([], MANIFEST_SCHEMA)
-
-
-def latest_status(m: DataFrame) -> DataFrame:
-    """(tier, chunk, status) — LATEST manifest row wins.
-
-    The manifest is append-only; reconciliation (plans/reconcile.py)
-    invalidates a chunk by appending a ``stale`` row, so "done" is a
-    property of the newest row, not of any row ever written."""
-    return m.groupBy("tier", "chunk").agg(
-        F.max_by("status", F.struct("checkpoint_ts", "status")).alias("status")
+def _manifest_files(manifest_dir: str) -> list[str]:
+    """Committed manifest files: ``*.parquet`` minus the ``_``/``.``-
+    prefixed names an in-flight append or a crash leaves behind."""
+    if not os.path.isdir(manifest_dir):
+        return []
+    return sorted(
+        os.path.join(manifest_dir, f)
+        for f in os.listdir(manifest_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
 
 
+def _read_files(files: list[str]) -> pa.Table:
+    import pyarrow.dataset as ds
+
+    # the explicit schema reads files written before the provenance
+    # columns (command, engine_version) existed with those as nulls
+    return ds.dataset(files, schema=ARROW_SCHEMA, format="parquet").to_table()
+
+
+def read_manifest(manifest_dir: str) -> pa.Table:
+    """Every manifest row as a pyarrow Table, read on the driver.
+
+    The manifest is driver-scale (one row per committed unit and
+    event), so no read of it starts a Spark job.  A file that
+    ``expire_snapshots`` deletes between the listing and the read is
+    retried with a fresh listing: compaction lands its rows in a new
+    file before it deletes the old ones."""
+    for attempt in range(3):
+        try:
+            return _read_files(_manifest_files(manifest_dir))
+        except FileNotFoundError:
+            if attempt == 2:
+                raise
+
+
+def latest_rows(manifest: pa.Table) -> dict[tuple[str, str], dict]:
+    """(tier, chunk) -> its newest manifest row: the LATEST row wins.
+
+    The manifest is append-only; reconciliation (plans/reconcile.py)
+    invalidates a chunk by appending a ``stale`` row, so "done" is a
+    property of the newest row, not of any row ever written.  Rows tie
+    on ``checkpoint_ts`` when one append commits several statuses for a
+    unit; the greater ``status`` string then wins."""
+    latest: dict[tuple[str, str], dict] = {}
+    for r in manifest.to_pylist():
+        u = (r["tier"], r["chunk"])
+        cur = latest.get(u)
+        if cur is None or _order(r) > _order(cur):
+            latest[u] = r
+    return latest
+
+
+def _order(r: dict) -> tuple:
+    return (r["checkpoint_ts"], r["status"] or "")
+
+
 CHUNK_FORMATS = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
+
+
+def chunk_start(chunk: str) -> datetime:
+    """First instant (UTC) of a day (``yyyy-MM-dd``), month
+    (``yyyy-MM``) or year (``yyyy``) chunk key."""
+    y, m, d = (chunk.split("-") + ["1", "1"])[:3]
+    return datetime(int(y), int(m), int(d), tzinfo=timezone.utc)
+
+
+def shift_chunk(chunk: str, k: int) -> str:
+    """The chunk key ``k`` chunks after (k < 0: before) ``chunk``, at
+    the grain its length names (10 day, 7 month, 4 year); ``k=1`` gives
+    the key whose start is this chunk's exclusive end."""
+    if len(chunk) == 10:
+        return (chunk_start(chunk) + timedelta(days=k)).strftime("%Y-%m-%d")
+    if len(chunk) == 7:
+        i = int(chunk[:4]) * 12 + int(chunk[5:]) - 1 + k
+        return f"{i // 12:04d}-{i % 12 + 1:02d}"
+    return f"{int(chunk) + k:04d}"
 
 
 def chunk_col(bucket_col: str = "bucket_start", grain: str = "day") -> F.Column:
@@ -127,13 +193,14 @@ def completed_tier_chunks(
     still-available raw input would silently undo it.  Cover checks
     (retention.expirable_chunks) filter on DONE alone, so an expired
     chunk never gates another tier's expiry."""
-    m = read_manifest(spark, manifest_dir)
-    return {
-        (r["tier"], r["chunk"])
-        for r in latest_status(m)
-        .filter(F.col("status").isin(DONE, EXPIRED))
-        .collect()
-    }
+    return completed_units(latest_rows(read_manifest(manifest_dir)))
+
+
+def completed_units(
+    latest: dict[tuple[str, str], dict]
+) -> set[tuple[str, str]]:
+    """The units of a ``latest_rows`` map that a resume skips."""
+    return {u for u, r in latest.items() if r["status"] in (DONE, EXPIRED)}
 
 
 def write_tiers_combined(
@@ -328,26 +395,26 @@ def snapshot_chunks(
     manifest_dir: str,
     as_of_ts: float | None = None,
     as_of_run: str | None = None,
-) -> DataFrame:
+) -> set[tuple[str, str]]:
     """(tier, chunk) membership of the snapshot at ``as_of_ts`` (unix
     seconds) or at the last commit of ``as_of_run`` — latest-row-wins
     over manifest rows at-or-before the cut, exactly like
-    ``latest_status`` over a truncated history."""
-    m = read_manifest(spark, manifest_dir)
+    ``latest_rows`` over a truncated history."""
+    m = read_manifest(manifest_dir)
     if as_of_run is not None:
-        cut = (
-            m.filter(F.col("run_id") == as_of_run)
-            .agg(F.max("checkpoint_ts"))
-            .collect()[0][0]
-        )
-        if cut is None:
+        ts = [
+            r["checkpoint_ts"]
+            for r in m.select(["run_id", "checkpoint_ts"]).to_pylist()
+            if r["run_id"] == as_of_run
+        ]
+        if not ts:
             raise ValueError(f"run_id {as_of_run!r} has no manifest rows")
-        as_of_ts = cut if as_of_ts is None else min(as_of_ts, cut)
+        as_of_ts = max(ts) if as_of_ts is None else min(as_of_ts, max(ts))
     if as_of_ts is not None:
-        m = m.filter(F.col("checkpoint_ts") <= as_of_ts)
-    return latest_status(m).filter(F.col("status") == DONE).select(
-        "tier", "chunk"
-    )
+        import pyarrow.compute as pc
+
+        m = m.filter(pc.less_equal(m["checkpoint_ts"], as_of_ts))
+    return {u for u, r in latest_rows(m).items() if r["status"] == DONE}
 
 
 def read_tier_snapshot(
@@ -365,7 +432,7 @@ def read_tier_snapshot(
     directories at planning time, so an old small snapshot reads only
     its own files even on a much-grown table."""
     snap = snapshot_chunks(spark, manifest_dir, as_of_ts, as_of_run)
-    chunks = [r["chunk"] for r in snap.filter(F.col("tier") == tier).collect()]
+    chunks = sorted(c for t, c in snap if t == tier)
     return read_tier(spark, tiers_dir, tier).filter(
         F.col("chunk").isin(chunks)
     )
@@ -379,86 +446,53 @@ def expire_snapshots(
     Rows older than ``older_than_ts`` are dropped EXCEPT each (tier,
     chunk)'s latest row — current membership, resume, and lineage
     metrics are untouched; only the ability to time-travel BEFORE the
-    horizon is given up.
+    horizon is given up.  Runs on the driver with the manifest's own
+    reader and writer.
 
-    Concurrency (r04 ADVICE rewrite — the old version swapped the whole
-    directory with two renames, between which ``read_manifest`` silently
-    saw an EMPTY manifest): compaction now happens INSIDE the live
-    directory, which never disappears —
+    Compaction happens INSIDE the live directory, which never
+    disappears:
 
     1. snapshot the current parquet file list;
     2. read + compact those rows into one new ``manifest-*.parquet``
-       moved into the directory;
+       committed into the directory (temp + rename);
     3. delete exactly the snapshotted files.
 
     Every intermediate state yields correct current MEMBERSHIP: a read
-    whose file listing falls fully before or fully after the window
     sees either old rows, old + compacted rows, or compacted rows —
     every membership/snapshot reader dedupes by the latest
     (checkpoint_ts, status) row per (tier, chunk), and compaction
     itself drops exact-duplicate rows, so a crash between steps 2 and 3
     is repaired by the next run.  A concurrent APPEND is safe — its
-    file is created (atomically, temp + rename in
-    ``_append_manifest_rows``) after the snapshot in step 1, so step 3
-    never deletes it.  LIMITATION (unlike real Iceberg, whose readers
-    pin an immutable metadata file): a reader whose Spark file LISTING
-    precedes step 3 but whose scan runs after it fails fast with
-    FileNotFoundException and must retry — transient failure, never
-    silent wrong data.  Two concurrent expire_snapshots runs must be
-    externally serialized (they would double-compact).  Returns
-    {"kept": n, "dropped": n}.
+    file is created after the snapshot in step 1, so step 3 never
+    deletes it.  A reader whose listing precedes step 3 but whose read
+    follows it retries with a fresh listing (``read_manifest``).  Two
+    concurrent expire_snapshots runs must be externally serialized
+    (they would double-compact).  Returns {"kept": n, "dropped": n}.
     """
-    import glob
-    import shutil
-    import uuid
-
     # step 1: snapshot BEFORE reading, so any append that the read
     # below misses is also missing from the deletion list
-    if not os.path.isdir(manifest_dir):
-        return {"kept": 0, "dropped": 0}
-    old_files = [
-        f
-        for f in os.listdir(manifest_dir)
-        if f.endswith(".parquet")
-    ]
+    old_files = _manifest_files(manifest_dir)
     if not old_files:
         return {"kept": 0, "dropped": 0}
-    m = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(manifest_dir, f) for f in old_files]
-    )
-    w = F.struct("checkpoint_ts", "status")
-    latest = m.groupBy("tier", "chunk").agg(F.max(w).alias("_top"))
-    keep = (
-        m.join(latest, ["tier", "chunk"])
-        .filter(
-            (F.col("checkpoint_ts") >= older_than_ts)
-            | (F.struct("checkpoint_ts", "status") == F.col("_top"))
+    m = _read_files(old_files)
+    top = {u: _order(r) for u, r in latest_rows(m).items()}
+    rows = m.to_pylist()
+    # dict.fromkeys collapses exact-duplicate rows (a crash between
+    # steps 2 and 3 leaves every surviving row twice; without this a
+    # rerun would preserve the duplicates forever)
+    keep = list(
+        dict.fromkeys(
+            tuple(r.values())
+            for r in rows
+            if r["checkpoint_ts"] >= older_than_ts
+            or _order(r) == top[(r["tier"], r["chunk"])]
         )
-        .drop("_top")
-        # collapse exact-duplicate rows (a crash between steps 2 and 3
-        # leaves every surviving row twice; without this a rerun would
-        # preserve the duplicates forever)
-        .dropDuplicates()
     )
-    total = m.count()
-    tmp = manifest_dir.rstrip("/") + ".compact-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # Spark write keeps the exact manifest schema (a pandas round-trip
-    # would re-infer types and can null-type an all-None column)
-    keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-    n_kept = spark.read.parquet(tmp).count()
-    # step 2: move the compacted part-file(s) into the live dir
-    for pf in sorted(glob.glob(os.path.join(tmp, "*.parquet"))):
-        os.replace(
-            pf,
-            os.path.join(
-                manifest_dir, f"manifest-{uuid.uuid4().hex}.parquet"
-            ),
-        )
+    # step 2: commit the compacted rows as one new file
+    _append_manifest_rows(manifest_dir, keep)
     # step 3: drop exactly the files the compaction consumed
     for f in old_files:
-        os.remove(os.path.join(manifest_dir, f))
-    shutil.rmtree(tmp, ignore_errors=True)
+        os.remove(f)
     # orphan sweep: a writer that crashed between pq.write_table and
     # os.replace leaves its "_*.parquet.tmp" invisible to readers but
     # never deleted by any other path.  Age-gate by mtime (not
@@ -474,7 +508,7 @@ def expire_snapshots(
                     os.remove(p)
             except OSError:
                 pass
-    return {"kept": n_kept, "dropped": total - n_kept}
+    return {"kept": len(keep), "dropped": len(rows) - len(keep)}
 
 
 INCREMENT = "increment"
@@ -498,7 +532,7 @@ def append_tier_increment(
 
     Consistency contract with the batch pipeline:
 
-    - ``latest_status`` semantics DEMOTE a chunk from ``done`` the
+    - ``latest_rows`` semantics DEMOTE a chunk from ``done`` the
       moment an increment row lands on it, so the next batch resume
       rebuilds (consolidates) exactly the chunks streaming touched —
       the dynamic partition overwrite then replaces the streamed files
@@ -514,12 +548,8 @@ def append_tier_increment(
 
     Returns {written (chunks), skipped, rows_written}.
     """
-    m = read_manifest(spark, manifest_dir)
-    if (
-        m.filter((F.col("run_id") == run_id) & (F.col("tier") == tier))
-        .limit(1)
-        .count()
-    ):
+    m = read_manifest(manifest_dir).select(["run_id", "tier"]).to_pylist()
+    if {"run_id": run_id, "tier": tier} in m:
         return {"written": 0, "skipped": 1, "rows_written": 0}
     d = tier_df.withColumn("chunk", chunk_col(grain=chunk_grain)).persist()
     try:
@@ -541,11 +571,9 @@ def append_tier_increment(
             .partitionBy("tier", "chunk")
             .parquet(tiers_dir)
         )
-        import time as _time
-
         from gents_spark import __version__
 
-        now = _time.time()
+        now = time.time()
         rows = [
             (run_id, tier, s["chunk"], INCREMENT, s["n"], s["sc"],
              s["st"], now, None, __version__)

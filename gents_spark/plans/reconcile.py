@@ -4,24 +4,36 @@ The streaming path drops rows that arrive after the watermark
 (streaming/rollup_stream.py), and a batch tier store built before a late
 file landed is silently stale — in both cases the fix is the same ACTING
 path GenTS uses for incomplete outputs (delete-and-rewrite,
-``gents/timeseries.py:136-142``): detect the affected chunks and
-invalidate their manifest entries so the next resumed build rewrites
-exactly those chunks.
+``gents/timeseries.py:136-142``): detect the affected units and
+invalidate their manifest entries, so the next resumed build rewrites
+them.
 
 Detection needs no stored raw data: every committed chunk's manifest row
 carries a source fingerprint — ``sum_cnt`` (source rows aggregated into
 the chunk) and ``sum_tok`` (their value sum), computed over non-filled
 tier rows at write time (plans/manifest.py).  Reconciliation recounts
-the CURRENT source per chunk (one map-side-combined aggregation over the
-prepared raw rows) and compares:
+the CURRENT source per (source, chunk) (one map-side-combined
+aggregation over the prepared raw rows, ``source_chunk_stats``) and
+compares its per-chunk sums with the manifest, read on the driver:
 
 - fingerprint mismatch  -> late/changed data: append a ``stale`` row per
-  affected (tier, chunk); the latest-status rule (manifest.latest_status)
+  affected (tier, chunk); the latest-status rule (manifest.latest_rows)
   then excludes it from the resume skip-set;
 - chunk missing from the manifest -> new data: already handled by the
   planned-chunks anti-join, reported here for visibility;
 - chunk missing from the source -> shrunk data (deleted input files):
   reported, never auto-deleted.
+
+A changed chunk can also change its neighbours: gap-fill fills from
+each real row of a source to its next one, across chunk boundaries, so
+a unit's filled rows can carry (locf) or interpolate from (linear) a
+real row in another chunk, interpolate toward one (linear), or exist
+only because one does.  ``fill_dependent_units`` marks those units too,
+from the same per-(source, chunk) first and last event times.
+
+The resume that follows (``TierPipeline.run``) recomputes from raw only
+the sources ``repair_sources`` names for the stale units and copies
+every other source's rows of those units from the written files.
 
 ``TierPipeline.reconcile`` wires this to the pipeline's own ``prepare``
 (same validation/filters as the build) so detection sees exactly the
@@ -30,36 +42,116 @@ rows a rebuild would.
 
 from __future__ import annotations
 
+import os
 import time
+from bisect import bisect_left
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
+from gents_spark.operators.rollup import tier_grain
 from gents_spark.plans.manifest import (
     CHUNK_FORMATS,
     DONE,
     STALE,
     _append_manifest_rows,
+    chunk_start,
+    latest_rows,
     read_manifest,
+    shift_chunk,
 )
 
 
-def source_chunk_fingerprints(
+def source_chunk_stats(
     raw: DataFrame, chunk_grain: str = "day", ts_col: str = "event_time"
 ) -> DataFrame:
-    """(chunk, src_rows, src_sum) from the prepared raw rows — the same
-    quantities the writer stamped into the manifest per chunk."""
+    """(source, chunk, src_rows, src_sum, first_s, last_s) from the
+    prepared raw rows: per source and chunk, the quantities the writer
+    stamps into the manifest per chunk (row count, n_tok sum) and the
+    unix seconds of the first and last event.  Keyed on ``date_trunc``
+    and formatted after the aggregation, so the string format runs once
+    per group, not once per row."""
+    ts = F.col(ts_col)
     return (
-        raw.groupBy(
-            F.date_format(F.col(ts_col), CHUNK_FORMATS[chunk_grain]).alias(
-                "chunk"
-            )
-        )
+        raw.groupBy("source", F.date_trunc(chunk_grain, ts).alias("_c"))
         .agg(
             F.count("*").alias("src_rows"),
             F.sum(F.col("n_tok").cast("long")).alias("src_sum"),
+            F.unix_seconds(F.min(ts)).alias("first_s"),
+            F.unix_seconds(F.max(ts)).alias("last_s"),
+        )
+        .select(
+            "source",
+            F.date_format("_c", CHUNK_FORMATS[chunk_grain]).alias("chunk"),
+            "src_rows",
+            "src_sum",
+            "first_s",
+            "last_s",
         )
     )
+
+
+def nests(tier: str) -> bool:
+    """Whether ``tier``'s buckets nest in a chunk: a grid that divides a
+    day (1m, 1h, 1d, ``<N>s`` dividing 86400) never crosses a day, month
+    or year boundary; ``1w`` does."""
+    return 86400 % tier_grain(tier)[1] == 0
+
+
+class SourceChunks:
+    """Collected ``source_chunk_stats`` rows, on the driver."""
+
+    def __init__(self, rows) -> None:
+        self.stats = {
+            (r["source"], r["chunk"]): (
+                r["src_rows"], r["src_sum"], r["first_s"], r["last_s"]
+            )
+            for r in rows
+        }
+        self.chunks: dict[str, list[str]] = {}
+        for s, c in sorted(self.stats):
+            self.chunks.setdefault(s, []).append(c)
+
+    def fingerprints(self) -> dict[str, tuple[int, int | None]]:
+        """chunk -> (rows, n_tok sum) over every source."""
+        out: dict[str, tuple[int, int | None]] = {}
+        for (_, c), (n, v, _, _) in self.stats.items():
+            rows, total = out.get(c, (0, None))
+            out[c] = (rows + n, total if v is None else (total or 0) + v)
+        return out
+
+    def crossing_fills(
+        self, tier: str, chunk: str
+    ) -> dict[str, tuple[list[str], list[str]]]:
+        """source -> (before, after) for each source whose rows of the
+        unit (``tier``, ``chunk``) hold gap-filled buckets that a real
+        row outside the chunk starts or ends.  ``before`` lists the
+        source's chunks before this one when a fill runs in across the
+        chunk's start, ``after`` its chunks after this one when a fill
+        runs out across its end; each is empty otherwise.
+
+        Gap-fill fills from each real row of a source to its next one,
+        so such a fill exists exactly when the source has rows beyond
+        that boundary and its first (last) bucket in the chunk is not
+        the chunk's first (last), or when it has no rows in the chunk
+        but rows on both sides.  ``tier`` must nest in a chunk."""
+        w = tier_grain(tier)[1]
+        lo = int(chunk_start(chunk).timestamp())
+        hi = int(chunk_start(shift_chunk(chunk, 1)).timestamp())
+        out = {}
+        for s, chunks in self.chunks.items():
+            i = bisect_left(chunks, chunk)
+            mine = self.stats.get((s, chunk))
+            before, after = chunks[:i], chunks[i + (mine is not None):]
+            if mine is None:
+                head = tail = bool(before and after)
+            else:
+                head = bool(before) and mine[2] // w * w > lo
+                tail = bool(after) and mine[3] // w * w < hi - w
+            if head or tail:
+                out[s] = (before if head else [], after if tail else [])
+        return out
 
 
 def detect_stale_chunks(
@@ -67,46 +159,160 @@ def detect_stale_chunks(
     raw: DataFrame,
     manifest_dir: str,
     chunk_grain: str = "day",
+    sources: SourceChunks | None = None,
 ) -> dict:
-    """Compare current source fingerprints against the latest committed
-    manifest rows.  Returns
+    """Compare the current source against committed manifest fingerprints.
+
+    ``sources``: the collected ``source_chunk_stats`` of ``raw``, when
+    the caller already has them (else one aggregation over ``raw``).
+
+    Returns
     ``{"stale": [(tier, chunk), ...], "new": [chunk, ...],
        "orphaned": [(tier, chunk), ...]}``.
     """
-    m = read_manifest(spark, manifest_dir)
-    committed = (
-        m.groupBy("tier", "chunk")
-        .agg(
-            F.max_by(
-                F.struct("status", "sum_cnt", "sum_tok"),
-                F.struct("checkpoint_ts", "status"),
-            ).alias("last")
-        )
-        .filter(F.col("last.status") == DONE)
-        .select(
-            "tier",
-            "chunk",
-            F.col("last.sum_cnt").alias("man_rows"),
-            F.col("last.sum_tok").alias("man_sum"),
-        )
-    )
-    src = source_chunk_fingerprints(raw, chunk_grain)
-    joined = committed.join(src, "chunk", "full_outer").collect()
-    stale, new, orphaned = [], set(), []
-    for r in joined:
-        if r["tier"] is None:
-            new.add(r["chunk"])
-        elif r["src_rows"] is None:
-            orphaned.append((r["tier"], r["chunk"]))
-        elif (
-            r["man_rows"] != r["src_rows"] or r["man_sum"] != r["src_sum"]
-        ):
-            stale.append((r["tier"], r["chunk"]))
-    return {
-        "stale": sorted(stale),
-        "new": sorted(new),
-        "orphaned": sorted(orphaned),
+    committed = {
+        u: (r["sum_cnt"], r["sum_tok"])
+        for u, r in latest_rows(read_manifest(manifest_dir)).items()
+        if r["status"] == DONE
     }
+    if sources is None:
+        sources = SourceChunks(source_chunk_stats(raw, chunk_grain).collect())
+    src = sources.fingerprints()
+    return {
+        "stale": sorted(
+            u for u, fp in committed.items() if u[1] in src and fp != src[u[1]]
+        ),
+        "new": sorted(set(src) - {c for _, c in committed}),
+        "orphaned": sorted(u for u in committed if u[1] not in src),
+    }
+
+
+def fill_dependent_units(
+    sources: SourceChunks,
+    latest: dict[tuple[str, str], dict],
+    report: dict,
+    mode: str,
+) -> list[tuple[str, str]]:
+    """Done units outside ``report["stale"]`` whose gap-filled rows a
+    stale or new chunk's rows start, end or shape (``crossing_fills``).
+
+    A fill that runs into a unit across its start carries (locf) or
+    interpolates from (linear) the source's last real row before it,
+    and one that runs out across its end interpolates toward (linear)
+    the source's next real row: the unit depends on the NEAREST chunk
+    holding rows on that side.  Whether such a fill exists at all
+    depends on ANY chunk on that side holding rows, which is all a
+    zero fill, and a locf fill's end, depend on.  Rows removed from a
+    source's ends are not followed."""
+    stale = set(report["stale"])
+    new = set(report["new"])
+
+    def moved(t: str, chunks: list[str]) -> bool:
+        return all((t, c) in stale or c in new for c in chunks)
+
+    out = []
+    for (t, d), r in latest.items():
+        if r["status"] != DONE or (t, d) in stale:
+            continue
+        if not nests(t):
+            if any(moved(t, [shift_chunk(d, k)]) for k in (-1, 1)):
+                out.append((t, d))
+            continue
+        for before, after in sources.crossing_fills(t, d).values():
+            if (
+                before
+                and moved(t, before[-1:] if mode != "zero" else before)
+            ) or (
+                after and moved(t, after[:1] if mode == "linear" else after)
+            ):
+                out.append((t, d))
+                break
+    return sorted(out)
+
+
+def read_units(
+    spark: SparkSession, tiers_dir: str, units, schema=None
+) -> DataFrame | None:
+    """The written rows of ``units`` (``tier``/``chunk`` as strings), or
+    None when none of them has files.  ``schema`` (without ``chunk``)
+    reads them with another frame's column types."""
+    paths = sorted(
+        p
+        for p in (
+            os.path.join(tiers_dir, f"tier={t}", f"chunk={c}")
+            for t, c in units
+        )
+        if os.path.isdir(p)
+    )
+    if not paths:
+        return None
+    reader = spark.read.option("basePath", tiers_dir)
+    if schema is not None:
+        reader = reader.schema(
+            StructType([*schema.fields, StructField("chunk", StringType())])
+        )
+    return reader.parquet(*paths).withColumn(
+        "tier", F.col("tier").cast("string")
+    ).withColumn("chunk", F.col("chunk").cast("string"))
+
+
+def repair_sources(
+    spark: SparkSession,
+    raw: DataFrame,
+    tiers_dir: str,
+    units: list[tuple[str, str]],
+    chunk_grain: str = "day",
+) -> list[str] | None:
+    """The sources a repair of the stale ``units`` must recompute from
+    raw, or None when that is every source of ``raw``.
+
+    Decided per unit, from the unit's own files: a source whose raw
+    fingerprint (rows, n_tok sum) in the unit's chunk differs from the
+    non-filled (sum cnt, sum sum_tok) of its written rows there changed
+    (a source missing on either side counts as changed).  A source with
+    a fill across the unit's boundary (``crossing_fills``) is taken too:
+    its fill depends on rows outside the unit, which an interrupted
+    earlier repair may already have rewritten.  Every tier of ``units``
+    must nest in a chunk.
+
+    One Spark job: the per-(source, chunk) raw statistics and the
+    per-(tier, source, chunk) sums of the written units, collected
+    together."""
+    both = source_chunk_stats(raw, chunk_grain).withColumn(
+        "tier", F.lit(None).cast("string")
+    )
+    written = read_units(spark, tiers_dir, units)
+    if written is not None:
+        real = ~F.col("filled")
+        both = both.unionByName(
+            written.groupBy("tier", "source", "chunk").agg(
+                F.sum(F.when(real, F.col("cnt"))).cast("long").alias(
+                    "src_rows"
+                ),
+                F.sum(F.when(real, F.col("sum_tok"))).cast("long").alias(
+                    "src_sum"
+                ),
+            ),
+            allowMissingColumns=True,
+        )
+    rows = both.collect()
+    sources = SourceChunks(r for r in rows if r["tier"] is None)
+    by_unit: dict[tuple[str, str], dict[str, tuple[int, int]]] = {}
+    for r in rows:
+        if r["tier"] is not None:
+            by_unit.setdefault((r["tier"], r["chunk"]), {})[r["source"]] = (
+                r["src_rows"] or 0, r["src_sum"] or 0
+            )
+    now: dict[str, dict[str, tuple[int, int]]] = {}
+    for (s, c), (n, v, _, _) in sources.stats.items():
+        now.setdefault(c, {})[s] = (n, v or 0)
+    changed: set[str] = set()
+    for t, c in units:
+        was, fresh = by_unit.get((t, c), {}), now.get(c, {})
+        changed |= {s for s in was.keys() | fresh.keys()
+                    if was.get(s) != fresh.get(s)}
+        changed |= sources.crossing_fills(t, c).keys()
+    return None if changed >= sources.chunks.keys() else sorted(changed)
 
 
 def invalidate_chunks(

@@ -82,6 +82,21 @@ def test_cli_dryrun_writes_nothing(spark, tmp_path, capsys):
     assert not os.path.exists(out)
 
 
+def test_cli_dryrun_counts_the_planned_chunks(spark, tmp_path, capsys):
+    """--dryrun reports the chunks the run would plan, at --chunk-grain:
+    100 daily rows from Jan 1 span 4 months."""
+    in_path = str(tmp_path / "seqs_daily")
+    synth_sequences(spark, 1, 100).write.parquet(in_path)
+    rc = main([
+        "--input", in_path, "--output", str(tmp_path / "out_daily"),
+        "--tiers", "1h", "1d", "--step-s", "86400", "--chunk-grain", "month",
+        "--dryrun", "--master", "local[4]",
+    ])
+    assert rc == 0
+    plan = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["dryrun"]
+    assert plan["chunks_per_tier"] == {"1h": 4, "1d": 4}
+
+
 def test_cli_provenance_and_compression(spark, tmp_path, capsys):
     """Manifest rows carry the launching command + engine version (GenTS
     gents_command analog); --compression reaches the parquet codec."""
@@ -101,7 +116,7 @@ def test_cli_provenance_and_compression(spark, tmp_path, capsys):
         "--compression", "zstd", "--master", "local[4]",
     ]
     assert main(argv) == 0
-    m = read_manifest(spark, out + "/manifest").collect()
+    m = read_manifest(out + "/manifest").to_pylist()
     assert m and all(r["engine_version"] == __version__ for r in m)
     assert all("--compression zstd" in r["command"] for r in m)
     f = glob.glob(out + "/tiers/tier=1d/chunk=*/*.parquet")[0]

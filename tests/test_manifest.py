@@ -61,8 +61,7 @@ def test_manifest_carries_lineage_metrics(spark, seqs, tmp_path):
     TierPipeline(spark, step_s=3600, tiers=["1d"], gapfill_mode=None).run(
         seqs, out, run_id="rX"
     )
-    m = read_manifest(spark, out + "/manifest")
-    rows = m.collect()
+    rows = read_manifest(out + "/manifest").to_pylist()
     assert all(r["status"] == "done" and r["run_id"] == "rX" for r in rows)
     # manifest row counts must equal actual partition row counts
     tier = read_tier(spark, out + "/tiers", "1d")
@@ -151,8 +150,8 @@ def test_concurrent_writers_converge(spark, seqs, tmp_path):
     assert _tiers_sorted(spark, out, "1d") == _tiers_sorted(spark, clean, "1d")
 
     # manifest holds rows from both writers; the resume view is single
-    m = read_manifest(spark, out + "/manifest")
-    assert m.select("run_id").distinct().count() == 2
+    m = read_manifest(out + "/manifest")
+    assert len(set(m.column("run_id").to_pylist())) == 2
     m3 = pipe.run(seqs, out, run_id="D", resume=True)
     assert m3["tiers"]["1d"]["written"] == 0
 
@@ -283,12 +282,12 @@ def test_snapshot_time_travel_and_expiry(spark, seqs, tmp_path):
     pipe.run(full, out, run_id="rB", resume=True)
 
     # time travel: snapshot at ts1 == run-A membership, both addressings
-    snap_ts = {r["chunk"] for r in snapshot_chunks(spark, mdir, as_of_ts=ts1).collect()}
-    snap_run = {r["chunk"] for r in snapshot_chunks(spark, mdir, as_of_run="rA").collect()}
+    snap_ts = {c for _, c in snapshot_chunks(spark, mdir, as_of_ts=ts1)}
+    snap_run = {c for _, c in snapshot_chunks(spark, mdir, as_of_run="rA")}
     assert len(snap_ts) == n_a
     assert snap_ts == snap_run
     # current membership is the same chunk set (rewrite, no new chunks)
-    cur = {r["chunk"] for r in snapshot_chunks(spark, mdir).collect()}
+    cur = {c for _, c in snapshot_chunks(spark, mdir)}
     assert cur == snap_ts
     # snapshot read covers exactly the member chunks
     got = read_tier_snapshot(spark, out + "/tiers", mdir, "1d", as_of_ts=ts1)
@@ -307,13 +306,13 @@ def test_snapshot_time_travel_and_expiry(spark, seqs, tmp_path):
     os.utime(stale, (time.time() - 7200, time.time() - 7200))
 
     # expiry: drop pre-ts1 history, keep each chunk's latest row
-    n_rows_before = read_manifest(spark, mdir).count()
+    n_rows_before = read_manifest(mdir).num_rows
     rep = expire_snapshots(spark, mdir, older_than_ts=time.time())
     assert not os.path.exists(stale)
     assert os.path.exists(fresh)
     assert rep["dropped"] > 0
     assert rep["kept"] + rep["dropped"] == n_rows_before
-    assert {r["chunk"] for r in snapshot_chunks(spark, mdir).collect()} == cur
+    assert {c for _, c in snapshot_chunks(spark, mdir)} == cur
     # resume after compaction still skips everything
     m3 = pipe.run(full, out, run_id="rC", resume=True)
     assert m3["tiers"]["1d"]["written"] == 0
@@ -351,7 +350,7 @@ def test_duplicate_manifest_rows_preserve_membership(spark, seqs, tmp_path):
         shutil.copy(
             os.path.join(mdir, f), os.path.join(mdir, f"manifest-dup-{f[9:]}")
         )
-    rows_dup = read_manifest(spark, mdir).count()
+    rows_dup = read_manifest(mdir).num_rows
     assert done_1d() == before
     m = pipe.run(seqs, out, run_id="rB", resume=True)
     assert m["tiers"]["1d"]["written"] == 0
@@ -361,9 +360,9 @@ def test_duplicate_manifest_rows_preserve_membership(spark, seqs, tmp_path):
     # unchanged
     rep = expire_snapshots(spark, mdir, older_than_ts=time.time())
     assert rep["kept"] + rep["dropped"] == rows_dup
-    after = read_manifest(spark, mdir)
-    assert after.count() == rep["kept"]
-    assert after.dropDuplicates().count() == after.count()
+    after = read_manifest(mdir).to_pylist()
+    assert len(after) == rep["kept"]
+    assert len({tuple(r.values()) for r in after}) == len(after)
     assert done_1d() == before
     # empty/missing dirs degrade gracefully (r05 review: the explicit
     # file listing must not crash where read_manifest returned empty)
@@ -450,3 +449,133 @@ def test_export_timeseries_custom_grain(spark, tmp_path):
     one = spark.read.parquet(sorted(files)[0]).collect()
     starts = [r["bucket_start"] for r in one]
     assert starts == sorted(starts)
+
+
+def test_manifest_reader_fills_missing_columns_and_skips_temp_files(tmp_path):
+    """Files written before the provenance columns existed read back
+    with nulls there; ``_``-prefixed files (in-flight appends, crash
+    residue) are never read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gents_spark.plans.manifest import (
+        ARROW_SCHEMA,
+        _append_manifest_rows,
+    )
+
+    mdir = tmp_path / "manifest"
+    mdir.mkdir()
+    old = pa.table({
+        "run_id": ["r0"], "tier": ["1d"], "chunk": ["2026-01-01"],
+        "status": ["done"], "n_rows": pa.array([3], pa.int64()),
+        "sum_cnt": pa.array([4], pa.int64()),
+        "sum_tok": pa.array([5], pa.int64()), "checkpoint_ts": [1.0],
+    })
+    pq.write_table(old, mdir / "manifest-old.parquet")
+    # a readable file under a hidden name, and a torn temp file
+    pq.write_table(old, mdir / "_manifest-hidden.parquet")
+    (mdir / "_manifest-torn.parquet.tmp").write_bytes(b"partial")
+    _append_manifest_rows(str(mdir), [
+        ("r1", "1d", "2026-01-02", "done", 1, 2, 3, 2.0, "cmd", "v"),
+    ])
+    m = read_manifest(str(mdir))
+    assert m.schema == ARROW_SCHEMA
+    rows = sorted(m.to_pylist(), key=lambda r: r["run_id"])
+    assert [r["run_id"] for r in rows] == ["r0", "r1"]
+    assert rows[0]["command"] is None and rows[0]["engine_version"] is None
+    assert rows[0]["sum_tok"] == 5 and rows[1]["command"] == "cmd"
+    assert read_manifest(str(tmp_path / "missing")).num_rows == 0
+
+
+def test_latest_rows_breaks_timestamp_ties_like_max_by(spark):
+    """Ties on ``checkpoint_ts`` break by ``status``, exactly as Spark's
+    ``max_by(status, struct(checkpoint_ts, status))`` does."""
+    import pyarrow as pa
+
+    from gents_spark.plans.manifest import ARROW_SCHEMA, latest_rows
+
+    rows = [
+        ("a", "1d", "c1", "done", 1.0), ("b", "1d", "c1", "stale", 1.0),
+        ("a", "1d", "c2", "stale", 1.0), ("b", "1d", "c2", "done", 2.0),
+        ("a", "1h", "c1", "increment", 5.0), ("b", "1h", "c1", "done", 5.0),
+        ("c", "1h", "c1", "expired", 5.0), ("a", "1h", "c2", "done", 3.0),
+        ("b", "1h", "c2", "done", 3.0),
+    ]
+    want = {
+        (r["tier"], r["chunk"]): r["status"]
+        for r in spark.createDataFrame(
+            rows, "run_id string, tier string, chunk string, status string, "
+            "checkpoint_ts double",
+        )
+        .groupBy("tier", "chunk")
+        .agg(F.max_by("status", F.struct("checkpoint_ts", "status")).alias("status"))
+        .collect()
+    }
+    table = pa.table(
+        {
+            f.name: pa.array(
+                [r[i] for r in rows]
+                if i is not None
+                else [None] * len(rows),
+                f.type,
+            )
+            for f, i in zip(
+                ARROW_SCHEMA, [0, 1, 2, 3, None, None, None, 4, None, None]
+            )
+        },
+        schema=ARROW_SCHEMA,
+    )
+    got = {u: r["status"] for u, r in latest_rows(table).items()}
+    assert got == want
+    assert got[("1d", "c1")] == "stale" and got[("1h", "c1")] == "increment"
+
+
+def test_manifest_reads_start_no_spark_job(spark, tmp_path):
+    """Resume, retention and snapshot reads of the manifest run on the
+    driver: zero Spark jobs, counted by job group."""
+    from gents_spark.operators.retention import expirable_chunks
+    from gents_spark.plans.manifest import (
+        _append_manifest_rows,
+        completed_tier_chunks,
+        snapshot_chunks,
+    )
+
+    mdir = str(tmp_path / "manifest")
+    _append_manifest_rows(mdir, [
+        ("r1", t, c, "done", 1, 1, 1, 1.0, None, "v")
+        for t in ("1m", "1h") for c in ("2026-01-01", "2026-01-02")
+    ])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group: str, fn, *a):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn(*a)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, tracker.getJobIdsForGroup(group)
+
+    # the counter sees a job when one runs
+    assert jobs_of("control", lambda: spark.range(3).count())[1]
+    done, jobs = jobs_of("completed", completed_tier_chunks, spark, mdir)
+    assert len(done) == 4 and jobs == []
+    exp, jobs = jobs_of("expirable", expirable_chunks, spark, mdir, "1m",
+                        "2026-02-01")
+    assert exp == ["2026-01-01", "2026-01-02"] and jobs == []
+    snap, jobs = jobs_of("snapshot", snapshot_chunks, spark, mdir)
+    assert snap == done and jobs == []
+
+
+def test_chunk_keys_shift_across_their_grain():
+    """``shift_chunk`` steps day, month and year keys across month and
+    year ends; ``chunk_start`` of the next key is a chunk's end."""
+    from gents_spark.plans.manifest import chunk_start, shift_chunk
+
+    assert shift_chunk("2026-12-31", 1) == "2027-01-01"
+    assert shift_chunk("2024-03-01", -1) == "2024-02-29"
+    assert shift_chunk("2026-12", 1) == "2027-01"
+    assert shift_chunk("2026-01", -13) == "2024-12"
+    assert shift_chunk("2026", -1) == "2025"
+    assert str(chunk_start(shift_chunk("2026-01", 1))) == "2026-02-01 00:00:00+00:00"
+    assert chunk_start("2026").timestamp() == 1767225600

@@ -316,8 +316,8 @@ def test_stream_tier_ingest_into_manifest_layout(spark, tmp_path):
         assert batch1[k] == v, k  # every emitted bucket exact
     # increments never mark chunks done (demote semantics)
     assert len(done_1m()) == 0
-    m = read_manifest(spark, out_dir + "/manifest")
-    assert m.filter(F.col("status") == "increment").count() > 0
+    m = read_manifest(out_dir + "/manifest")
+    assert "increment" in m.column("status").to_pylist()
 
     # later data (well past the watermark) -> run 2 emits the held-back
     # tail of batch 1 plus most of batch 2, through the SAME checkpoint
