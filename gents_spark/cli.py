@@ -70,11 +70,6 @@ def parse_arguments(argv: list[str] | None = None) -> argparse.Namespace:
                    help="parquet codec for tier outputs (GenTS "
                         "apply_compression analog; default: profile's, "
                         "else snappy)")
-    p.add_argument("--percentiles", choices=["exact", "sketch", "auto"],
-                   default="exact",
-                   help="tier percentile path: exact collect_list, "
-                        "approx_percentile sketch (bounded memory on hot "
-                        "buckets), or auto probe")
     p.add_argument("--modal-quarantine", action="store_true",
                    help="per source, quarantine rows whose structural "
                         "fingerprint differs from the strict-majority one "
@@ -230,7 +225,6 @@ def main(argv: list[str] | None = None) -> int:
         exclude_sources=prof.exclude_sources,
         chunk_grain=args.chunk_grain or prof.chunk_grain,
         compression="uncompressed" if compression == "none" else compression,
-        percentile_mode=args.percentiles,
         modal_quarantine=args.modal_quarantine,
         store_sketches=args.store_sketches,
         store_distinct=args.store_distinct,
@@ -243,13 +237,17 @@ def main(argv: list[str] | None = None) -> int:
             "exclude_sources": pipe.exclude_sources,
         }), file=sys.stderr)
     if args.dryrun:
+        from gents_spark.plans.reconcile import collect_sources
+
         raw, bad = pipe.prepare(seqs)
-        # every tier plans the same chunks: the run's own chunk plan
-        n_chunks = len(pipe._planned_chunks(raw))
+        # the run's own planning statistics; every tier plans the same
+        # chunks
+        sources = collect_sources(spark, raw, pipe.chunk_grain)
+        n_chunks = len(sources.span())
         plan = {
-            "valid_rows": raw.count(),
+            "valid_rows": sum(v[0] for v in sources.stats.values()),
             "quarantined_rows": bad.count(),
-            "sources": raw.select("source").distinct().count(),
+            "sources": len(sources.chunks),
             "chunks_per_tier": {t: n_chunks for t in pipe.tiers},
         }
         print(json.dumps({"dryrun": plan}))
@@ -312,9 +310,8 @@ def main(argv: list[str] | None = None) -> int:
 
         ret: dict[str, list[str]] = {}
         for spec in args.retention:
+            # every spec was validated before the build
             tier, _, cutoff = spec.partition("=")
-            if not cutoff:
-                raise SystemExit(f"--retention expects TIER=YYYY-MM-DD, got {spec!r}")
             ret[tier] = expire(
                 spark,
                 os.path.join(args.output, "tiers"),

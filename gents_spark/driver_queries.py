@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from gents_spark.operators.anomaly import BENFORD_P
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import TIER_UNITS
+from gents_spark.operators.rollup import TIER_UNITS, grid_index
 
 #: Benford first-digit CASE for the DuckDB twin — repr() round-trips
 #: each Python double exactly, so both engines hold identical constants
@@ -38,15 +38,6 @@ _BENFORD_CASE = (
 # --------------------------------------------------------------------------
 # helpers
 # --------------------------------------------------------------------------
-
-
-def _grid_index(ts_col, step_s):
-    """FLOOR-division grid index (operators/rollup.py::grid_index) —
-    Spark's `div` truncates toward zero and would diverge from the
-    DuckDB twins' flooring `//` on pre-1970 timestamps."""
-    from gents_spark.operators.rollup import grid_index
-
-    return grid_index(ts_col, step_s)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -930,11 +921,10 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    """No cache_handles passed: the gate returns a LAZY DataFrame (the
-    driver collects it later), so the persisted shingle index cannot be
-    unpersisted here — reclamation is the ContextCleaner's, the same
-    documented convention as contamination_ngram/minhash (r04 VERDICT
-    standing item; bench clears caches between passes)."""
+    """The gate returns a LAZY DataFrame (the driver collects it later),
+    so the persisted shingle index cannot be unpersisted here —
+    reclamation is the ContextCleaner's, the same convention as
+    contamination_ngram/minhash (bench clears caches between passes)."""
     from gents_spark.operators.dedup import ngram_jaccard_pairs
 
     # repartition: the shingle explode+hash that materializes the
@@ -989,8 +979,8 @@ def q_dedup_containment(spark, sf_dir):
     """Overlap-coefficient near-dup (n_common / min set size) — the
     subset/quote signal Jaccard dilutes for asymmetric doc sizes
     (operators/dedup.py::containment_pairs).  Same frequency-capped
-    inverted-index shape as dedup_ngram_jaccard; no cache_handles for
-    the same lazy-gate reason as q_dedup_ngram_jaccard."""
+    inverted-index shape as dedup_ngram_jaccard; the persisted index is
+    reclaimed as in q_dedup_ngram_jaccard."""
     from gents_spark.operators.dedup import containment_pairs
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
@@ -1903,7 +1893,7 @@ def q_trend_slope(spark, sf_dir):
             F.date_trunc("hour", "ts").alias("bucket_start"),
         )
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("s"))
-        .withColumn("t", _grid_index("bucket_start", 3600))
+        .withColumn("t", grid_index("bucket_start", 3600))
     )
     return ols_trend(
         hourly, key="source", order_idx="t", value="s", scale_div=100.0
@@ -1925,7 +1915,7 @@ def q_theil_sen(spark, sf_dir):
             F.date_trunc("hour", "ts").alias("bucket_start"),
         )
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("s"))
-        .withColumn("t", _grid_index("bucket_start", 3600))
+        .withColumn("t", grid_index("bucket_start", 3600))
     )
     return theil_sen_slope(
         hourly, key="source", order_idx="t", value="s",
@@ -1960,7 +1950,7 @@ def q_flatline_1h(spark, sf_dir):
             F.date_trunc("hour", "ts").alias("bucket_start"),
         )
         .agg(F.count("*").alias("s"))
-        .withColumn("t", _grid_index("bucket_start", 3600))
+        .withColumn("t", grid_index("bucket_start", 3600))
     )
     return flatline_runs(
         hourly, key="source", order_idx="t", value="s", min_run=3

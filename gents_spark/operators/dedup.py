@@ -179,7 +179,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >=1 shingle.
 
@@ -198,12 +197,10 @@ def ngram_jaccard_pairs(
 
     The per-doc shingle-ARRAY table feeds three consumers (the
     candidate explode and both verify sides) and is persisted so the
-    Arrow shingling pass runs once (see ``_pair_common_counts``).
-    ``cache_handles``: same contract as ``ngram_contamination`` —
-    pass a list to receive the handle and unpersist after consuming;
-    otherwise reclamation is left to the ContextCleaner.
+    Arrow shingling pass runs once (see ``_pair_common_counts``);
+    reclamation is left to the ContextCleaner.
     """
-    j = _pair_common_counts(docs, n, max_shingle_df, cache_handles)
+    j = _pair_common_counts(docs, n, max_shingle_df)
     j = j.withColumn(
         "jaccard",
         F.round(
@@ -222,7 +219,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Overlap-coefficient (containment) near-dup: ``n_common /
     min(n_a, n_b)`` (Broder 1997's containment measure over n-gram
@@ -238,7 +234,7 @@ def containment_pairs(
     caveat) as ``ngram_jaccard_pairs`` — candidates from shingles with
     df <= ``max_shingle_df``, counts verified over full shingle sets.
     """
-    c = _pair_common_counts(docs, n, max_shingle_df, cache_handles)
+    c = _pair_common_counts(docs, n, max_shingle_df)
     out = c.withColumn(
         "containment",
         F.round(
@@ -254,7 +250,6 @@ def _pair_common_counts(
     docs: DataFrame,
     n: int,
     max_shingle_df: int | None,
-    cache_handles: list | None,
 ) -> DataFrame:
     """(doc_a, doc_b, n_common, n_a, n_b) for every candidate pair
     sharing >=1 (optionally df-capped) shingle — the shared core of
@@ -286,8 +281,6 @@ def _pair_common_counts(
     from pyspark import StorageLevel
 
     arrs = shingle_hash_arrays(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_handles is not None:
-        cache_handles.append(arrs)
     s = arrs.select("doc_id", F.explode("_sh").alias("shingle"))
     if max_shingle_df is not None:
         buckets = (
@@ -677,7 +670,6 @@ def duplicate_spans(
     docs: DataFrame,
     n: int = 5,
     min_count: int = 2,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Substring-level duplication census — the repeated-span signal of
     Lee et al. 2021 ("Deduplicating Training Data Makes Language Models
@@ -701,7 +693,6 @@ def duplicate_spans(
     and the join side, so it is persisted (``shingles_col`` is
     map-side; without an Exchange there is no ReusedExchange
     materialization point and the split+md5 would run twice).
-    ``cache_handles``: same contract as ``ngram_jaccard_pairs``.
     """
     from pyspark import StorageLevel
 
@@ -713,8 +704,6 @@ def duplicate_spans(
     arrs = shingle_hash_arrays(docs, n, distinct=False).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    if cache_handles is not None:
-        cache_handles.append(arrs)
     spans = arrs.select("doc_id", F.explode("_sh").alias("span"))
     totals = spans.groupBy("span").agg(F.count("*").alias("total"))
     dup = (

@@ -70,7 +70,6 @@ def ngram_contamination(
     test_frac: float = 0.2,
     max_shingle_df: int | None = 50,
     min_shared: int = 1,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """(test_doc_id, train_doc_id, n_shared) for every cross-split pair
     sharing >= ``min_shared`` distinct word n-grams.
@@ -79,11 +78,7 @@ def ngram_contamination(
     ``max_shingle_df``); ``n_shared`` then counts ALL common shingles
     of each candidate pair exactly, so values are cap-independent —
     only pairs whose every overlap is hotter than the cap are missed.
-
-    ``cache_handles``: pass a list to receive the persisted
-    intermediate DataFrames; a long-lived session should
-    ``h.unpersist()`` each after consuming the result (round-3 ADVICE —
-    otherwise reclamation waits for the ContextCleaner GC hook).
+    The persisted shingle arrays are reclaimed by the ContextCleaner.
     """
     # shingles join/aggregate as 60-bit md5 keys, not ~30-char strings:
     # the inverted index and both verify joins shuffle on this column,
@@ -116,8 +111,6 @@ def ngram_contamination(
     arrs = shingle_hash_arrays(docs, n).withColumn(
         "is_test", hash_frac(F.col("doc_id")) < F.lit(test_frac)
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_handles is not None:
-        cache_handles.append(arrs)
     s = arrs.select("doc_id", "is_test", F.explode("_sh").alias("shingle"))
     if max_shingle_df is not None:
         # ONE tagged collect_list per bucket instead of two (halves the

@@ -16,16 +16,17 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gents_spark.operators import rollup as rollup_ops
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import (
-    TIER_ORDER,
-    per_tier,
-    percentile_modes,
-    rollup,
-)
+from gents_spark.operators.rollup import TIER_ORDER, per_tier, rollup
 from gents_spark.plans import manifest
 from gents_spark.plans.manifest import write_tiers_combined
-from gents_spark.plans.reconcile import nests, read_units, repair_sources
+from gents_spark.plans.reconcile import (
+    collect_sources,
+    nests,
+    read_units,
+    repair_sources,
+)
 from gents_spark.timeparse import (
     split_modal_fingerprint,
     split_valid,
@@ -53,7 +54,6 @@ class TierPipeline:
         validate: bool = True,
         chunk_grain: str = "day",
         compression: str = "snappy",
-        percentile_mode: str = "exact",
         modal_quarantine: bool = False,
         store_sketches: bool = False,
         store_distinct: bool = False,
@@ -70,7 +70,6 @@ class TierPipeline:
         self.validate = validate
         self.chunk_grain = chunk_grain
         self.compression = compression
-        self.percentile_mode = percentile_mode
         self.modal_quarantine = modal_quarantine
         self.store_sketches = store_sketches
         self.store_distinct = store_distinct
@@ -136,19 +135,15 @@ class TierPipeline:
         import uuid as _uuid
 
         from gents_spark.plans.reconcile import (
-            SourceChunks,
             detect_stale_chunks,
             fill_dependent_units,
             invalidate_chunks,
-            source_chunk_stats,
         )
 
         run_id = run_id or ("reconcile-" + _uuid.uuid4().hex[:8])
         manifest_dir = os.path.join(out_dir, "manifest")
         raw, _bad = self.prepare(sequences)
-        sources = SourceChunks(
-            source_chunk_stats(raw, self.chunk_grain).collect()
-        )
+        sources = collect_sources(self.spark, raw, self.chunk_grain)
         report = detect_stale_chunks(
             self.spark, raw, manifest_dir, chunk_grain=self.chunk_grain,
             sources=sources,
@@ -165,23 +160,6 @@ class TierPipeline:
             manifest_dir, report["stale"], run_id, command=command
         )
         return report
-
-    def _planned_chunks(self, raw: DataFrame) -> list[str]:
-        """All checkpoint chunks the raw time range touches."""
-        lo, hi = raw.agg(
-            F.min("event_time"), F.max("event_time")
-        ).collect()[0]
-        if lo is None:
-            # Empty prepared input (all rows quarantined or filtered out):
-            # nothing to plan.
-            return []
-        fmt = {"day": "%Y-%m-%d", "month": "%Y-%m", "year": "%Y"}[
-            self.chunk_grain
-        ]
-        out = [lo.strftime(fmt)]
-        while out[-1] < hi.strftime(fmt):
-            out.append(manifest.shift_chunk(out[-1], 1))
-        return out
 
     def run(
         self,
@@ -222,32 +200,40 @@ class TierPipeline:
           by the source count), plus one stats job over the written
           columns and one driver-side manifest append.
 
-        A resume reads the manifest once, before any tier is planned; an
-        all-done resume returns there.  A repair — a resume whose every
-        pending unit ``reconcile`` marked stale — recomputes from raw
-        only the sources that need it (``reconcile.repair_sources``):
-        in some pending unit, the source's raw fingerprint no longer
-        matches that unit's written rows, or a gap-fill of the source
-        crosses the unit's boundary.  Each is recomputed over all of its
-        raw rows and unioned with the other sources' rows of those units
+        The manifest is read once, on the driver, then ONE Spark job
+        collects the per-(source, chunk) statistics of the prepared
+        input (``reconcile.collect_sources``; it also sums the written
+        rows of any stale units).  Everything the build decides comes
+        from them: the chunk plan (every chunk from the first holding
+        rows to the last; an all-done resume returns there), the
+        percentile path per tier (exact unless a bucket exceeds
+        ``HOT_BUCKET_LIMIT`` rows: a tier that nests in a chunk is
+        bounded by its largest (source, chunk), any other by its
+        largest source, and only a tier over that bound is probed), and
+        a repair's sources.  A repair — a resume whose every pending
+        unit ``reconcile`` marked stale — recomputes from raw only the
+        sources that need it (``reconcile.repair_sources``): in some
+        pending unit, the source's raw fingerprint no longer matches
+        that unit's written rows, or a gap-fill of the source crosses
+        the unit's boundary.  Each is recomputed over all of its raw
+        rows and unioned with the other sources' rows of those units
         read back from the written files, into the same one write.  The
         decision is per unit, so a repair interrupted part-way resumes
-        the same way.  The chunk plan and the ``percentile_mode='auto'``
-        probe still see the whole prepared input.  Any other pending
-        unit (never written, demoted by a streaming increment, left by a
-        crash), a pending tier whose buckets cross chunks (``1w``) or a
-        repair that every source needs makes the build whole.
+        the same way.  Any other pending unit (never written, demoted by
+        a streaming increment, left by a crash), a pending tier whose
+        buckets cross chunks (``1w``) or a repair that every source
+        needs makes the build whole.
 
         The remaining exchanges of a traced cold build (``perfbench``
         pipeline, 3 tiers, month chunks) are the raw repartition, the
         gap-fill chunk-boundary carry (tiny, |sources x chunks x tiers|
-        rows), the chunk-plan min/max and the stats aggregate over the
-        written files.  Skew: the chunk-grain
+        rows), the planning statistics' aggregate and the stats
+        aggregate over the written files.  Skew: the chunk-grain
         co-partition spreads a hot source over its chunks, and within a
         chunk the tier aggregate keys on (source, bucket), whose rows per
-        key are time-bounded; ``percentile_mode='auto'`` moves a tier with
-        a hot bucket to the approximate percentile sketch, and adaptive
-        execution splits skewed join partitions.
+        key are time-bounded; a tier with a hot bucket takes the
+        approximate percentile sketch, and adaptive execution splits
+        skewed join partitions.
 
         Returns metrics: per-tier written/skipped chunk counts + row
         counts, plus ``sources_recomputed`` on a repair.
@@ -268,19 +254,24 @@ class TierPipeline:
                 bad.write.mode("overwrite").parquet(
                     os.path.join(out_dir, "quarantine")
                 )
-        # chunk plan from the raw time range — ONE job on the
-        # PRE-repartition rows (scan + agg, no shuffle), so the
+        # ONE planning job on the PRE-repartition rows, so the
         # co-partition exchange + cache build happen inside the big
-        # write job instead of a serial planning barrier.  The manifest
-        # is read once, here: an all-done resume returns before any
-        # tier DataFrame is built.
-        planned_chunks = self._planned_chunks(raw0)
-        planned = [(t, c) for t in tiers for c in planned_chunks]
+        # write job; an all-done resume returns before any tier
+        # DataFrame is built.
         latest = (
             manifest.latest_rows(manifest.read_manifest(manifest_dir))
             if resume
             else {}
         )
+        stale = [
+            u for u, r in latest.items()
+            if r["status"] == manifest.STALE and u[0] in tiers and nests(u[0])
+        ]
+        sources = collect_sources(
+            self.spark, raw0, self.chunk_grain, tiers_dir, stale
+        )
+        planned_chunks = sources.span()
+        planned = [(t, c) for t in tiers for c in planned_chunks]
         done = manifest.completed_units(latest)
         if done.issuperset(planned):
             for tier in tiers:
@@ -301,20 +292,17 @@ class TierPipeline:
         # tier whose buckets cross chunks: the build is whole.
         pending = [u for u in planned if u not in done]
         changed = None
-        if all(
-            u in latest
-            and latest[u]["status"] == manifest.STALE
-            and nests(u[0])
-            for u in pending
-        ):
-            changed = repair_sources(
-                self.spark, raw0, tiers_dir, pending, self.chunk_grain
-            )
+        if set(pending) <= set(stale):
+            changed = repair_sources(sources, pending)
             if changed is not None:
                 metrics["sources_recomputed"] = len(changed)
-        # decided over the whole prepared input, whatever the repair
-        # recomputes
-        modes = percentile_modes(raw0, tiers, self.percentile_mode)
+        # what percentile_mode='auto' decides over the whole prepared
+        # input, probing only the tiers the statistics leave unbounded
+        limit = rollup_ops.HOT_BUCKET_LIMIT
+        modes = {t: "exact" for t in tiers} | rollup_ops.percentile_modes(
+            raw0, [t for t in tiers if sources.bucket_bound(t) > limit],
+            "auto", limit,
+        )
         n_shuffle = int(
             self.spark.conf.get("spark.sql.shuffle.partitions", "200")
         )

@@ -31,9 +31,11 @@ real row in another chunk, interpolate toward one (linear), or exist
 only because one does.  ``fill_dependent_units`` marks those units too,
 from the same per-(source, chunk) first and last event times.
 
-The resume that follows (``TierPipeline.run``) recomputes from raw only
-the sources ``repair_sources`` names for the stale units and copies
-every other source's rows of those units from the written files.
+The same statistics, collected by ``collect_sources`` together with
+the stale units' written sums, plan every build (``TierPipeline.run``):
+the resume recomputes from raw only the sources ``repair_sources``
+names from them and copies every other source's rows of the stale units
+from the written files.
 
 ``TierPipeline.reconcile`` wires this to the pipeline's own ``prepare``
 (same validation/filters as the build) so detection sees exactly the
@@ -42,10 +44,12 @@ rows a rebuild would.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from bisect import bisect_left
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -100,9 +104,12 @@ def nests(tier: str) -> bool:
 
 
 class SourceChunks:
-    """Collected ``source_chunk_stats`` rows, on the driver."""
+    """Collected ``source_chunk_stats`` rows, on the driver.
 
-    def __init__(self, rows) -> None:
+    ``written``: (tier, chunk) -> {source: (rows, n_tok sum)} of the
+    non-filled written rows of the units ``collect_sources`` read."""
+
+    def __init__(self, rows, written=None) -> None:
         self.stats = {
             (r["source"], r["chunk"]): (
                 r["src_rows"], r["src_sum"], r["first_s"], r["last_s"]
@@ -112,6 +119,25 @@ class SourceChunks:
         self.chunks: dict[str, list[str]] = {}
         for s, c in sorted(self.stats):
             self.chunks.setdefault(s, []).append(c)
+        self.written = written or {}
+
+    def span(self) -> list[str]:
+        """Every chunk from the first that holds rows to the last: the
+        build's chunk plan ([] without rows)."""
+        chunks = sorted({c for _, c in self.stats})
+        out = chunks[:1]
+        while out and out[-1] < chunks[-1]:
+            out.append(shift_chunk(out[-1], 1))
+        return out
+
+    def bucket_bound(self, tier: str) -> int:
+        """The most rows one (source, bucket) of ``tier`` can hold: the
+        largest (source, chunk) row count when the tier nests in a
+        chunk, else the largest source's row count."""
+        if nests(tier):
+            return max((v[0] for v in self.stats.values()), default=0)
+        return max((sum(self.stats[s, c][0] for c in cs)
+                    for s, cs in self.chunks.items()), default=0)
 
     def fingerprints(self) -> dict[str, tuple[int, int | None]]:
         """chunk -> (rows, n_tok sum) over every source."""
@@ -176,7 +202,7 @@ def detect_stale_chunks(
         if r["status"] == DONE
     }
     if sources is None:
-        sources = SourceChunks(source_chunk_stats(raw, chunk_grain).collect())
+        sources = collect_sources(spark, raw, chunk_grain)
     src = sources.fingerprints()
     return {
         "stale": sorted(
@@ -235,7 +261,9 @@ def read_units(
 ) -> DataFrame | None:
     """The written rows of ``units`` (``tier``/``chunk`` as strings), or
     None when none of them has files.  ``schema`` (without ``chunk``)
-    reads them with another frame's column types."""
+    reads them with another frame's column types; by default they are
+    read with the schema the writer recorded in a file footer, read on
+    the driver (Spark's own inference would start a job)."""
     paths = sorted(
         p
         for p in (
@@ -246,42 +274,36 @@ def read_units(
     )
     if not paths:
         return None
-    reader = spark.read.option("basePath", tiers_dir)
-    if schema is not None:
-        reader = reader.schema(
-            StructType([*schema.fields, StructField("chunk", StringType())])
-        )
+    if schema is None:
+        first = next(os.path.join(p, n) for p in paths
+                     for n in sorted(os.listdir(p)) if n.endswith(".parquet"))
+        meta = pq.read_schema(first).metadata
+        schema = StructType.fromJson(json.loads(
+            meta[b"org.apache.spark.sql.parquet.row.metadata"]
+        ))
+    reader = spark.read.option("basePath", tiers_dir).schema(
+        StructType([*schema.fields, StructField("chunk", StringType())])
+    )
     return reader.parquet(*paths).withColumn(
         "tier", F.col("tier").cast("string")
     ).withColumn("chunk", F.col("chunk").cast("string"))
 
 
-def repair_sources(
+def collect_sources(
     spark: SparkSession,
     raw: DataFrame,
-    tiers_dir: str,
-    units: list[tuple[str, str]],
     chunk_grain: str = "day",
-) -> list[str] | None:
-    """The sources a repair of the stale ``units`` must recompute from
-    raw, or None when that is every source of ``raw``.
-
-    Decided per unit, from the unit's own files: a source whose raw
-    fingerprint (rows, n_tok sum) in the unit's chunk differs from the
-    non-filled (sum cnt, sum sum_tok) of its written rows there changed
-    (a source missing on either side counts as changed).  A source with
-    a fill across the unit's boundary (``crossing_fills``) is taken too:
-    its fill depends on rows outside the unit, which an interrupted
-    earlier repair may already have rewritten.  Every tier of ``units``
-    must nest in a chunk.
-
-    One Spark job: the per-(source, chunk) raw statistics and the
-    per-(tier, source, chunk) sums of the written units, collected
-    together."""
+    tiers_dir: str | None = None,
+    units=(),
+) -> SourceChunks:
+    """``source_chunk_stats`` of ``raw`` on the driver, and with
+    ``units`` the non-filled (sum cnt, sum sum_tok) per (tier, source,
+    chunk) of those units' written files (``SourceChunks.written``):
+    one Spark job."""
     both = source_chunk_stats(raw, chunk_grain).withColumn(
         "tier", F.lit(None).cast("string")
     )
-    written = read_units(spark, tiers_dir, units)
+    written = read_units(spark, tiers_dir, units) if units else None
     if written is not None:
         real = ~F.col("filled")
         both = both.unionByName(
@@ -296,19 +318,36 @@ def repair_sources(
             allowMissingColumns=True,
         )
     rows = both.collect()
-    sources = SourceChunks(r for r in rows if r["tier"] is None)
     by_unit: dict[tuple[str, str], dict[str, tuple[int, int]]] = {}
     for r in rows:
         if r["tier"] is not None:
             by_unit.setdefault((r["tier"], r["chunk"]), {})[r["source"]] = (
                 r["src_rows"] or 0, r["src_sum"] or 0
             )
+    return SourceChunks((r for r in rows if r["tier"] is None), by_unit)
+
+
+def repair_sources(
+    sources: SourceChunks, units: list[tuple[str, str]]
+) -> list[str] | None:
+    """The sources a repair of the stale ``units`` must recompute from
+    raw, or None when that is every source of ``sources``.
+
+    Decided per unit, from the unit's own files (``sources.written``,
+    read by ``collect_sources``): a source whose raw fingerprint (rows,
+    n_tok sum) in the unit's chunk differs from the non-filled (sum cnt,
+    sum sum_tok) of its written rows there changed (a source missing on
+    either side counts as changed).  A source with a fill across the
+    unit's boundary (``crossing_fills``) is taken too: its fill depends
+    on rows outside the unit, which an interrupted earlier repair may
+    already have rewritten.  Every tier of ``units`` must nest in a
+    chunk."""
     now: dict[str, dict[str, tuple[int, int]]] = {}
     for (s, c), (n, v, _, _) in sources.stats.items():
         now.setdefault(c, {})[s] = (n, v or 0)
     changed: set[str] = set()
     for t, c in units:
-        was, fresh = by_unit.get((t, c), {}), now.get(c, {})
+        was, fresh = sources.written.get((t, c), {}), now.get(c, {})
         changed |= {s for s in was.keys() | fresh.keys()
                     if was.get(s) != fresh.get(s)}
         changed |= sources.crossing_fills(t, c).keys()

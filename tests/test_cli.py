@@ -10,6 +10,7 @@ from gents_spark.cli import main, parse_arguments
 from gents_spark.configs import resolve_profile
 from gents_spark.plans.manifest import read_tier
 from gents_spark.synth import synth_sequences
+from tests.job_groups import actions_of
 
 
 def test_parse_defaults():
@@ -84,17 +85,23 @@ def test_cli_dryrun_writes_nothing(spark, tmp_path, capsys):
 
 def test_cli_dryrun_counts_the_planned_chunks(spark, tmp_path, capsys):
     """--dryrun reports the chunks the run would plan, at --chunk-grain:
-    100 daily rows from Jan 1 span 4 months."""
+    100 daily rows from Jan 1 span 4 months.  It runs 3 Spark actions:
+    the input's schema inference, the run's planning statistics and the
+    quarantine count."""
     in_path = str(tmp_path / "seqs_daily")
-    synth_sequences(spark, 1, 100).write.parquet(in_path)
-    rc = main([
+    synth_sequences(spark, 2, 100).write.parquet(in_path)
+    rc, actions = actions_of(spark, "dryrun", main, [
         "--input", in_path, "--output", str(tmp_path / "out_daily"),
         "--tiers", "1h", "1d", "--step-s", "86400", "--chunk-grain", "month",
         "--dryrun", "--master", "local[4]",
     ])
     assert rc == 0
+    assert len(actions) == 3, actions
     plan = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["dryrun"]
-    assert plan["chunks_per_tier"] == {"1h": 4, "1d": 4}
+    assert plan == {
+        "valid_rows": 200, "quarantined_rows": 0, "sources": 2,
+        "chunks_per_tier": {"1h": 4, "1d": 4},
+    }
 
 
 def test_cli_provenance_and_compression(spark, tmp_path, capsys):
@@ -126,7 +133,7 @@ def test_cli_provenance_and_compression(spark, tmp_path, capsys):
 
 def test_cli_empty_after_quarantine(spark, tmp_path, capsys):
     """All-invalid input (bad doc_id shape) yields zero-written metrics,
-    not a crash (round-1 ADVICE: _planned_chunks None.strftime)."""
+    not a crash (an empty input plans no chunks)."""
     in_path = str(tmp_path / "seqs_bad")
     out = str(tmp_path / "out_bad")
     bad = synth_sequences(spark, 1, 50).withColumn("doc_id", F.lit("nope"))

@@ -10,6 +10,7 @@ import pytest
 from gents_spark.pipeline import TierPipeline
 from gents_spark.plans.manifest import read_manifest, read_tier
 from gents_spark.synth import synth_sequences
+from tests.job_groups import actions_of
 
 
 @pytest.fixture(scope="module")
@@ -205,14 +206,18 @@ def test_reconcile_rebuilds_late_data_chunks(spark, seqs, tmp_path):
     assert pipe.reconcile(full, out, run_id="rec2")["stale"] == []
 
 
-def test_resume_with_sketch_and_quarantine(spark, tmp_path):
-    """The round-2 pipeline features compose: sketch percentiles + modal
+def test_resume_with_sketch_and_quarantine(spark, tmp_path, monkeypatch):
+    """The round-2 pipeline features compose: sketch percentiles (a hot
+    bucket limit of 0 sends every tier to the sketch) + modal
     quarantine + kill/resume. A killed run resumes to exactly the chunks
     a never-killed run writes, with the quarantine table intact."""
     import pyspark.sql.functions as F
 
+    from gents_spark.operators import rollup as rollup_ops
     from gents_spark.pipeline import TierPipeline
     from gents_spark.synth import synth_sequences
+
+    monkeypatch.setattr(rollup_ops, "HOT_BUCKET_LIMIT", 0)
 
     seqs = synth_sequences(spark, 2, 400).withColumn(
         "doc_id",
@@ -222,8 +227,7 @@ def test_resume_with_sketch_and_quarantine(spark, tmp_path):
         ).otherwise(F.col("doc_id")),
     )
     kw = dict(
-        step_s=3600, tiers=["1m"], gapfill_mode=None,
-        percentile_mode="sketch", modal_quarantine=True,
+        step_s=3600, tiers=["1m"], gapfill_mode=None, modal_quarantine=True,
     )
     ref_dir = str(tmp_path / "ref")
     ref = TierPipeline(spark, **kw).run(seqs, ref_dir, run_id="ref")
@@ -545,25 +549,15 @@ def test_manifest_reads_start_no_spark_job(spark, tmp_path):
         ("r1", t, c, "done", 1, 1, 1, 1.0, None, "v")
         for t in ("1m", "1h") for c in ("2026-01-01", "2026-01-02")
     ])
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_of(group: str, fn, *a):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn(*a)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, tracker.getJobIdsForGroup(group)
-
     # the counter sees a job when one runs
-    assert jobs_of("control", lambda: spark.range(3).count())[1]
-    done, jobs = jobs_of("completed", completed_tier_chunks, spark, mdir)
+    assert actions_of(spark, "control", lambda: spark.range(3).count())[1]
+    done, jobs = actions_of(spark, "completed", completed_tier_chunks, spark,
+                            mdir)
     assert len(done) == 4 and jobs == []
-    exp, jobs = jobs_of("expirable", expirable_chunks, spark, mdir, "1m",
-                        "2026-02-01")
+    exp, jobs = actions_of(spark, "expirable", expirable_chunks, spark, mdir,
+                           "1m", "2026-02-01")
     assert exp == ["2026-01-01", "2026-01-02"] and jobs == []
-    snap, jobs = jobs_of("snapshot", snapshot_chunks, spark, mdir)
+    snap, jobs = actions_of(spark, "snapshot", snapshot_chunks, spark, mdir)
     assert snap == done and jobs == []
 
 

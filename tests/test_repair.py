@@ -17,6 +17,7 @@ from gents_spark import pipeline
 from gents_spark.pipeline import TierPipeline
 from gents_spark.plans.manifest import append_tier_increment, read_tier
 from gents_spark.synth import synth_sequences
+from tests.job_groups import actions_before_write
 from tests.tier_reference import row_multiset, written_tiers
 
 #: hour indices from 2026-01-01 00:00: the last bucket of January and
@@ -76,7 +77,7 @@ CASES = {
         gapfill_mode="locf", store_sketches=True, store_distinct=True
     ),
     "linear_all_payloads": dict(gapfill_mode="linear", payloads="all"),
-    "zero_auto_percentiles": dict(gapfill_mode="zero", percentile_mode="auto"),
+    "zero_auto_percentiles": dict(gapfill_mode="zero"),
 }
 
 
@@ -105,8 +106,14 @@ def test_repair_equals_cold_build(
         return real_rollup(df, *a, **k)
 
     monkeypatch.setattr(pipeline, "rollup", recording_rollup)
-    m = pipe.run(augmented, out, run_id="resume", resume=True)
+    # one planning action before the write: the raw statistics and the
+    # stale units' written sums are collected together
+    m, before = actions_before_write(
+        spark, f"repair-{case}", pipe.run, augmented, out, run_id="resume",
+        resume=True,
+    )
     monkeypatch.undo()
+    assert len(before) == 1, before
     assert m["sources_recomputed"] == 2
     recomputed = rolled[0].select("source").distinct().collect()
     assert {r["source"] for r in recomputed} == {"src_00", "src_01"}

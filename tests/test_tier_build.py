@@ -15,11 +15,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from gents_spark import pipeline
+from gents_spark.operators import rollup as rollup_ops
 from gents_spark.operators.rollup import rollup
 from gents_spark.pipeline import TierPipeline
 from gents_spark.plans import manifest
 from gents_spark.synth import synth_sequences
 from gents_spark.timeparse import with_event_time
+from tests.job_groups import actions_before_write, actions_of
 from tests.tier_reference import reference_tiers, row_multiset, written_tiers
 
 
@@ -67,9 +69,10 @@ CASES = {
     # year chunks: a week bucket nests in its chunk (see CHANGES.md on
     # weeks under day/month chunks)
     "weekly": dict(step_s=1800, tiers=["1d", "1w"], chunk_grain="year"),
-    "sketch_percentiles": dict(
-        step_s=1800, tiers=TIERS3, percentile_mode="sketch"
-    ),
+    # a hot bucket limit of 0 sends every tier to the sketch; 1 sits
+    # between the 1m (1 row) and 1h (2 rows) bucket sizes
+    "sketch_percentiles": dict(step_s=1800, tiers=TIERS3),
+    "mixed_percentiles": dict(step_s=1800, tiers=["1m", "1h"]),
     "month_chunks": dict(step_s=3600, tiers=["1h", "1d"], chunk_grain="month"),
     "skewed": dict(
         step_s=1800, tiers=TIERS3, store_sketches=True, store_distinct=True
@@ -77,17 +80,37 @@ CASES = {
 }
 #: the input fixture of each case that does not build from ``seqs``
 INPUTS = {"month_chunks": "month_seqs", "skewed": "skewed_seqs"}
+#: the lowered ``HOT_BUCKET_LIMIT`` of a case and the percentile path
+#: it derives per tier (every other case: exact on every tier)
+LIMITS = {
+    "sketch_percentiles": (0, dict.fromkeys(TIERS3, "sketch")),
+    "mixed_percentiles": (1, {"1m": "exact", "1h": "sketch"}),
+}
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_one_plan_build_equals_per_tier_reference(
-    spark, request, tmp_path, case
+    spark, request, tmp_path, monkeypatch, case
 ):
     kw = dict(validate=False, **CASES[case])
     pipe = TierPipeline(spark, **kw)
     data = request.getfixturevalue(INPUTS.get(case, "seqs"))
     out = str(tmp_path / case)
+    limit, want_modes = LIMITS.get(
+        case, (None, dict.fromkeys(pipe.tiers, "exact"))
+    )
+    if limit is not None:
+        monkeypatch.setattr(rollup_ops, "HOT_BUCKET_LIMIT", limit)
+    modes = []
+    real_rollup = pipeline.rollup
+
+    def recording_rollup(*a, **k):
+        modes.append(k["percentile_mode"])
+        return real_rollup(*a, **k)
+
+    monkeypatch.setattr(pipeline, "rollup", recording_rollup)
     pipe.run(data, out, run_id=case)
+    assert modes == [want_modes]
     got = written_tiers(spark, out)
     ref = reference_tiers(pipe, data)
     assert sorted(got.columns) == sorted(ref.columns)
@@ -117,14 +140,20 @@ def test_auto_percentiles_choose_per_tier(spark, seqs):
 
 
 def test_all_done_resume_plans_nothing(spark, seqs, tmp_path, monkeypatch):
-    """An all-done resume reads the manifest once and returns before any
-    tier DataFrame is built."""
+    """A cold build runs one planning job before its write and never
+    probes bucket sizes; an all-done resume reads the manifest once,
+    runs that one job and returns before any tier DataFrame is built."""
     out = str(tmp_path / "noop")
     pipe = TierPipeline(spark, step_s=1800, tiers=TIERS3, validate=False)
-    first = pipe.run(seqs, out, run_id="r1")
 
     def refuse(*a, **k):
-        raise AssertionError("an all-done resume planned a tier")
+        raise AssertionError("unexpected call")
+
+    monkeypatch.setattr(rollup_ops, "max_bucket_count", refuse)
+    first, actions = actions_before_write(
+        spark, "cold", pipe.run, seqs, out, run_id="r1"
+    )
+    assert len(actions) == 1, actions
 
     reads = []
     read_manifest = manifest.read_manifest
@@ -136,8 +165,10 @@ def test_all_done_resume_plans_nothing(spark, seqs, tmp_path, monkeypatch):
     monkeypatch.setattr(pipeline, "rollup", refuse)
     monkeypatch.setattr(pipeline, "gapfill", refuse)
     monkeypatch.setattr(manifest, "read_manifest", counting_read)
-    again = pipe.run(seqs, out, run_id="r2", resume=True)
-    assert len(reads) == 1
+    again, actions = actions_of(
+        spark, "noop", pipe.run, seqs, out, run_id="r2", resume=True
+    )
+    assert len(reads) == 1 and len(actions) == 1, actions
     for t in TIERS3:
         assert again["tiers"][t]["written"] == 0
         assert again["tiers"][t]["skipped"] == first["tiers"][t]["written"] > 0

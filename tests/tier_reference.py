@@ -17,17 +17,36 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from gents_spark.functions.codec_udfs import attach_payload
+from gents_spark.operators import rollup as rollup_ops
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import rollup
+from gents_spark.operators.rollup import percentile_modes, rollup
 from gents_spark.operators.sketches import distinct_sketch, value_histogram
-from gents_spark.plans.manifest import chunk_col
+from gents_spark.plans.manifest import CHUNK_FORMATS, chunk_col, shift_chunk
+
+
+def planned_chunks(raw: DataFrame, chunk_grain: str) -> list[str]:
+    """Every chunk from the one of raw's first event to its last."""
+    fmt = CHUNK_FORMATS[chunk_grain]
+    lo, hi = raw.agg(
+        F.date_format(F.min("event_time"), fmt),
+        F.date_format(F.max("event_time"), fmt),
+    ).collect()[0]
+    out = [] if lo is None else [lo]
+    while out and out[-1] < hi:
+        out.append(shift_chunk(out[-1], 1))
+    return out
 
 
 def reference_tiers(pipe, sequences: DataFrame) -> DataFrame:
     """Every tier row ``pipe.run(sequences, ...)`` writes, built per tier
-    (``chunk`` is the written chunk key)."""
+    (``chunk`` is the written chunk key).  Percentile paths come from
+    the ``max_bucket_count`` probe of every tier at the current
+    ``HOT_BUCKET_LIMIT``."""
     raw0, _bad = pipe.prepare(sequences)
-    planned = pipe._planned_chunks(raw0)
+    planned = planned_chunks(raw0, pipe.chunk_grain)
+    modes = percentile_modes(
+        raw0, pipe.tiers, "auto", rollup_ops.HOT_BUCKET_LIMIT
+    )
     gck = "_gchunk"
     # the pipeline's raw partitioning: an HLL sketch's bytes depend on
     # the order its rows arrive in
@@ -38,9 +57,7 @@ def reference_tiers(pipe, sequences: DataFrame) -> DataFrame:
     finals = []
     prev = None
     for tier in pipe.tiers:
-        base = rollup(
-            raw, tier, percentile_mode=pipe.percentile_mode, gchunk_col=gck
-        )
+        base = rollup(raw, tier, percentile_mode=modes, gchunk_col=gck)
         if pipe.gapfill_mode:
             tier_df = gapfill(base, tier, mode=pipe.gapfill_mode, gchunk_col=gck)
         else:
