@@ -1,15 +1,22 @@
 """Arrow-batched Spark surface for the Gorilla/DoD codec.
 
 GenTS's execution model for custom work is "one Python process per file
-batch" (``gents/timeseries.py:879-891``); ours is "one vectorized pandas
-call per Arrow batch / per group" — never per row (input_hint mandate).
+batch" (``gents/timeseries.py:879-891``); ours is one vectorized call
+per Arrow batch or per group, never per row (input_hint mandate):
+
+- ``encode_tokens`` / ``decode_tokens``: pandas UDFs over token arrays;
+- ``encode_payloads``: the tier pipeline's one grouped Arrow pass, which
+  gives every tier row of one (source, chunk) its ``payload``
+  (``TierPipeline._with_payloads``).  The per-tier composition it
+  replaces lives in ``tests/tier_reference.py`` as the reference.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -17,21 +24,13 @@ from pyspark.sql.types import (
     IntegerType,
 )
 
-from gents_spark.functions.codec import decode_i64
-from gents_spark.operators.rollup import (
-    bucket_col,
-    bucket_end_col,
-    per_tier,
-    tier_list,
-)
+from gents_spark.functions.codec import decode_i64, encode_i64_batch
 
 
 @pandas_udf(BinaryType())
 def encode_tokens(tokens: pd.Series) -> pd.Series:
     """array<int> -> DoD-compressed binary.  Whole-batch vectorized:
     one NumPy pass encodes every array in the Arrow batch."""
-    from gents_spark.functions.codec import encode_i64_batch
-
     return pd.Series(encode_i64_batch(list(tokens)), index=tokens.index)
 
 
@@ -40,65 +39,66 @@ def decode_tokens(payload: pd.Series) -> pd.Series:
     return payload.map(lambda b: decode_i64(b).astype("int32"))
 
 
-@pandas_udf(BinaryType())
-def encode_i64_stream(values: pd.Series) -> pd.Series:
-    """array<long> -> DoD binary (whole-batch vectorized)."""
-    from gents_spark.functions.codec import encode_i64_batch
-
-    return pd.Series(encode_i64_batch(list(values)), index=values.index)
+def _int64(col) -> np.ndarray:
+    return pc.cast(col, pa.int64()).to_numpy()
 
 
-def attach_payload(
-    finer: DataFrame,
-    coarser_tier: str | list[str],
-    value_col: str = "sum_tok",
-    ts_col: str = "bucket_start",
-    gchunk_col: str | None = None,
-) -> DataFrame:
-    """Per (source, coarser bucket): encode the ordered finer value
-    stream as a DoD payload — the tier row's ``payload`` column
-    (SURVEY.md §1.3 tier model).
+def encode_payloads(rows, raw=None, *, tiers):
+    """One (source, chunk) group's tier rows (a ``pyarrow.Table``) plus
+    their ``payload``.  No type hints: Spark reads a grouped Arrow
+    function's kind from them, and cannot read them off the
+    ``functools.partial`` that binds ``tiers``.
 
-    ``finer`` is either a finer tier table (ts_col='bucket_start',
-    value_col='sum_tok') or the raw rows (ts_col='event_time',
-    value_col='n_tok') for the finest tier's payload.
-
-    ``coarser_tier`` is one tier label, or a list of them: then each
-    ``finer`` row's ``tier`` column names the coarser tier it feeds, its
-    parent bucket is a CASE over that column, and the output keeps
-    ``tier`` — one aggregate and one encode for every coarse tier.
-
-    The sort + encode happen inside one JVM aggregation + one pandas UDF
-    call: ``sort_array(collect_list(struct(ts, v)))`` keeps ordering
-    distributed (no driver collect), then the codec sees a clean int64
-    array per group.  Group size is time-bounded (finer buckets per
-    coarser bucket), so collect_list cannot blow memory.
-
-    ``gchunk_col``: existing chunk-grain column on ``finer``; when given
-    it joins the grouping keys and the output, so an input
-    hash-partitioned on ``(source, gchunk_col)`` aggregates with zero
-    exchange and the caller's payload join on ``(source, gchunk_col,
-    [tier,] bucket_start)`` stays co-located (see operators.rollup.rollup
-    for the clustering rule).
+    A payload is the DoD encoding of the values that feed the row's
+    bucket, in time order: each non-filled finer tier row feeds the
+    bucket ``_pb`` of tier ``tiers[_pt]`` with its ``sum_tok`` (``_pt``
+    is NULL on every other row), and each ``raw`` row (``payloads='all'``)
+    feeds the finest tier's bucket ``_pb`` with its ``n_tok``.  Feeding
+    values are lexsorted by (tier, bucket, time) — raw ties on
+    ``event_time`` by ``n_tok``, as ``sort_array(struct(ts, v))`` orders
+    them — split into streams and encoded by ONE ``encode_i64_batch``
+    call; each tier's streams then meet its rows through one
+    ``searchsorted`` on ``bucket_start``.  A row no stream feeds (a
+    filled row, the finest tier under ``payloads='coarse'``) keeps a
+    NULL payload.  Returns ``rows`` without ``_pt``/``_pb``.
     """
-    tiers = tier_list(coarser_tier)
-    keys = ["source"]
-    if gchunk_col:
-        keys.append(gchunk_col)
-    if len(tiers) > 1:
-        keys.append("tier")
-    grouped = finer.groupBy(
-        *keys,
-        per_tier(tiers, lambda t: bucket_col(ts_col, t)).alias("bucket_start"),
-    ).agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct(ts_col, value_col))),
-            lambda s: s[value_col].cast("long"),
-        ).alias("_stream")
+    feed = rows.select(["_pt", "_pb", "bucket_start", "sum_tok"])
+    feed = feed.filter(pc.is_valid(feed["_pt"]))
+    code = [_int64(feed["_pt"])]
+    bucket = [_int64(feed["_pb"])]
+    when = [_int64(feed["bucket_start"])]
+    tie = [np.zeros(feed.num_rows, np.int64)]
+    value = [_int64(feed["sum_tok"])]
+    if raw is not None:
+        code.append(np.zeros(raw.num_rows, np.int64))
+        bucket.append(_int64(raw["_pb"]))
+        when.append(_int64(raw["event_time"]))
+        tie.append(_int64(raw["n_tok"]))
+        value.append(tie[-1])
+    code, bucket, when, tie, value = (
+        np.concatenate(a) for a in (code, bucket, when, tie, value)
     )
-    return grouped.select(
-        *keys,
-        "bucket_start",
-        bucket_end_col(tiers).alias("bucket_end"),
-        encode_i64_stream(F.col("_stream")).alias("payload"),
+    payload = np.full(rows.num_rows, None, object)
+    if len(code):
+        order = np.lexsort((tie, when, bucket, code))
+        code, bucket, value = code[order], bucket[order], value[order]
+        (starts,) = np.nonzero(
+            np.r_[True, (code[1:] != code[:-1]) | (bucket[1:] != bucket[:-1])]
+        )
+        encoded = np.empty(len(starts), object)
+        encoded[:] = encode_i64_batch(np.split(value, starts[1:]))
+        code, bucket = code[starts], bucket[starts]
+        row_code = _int64(pc.index_in(rows["tier"], value_set=pa.array(tiers)))
+        row_bucket = _int64(rows["bucket_start"])
+        for k in np.unique(code):
+            # tier k's streams, sorted by bucket, meet tier k's rows
+            (streams,) = np.nonzero(code == k)
+            (at,) = np.nonzero(row_code == k)
+            keys = bucket[streams]
+            pos = np.searchsorted(keys, row_bucket[at])
+            pos = np.minimum(pos, len(keys) - 1)
+            hit = keys[pos] == row_bucket[at]
+            payload[at[hit]] = encoded[streams[pos[hit]]]
+    return rows.drop_columns(["_pt", "_pb"]).append_column(
+        "payload", pa.array(payload, pa.binary())
     )

@@ -9,16 +9,18 @@ multi-tier DataFrame plan, written in one job and checkpointed per
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from gents_spark.operators import rollup as rollup_ops
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import TIER_ORDER, per_tier, rollup
+from gents_spark.operators.rollup import TIER_ORDER, bucket_col, per_tier, rollup
 from gents_spark.plans import manifest
 from gents_spark.plans.manifest import write_tiers_combined
 from gents_spark.plans.reconcile import (
@@ -185,11 +187,11 @@ class TierPipeline:
           bucket_start)`` computes every tier's stats and exact
           percentiles (``rollup(raw, tiers)``); it is persisted once;
         - ONE gap-fill pass windows by ``(source, _gchunk, tier)`` with a
-          CASE-over-tier step, and ONE payload aggregate feeds each finer
-          row into its parent bucket of the next tier, encoded by one
-          pandas-UDF node.  All of them group or partition by supersets
-          of the partitioning keys, so Catalyst's clustering rule makes
-          them ZERO-exchange (sorts only), and the payload and sketch
+          CASE-over-tier step, and ONE grouped Arrow pass per ``(source,
+          _gchunk)`` encodes every payload (``_with_payloads``), so the
+          gap-fill runs once.  All of them group or partition by
+          supersets of the partitioning keys, so Catalyst's clustering
+          rule makes them ZERO-exchange (sorts only), and the sketch
           joins are co-partitioned on ``(source, _gchunk, ...)`` too.
           (The initial plan still shows exchanges over the cached base:
           its partitioning is known only once the cache is built, and
@@ -224,16 +226,16 @@ class TierPipeline:
         buckets cross chunks (``1w``) or a repair that every source
         needs makes the build whole.
 
-        The remaining exchanges of a traced cold build (``perfbench``
-        pipeline, 3 tiers, month chunks) are the raw repartition, the
-        gap-fill chunk-boundary carry (tiny, |sources x chunks x tiers|
-        rows), the planning statistics' aggregate and the stats
-        aggregate over the written files.  Skew: the chunk-grain
-        co-partition spreads a hot source over its chunks, and within a
-        chunk the tier aggregate keys on (source, bucket), whose rows per
-        key are time-bounded; a tier with a hot bucket takes the
-        approximate percentile sketch, and adaptive execution splits
-        skewed join partitions.
+        The 4 exchanges of a traced cold build (``perfbench`` pipeline,
+        3 tiers, month chunks) are the raw repartition, the gap-fill
+        chunk-boundary carry (tiny, |sources x chunks x tiers| rows),
+        the planning statistics' aggregate and the stats aggregate over
+        the written files.  Skew: the chunk-grain co-partition spreads a
+        hot source over its chunks, and within a chunk the tier
+        aggregate keys on (source, bucket), whose rows per key are
+        time-bounded; a tier with a hot bucket takes the approximate
+        percentile sketch, and adaptive execution splits skewed join
+        partitions.
 
         Returns metrics: per-tier written/skipped chunk counts + row
         counts, plus ``sources_recomputed`` on a repair.
@@ -329,8 +331,7 @@ class TierPipeline:
         # The tier aggregate runs on raw's partitioning (no exchange):
         # one (source, chunk) is one task, and its per-key state is one
         # time-bounded bucket.  Read by gap-fill's window pass AND its
-        # chunk-boundary carry, plus the payload aggregate — persist so
-        # the aggregation runs once.
+        # chunk-boundary carry — persist so the aggregation runs once.
         base = rollup(
             raw, tiers, percentile_mode=modes, gchunk_col="_gchunk"
         ).persist()
@@ -342,12 +343,14 @@ class TierPipeline:
                 if self.gapfill_mode
                 else base.withColumn("filled", F.lit(False))
             )
-            # Sketch columns and payloads join AFTER gap-fill: gap-fill
-            # reads its input twice, and each read would re-run them.
-            # Generated buckets have no raw rows, so they get NULL from
-            # the left joins exactly as gap-fill gives its other
+            # Sketch columns join and payloads encode AFTER gap-fill:
+            # gap-fill reads its input twice, and each read would re-run
+            # them.  Generated buckets have no raw rows, so they get NULL
+            # from the left joins exactly as gap-fill gives its other
             # passthrough columns.  Keyed on (source, _gchunk, ...) both
-            # sides keep raw's partitioning: no exchange.
+            # sides keep raw's partitioning: no exchange.  The payload
+            # pass comes last: its output has new attributes, so a join
+            # after it would shuffle.
             keyed = ["source", "_gchunk"]
             if len(tiers) > 1:
                 keyed.append("tier")
@@ -378,7 +381,7 @@ class TierPipeline:
                     sj.select(*keyed, "bucket_start", col),
                     [*keyed, "bucket_start"], "left",
                 ).select(*cols, col)
-            tier_df = self._with_payloads(tier_df, base, raw).drop("_gchunk")
+            tier_df = self._with_payloads(tier_df, raw).drop("_gchunk")
             if changed is not None:
                 kept = read_units(
                     self.spark, tiers_dir, pending, tier_df.schema
@@ -419,7 +422,6 @@ class TierPipeline:
     def _with_payloads(
         self,
         tier_df: DataFrame,
-        base: DataFrame,
         raw: DataFrame,
     ) -> DataFrame:
         """Gorilla/DoD ``payload`` column: each coarse tier row encodes
@@ -427,54 +429,57 @@ class TierPipeline:
         the finest tier encodes the raw ``n_tok`` stream (off by
         default: one encoded row per minute bucket is wasteful).
 
-        The finer BASE (pre-gap-fill aggregate, persisted) holds exactly
-        the written finer tier's non-filled rows, so composing from it
-        equals a parquet read-back of the written tier.  Every finer row
-        feeds its parent bucket through ONE aggregate and ONE pandas-UDF
-        encode, left-joined to the payload tiers' rows only: the join
-        stays coarse-sized and the finest tier keeps a NULL payload."""
+        The non-filled rows of the gap-filled tiers are exactly the
+        written finer tier's real rows, so composing from them equals a
+        parquet read-back of the written tier.  The JVM marks each one
+        with the parent tier (``_pt``, its index) and parent bucket
+        (``_pb``) it feeds, a CASE over ``tier``; then ONE grouped Arrow
+        pass per (source, chunk) encodes every stream and matches it to
+        its row (``codec_udfs.encode_payloads``).  A parent row and its
+        feeders come from the same raw rows, so they share ``_gchunk``
+        and one group holds them all.  The grouping keys are raw's
+        partitioning keys: no exchange, no join, and the gap-filled rows
+        are read once.  ``payloads='all'`` cogroups the same function
+        with raw's (source, chunk) groups."""
         tiers = list(self.tiers)
-        pay_tiers = tiers if self.payloads == "all" else tiers[1:]
-        if not self.payloads or not pay_tiers:
+        if not self.payloads or (self.payloads == "coarse" and len(tiers) < 2):
             return tier_df
-        from gents_spark.functions.codec_udfs import attach_payload
+        from gents_spark.functions.codec_udfs import encode_payloads
 
-        keyed = ["source", "_gchunk"]
         parent = dict(zip(tiers, tiers[1:]))
-        streams = []
-        if parent:
-            streams.append(
-                base.filter(F.col("tier").isin(list(parent))).select(
-                    *keyed,
-                    per_tier(list(parent), lambda t: F.lit(parent[t]))
-                    .alias("tier"),
-                    "bucket_start",
-                    "sum_tok",
-                )
+        feeds = ~F.col("filled") & F.col("tier").isin(list(parent))
+
+        def fed(fn) -> F.Column:
+            # fn(parent tier) on a feeding row, NULL on every other
+            if not parent:
+                return F.lit(None)
+            return F.when(feeds, per_tier(list(parent), lambda t: fn(parent[t])))
+
+        rows = tier_df.select(
+            "*",
+            fed(lambda p: F.lit(tiers.index(p))).cast("int").alias("_pt"),
+            fed(lambda p: bucket_col("bucket_start", p))
+            .cast("timestamp").alias("_pb"),
+        )
+        schema = StructType(
+            [*tier_df.schema.fields, StructField("payload", BinaryType())]
+        )
+        keyed = ["source", "_gchunk"]
+        # bound by keyword: Spark passes the grouping key to a function
+        # whose argument count says it takes one
+        fn = functools.partial(encode_payloads, tiers=tiers)
+        if self.payloads == "coarse":
+            return rows.groupBy(*keyed).applyInArrow(
+                functools.partial(fn, raw=None), schema
             )
-        if self.payloads == "all":
-            streams.append(raw.select(
-                *keyed,
-                F.lit(tiers[0]).alias("tier"),
-                F.col("event_time").alias("bucket_start"),
-                F.col("n_tok").alias("sum_tok"),
-            ))
-        stream = streams[0]
-        for s in streams[1:]:
-            stream = stream.unionByName(s)
-        if len(pay_tiers) > 1:
-            keyed.append("tier")
-        pay = attach_payload(stream, pay_tiers, gchunk_col="_gchunk").select(
-            *keyed, "bucket_start", "payload"
+        raw = raw.select(
+            *keyed,
+            bucket_col("event_time", tiers[0]).alias("_pb"),
+            "event_time",
+            "n_tok",
         )
-        target = F.col("tier").isin(pay_tiers)
-        joined = (
-            tier_df.filter(target)
-            .join(pay, [*keyed, "bucket_start"], "left")
-            .select(*tier_df.columns, "payload")
-        )
-        if len(pay_tiers) == len(tiers):
-            return joined
-        return tier_df.filter(~target).unionByName(
-            joined, allowMissingColumns=True
+        return (
+            rows.groupBy(*keyed)
+            .cogroup(raw.groupBy(*keyed))
+            .applyInArrow(fn, schema)
         )

@@ -18,14 +18,11 @@ from gents_spark.functions.codec import (
     encode_f64,
     encode_i64,
 )
-from gents_spark.functions.codec_udfs import (
-    attach_payload,
-    decode_tokens,
-    encode_tokens,
-)
+from gents_spark.functions.codec_udfs import decode_tokens, encode_tokens
 from gents_spark.operators.rollup import rollup
 from gents_spark.synth import synth_sequences
 from gents_spark.timeparse import with_event_time
+from tests.tier_reference import attach_payload
 
 
 @given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=300))

@@ -14,11 +14,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from gents_spark import pipeline
+from gents_spark.functions.codec import decode_i64
 from gents_spark.pipeline import TierPipeline
 from gents_spark.plans.manifest import append_tier_increment, read_tier
 from gents_spark.synth import synth_sequences
 from tests.job_groups import actions_before_write
-from tests.tier_reference import row_multiset, written_tiers
+from tests.tier_reference import reference_tiers, row_multiset, written_tiers
 
 #: hour indices from 2026-01-01 00:00: the last bucket of January and
 #: the first of March
@@ -138,6 +139,43 @@ def _hourly(spark, spans: list[tuple[int, int]], late: int | None = None,
     return spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     )
+
+
+def test_all_payloads_order_tied_raw_rows_like_the_reference(
+    spark, tmp_path
+):
+    """Late ``#1`` shards share their event_time with the rows they
+    repeat.  Under ``payloads='all'`` a tie orders by ``n_tok``, as the
+    reference's ``sort_array(struct(event_time, n_tok))`` does: a shard
+    with fewer tokens goes first, one with more goes last, whatever
+    order the rows arrive in.  Both the repaired store and a cold build
+    equal the reference."""
+    kw = dict(step_s=3600, tiers=["1h", "1d"], chunk_grain="month",
+              gapfill_mode="linear", payloads="all")
+    pipe = TierPipeline(spark, **kw)
+    base = _hourly(spark, [(0, 800)])
+    shards = spark.createDataFrame(
+        [(f"src_00/{h:010d}#1", [1] * n, n, "src_00")
+         for h, n in ((10, 7), (JAN_LAST, 3))],
+        base.schema,
+    )
+    augmented = shards.unionByName(base)
+    out, cold = str(tmp_path / "repaired"), str(tmp_path / "cold")
+    pipe.run(base, out, run_id="build")
+    assert pipe.reconcile(augmented, out, run_id="rec")["stale"]
+    pipe.run(augmented, out, run_id="resume", resume=True)
+    TierPipeline(spark, **kw).run(augmented, cold, run_id="cold")
+    ref = reference_tiers(pipe, augmented)
+    cols = sorted(ref.columns)
+    want = row_multiset(ref, cols)
+    for got in (out, cold):
+        assert row_multiset(written_tiers(spark, got), cols) == want
+    tied = {
+        r["bucket_start"].hour: list(decode_i64(bytes(r["payload"])))
+        for r in read_tier(spark, out + "/tiers", "1h")
+        .filter("cnt = 2").collect()
+    }
+    assert tied == {10: [5, 7], 23: [3, 5]}
 
 
 def test_repair_rewrites_the_filled_head_of_the_next_chunk(spark, tmp_path):

@@ -1,9 +1,9 @@
 """The one-plan tier build equals the per-tier composition, row for row.
 
 ``TierPipeline.run`` builds every tier from one fan-out aggregate, one
-gap-fill pass, one payload aggregate and one write; ``tests/tier_reference``
-builds the same rows one tier at a time.  Every column is compared,
-payload bytes and sketch maps included.
+gap-fill pass, one grouped Arrow payload pass and one write;
+``tests/tier_reference`` builds the same rows one tier at a time.  Every
+column is compared, payload bytes and sketch maps included.
 """
 
 from __future__ import annotations
@@ -208,11 +208,37 @@ def _write_plan_nodes(spark, since_ms: float) -> list:
     return write
 
 
+def _nodes_named(nodes: list, pred) -> set:
+    """The distinct operators (by accumulator) whose name passes ``pred``."""
+    return {
+        tuple(sorted(accs.values())) for name, _, accs in nodes if pred(name)
+    }
+
+
+def _assert_one_payload_pass(nodes: list, arrow_node: str) -> None:
+    """Payloads come from ONE grouped Arrow node: no Union splits the
+    write, and every join left is gap-fill's chunk-boundary carry, keyed
+    on (source, _gchunk, tier) — none is keyed on a bucket, as a payload
+    (or sketch) join is."""
+    arrow = _nodes_named(nodes, lambda n: "InArrow" in n or "Python" in n)
+    assert len(arrow) == 1 and _nodes_named(
+        nodes, lambda n: n == arrow_node
+    ) == arrow, nodes
+    assert not _nodes_named(nodes, lambda n: n == "Union"), nodes
+    joins = [
+        desc for name, desc, _ in nodes
+        if "Join" in name or "CartesianProduct" in name
+    ]
+    assert joins and not any("bucket_start" in d for d in joins), joins
+
+
 def test_cold_build_scans_and_shuffles_raw_once(spark, seqs, tmp_path):
     """The cold build's write plan reads the input once and has exactly
     one hashpartitioning(source, _gchunk) exchange: every tier comes out
-    of that one raw shuffle.  Operators are counted by accumulator, as a
-    cached plan shows its nodes again under every scan of the cache."""
+    of that one raw shuffle.  Its payloads (``payloads='coarse'``, the
+    default) come from one grouped Arrow pass over that partitioning.
+    Operators are counted by accumulator, as a cached plan shows its
+    nodes again under every scan of the cache."""
     src = str(tmp_path / "seqs")
     seqs.write.parquet(src)
     since = time.time() * 1e3
@@ -233,3 +259,16 @@ def test_cold_build_scans_and_shuffles_raw_once(spark, seqs, tmp_path):
     }
     assert len(scans) == 1, nodes
     assert len(raw_shuffles) == 1, nodes
+    _assert_one_payload_pass(nodes, "FlatMapGroupsInArrow")
+
+
+def test_all_payloads_cogroup_raw_in_one_arrow_pass(spark, seqs, tmp_path):
+    """``payloads='all'`` adds the raw ``n_tok`` streams to the same one
+    Arrow pass, cogrouped with raw's (source, _gchunk) groups."""
+    since = time.time() * 1e3
+    TierPipeline(
+        spark, step_s=1800, tiers=TIERS3, validate=False, payloads="all"
+    ).run(seqs, str(tmp_path / "out"), resume=False)
+    _assert_one_payload_pass(
+        _write_plan_nodes(spark, since), "FlatMapCoGroupsInArrow"
+    )

@@ -6,6 +6,10 @@ payload on its own (the one-tier ``rollup`` / ``gapfill`` /
 ``attach_payload`` calls), and the tiers are unioned.  A coarse tier's
 payload encodes the previous tier's pre-gap-fill ``sum_tok`` stream; the
 finest tier's (``payloads='all'`` only) the raw ``n_tok`` stream.
+
+``attach_payload`` is the payload's reference formulation: a JVM
+``sort_array(collect_list(struct(ts, v)))`` aggregate per coarse bucket,
+encoded by the ``encode_i64_stream`` pandas UDF, joined to the tier.
 """
 
 from __future__ import annotations
@@ -13,15 +17,61 @@ from __future__ import annotations
 import struct
 from collections import Counter
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import BinaryType
 
-from gents_spark.functions.codec_udfs import attach_payload
+from gents_spark.functions.codec import encode_i64_batch
 from gents_spark.operators import rollup as rollup_ops
 from gents_spark.operators.gapfill import gapfill
-from gents_spark.operators.rollup import percentile_modes, rollup
+from gents_spark.operators.rollup import (
+    bucket_col,
+    bucket_end_col,
+    percentile_modes,
+    rollup,
+)
 from gents_spark.operators.sketches import distinct_sketch, value_histogram
 from gents_spark.plans.manifest import CHUNK_FORMATS, chunk_col, shift_chunk
+
+
+@pandas_udf(BinaryType())
+def encode_i64_stream(values: pd.Series) -> pd.Series:
+    """array<long> -> DoD binary (whole-batch vectorized)."""
+    return pd.Series(encode_i64_batch(list(values)), index=values.index)
+
+
+def attach_payload(
+    finer: DataFrame,
+    coarser_tier: str,
+    value_col: str = "sum_tok",
+    ts_col: str = "bucket_start",
+    gchunk_col: str | None = None,
+) -> DataFrame:
+    """Per (source, coarser bucket): the ordered ``finer`` value stream
+    encoded as a DoD payload.
+
+    ``finer`` is either a finer tier table (ts_col='bucket_start',
+    value_col='sum_tok') or the raw rows (ts_col='event_time',
+    value_col='n_tok') for the finest tier's payload.  ``gchunk_col``
+    joins the grouping keys and the output when given.
+    """
+    keys = ["source", *([gchunk_col] if gchunk_col else [])]
+    grouped = finer.groupBy(
+        *keys, bucket_col(ts_col, coarser_tier).alias("bucket_start")
+    ).agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct(ts_col, value_col))),
+            lambda s: s[value_col].cast("long"),
+        ).alias("_stream")
+    )
+    return grouped.select(
+        *keys,
+        "bucket_start",
+        bucket_end_col(coarser_tier).alias("bucket_end"),
+        encode_i64_stream(F.col("_stream")).alias("payload"),
+    )
 
 
 def planned_chunks(raw: DataFrame, chunk_grain: str) -> list[str]:
