@@ -9,7 +9,7 @@ A from-scratch re-expression of the capabilities of AgentOxygen/GenTS
 - tiered downsampling raw -> 1m -> 1h -> 1d with retention expiry
   — GenTS analog: year-width slice windows, ``gents/hfcollection.py:903-1005``
 - LOCF / linear gap-fill over a generated bucket spine (new vs reference)
-- Gorilla XOR + delta-of-delta payload codec in vectorized pandas UDFs
+- Gorilla XOR + delta-of-delta payload codec in columnar Arrow UDFs
   — GenTS analog: netCDF zlib compression knob, ``gents/timeseries.py:617-658``
 - checkpoint + lineage-manifest resume via anti-join
   — GenTS analog: integrity-check skip, ``gents/timeseries.py:136-142``

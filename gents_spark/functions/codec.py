@@ -11,19 +11,24 @@ with a value-level time-series codec:
 
 Implementation notes:
 
-- ENCODING is fully vectorized NumPy: bucket selection, zigzag, and the
-  variable-length bit-packing all happen as array ops (the classic
-  sequential bit-writer is replaced by a repeat/cumsum scatter into a
-  bit array + ``np.packbits``).  No per-element Python in encode.
+- ENCODING is columnar NumPy: ``encode_i64_columnar`` takes a flat
+  value buffer plus list offsets (an Arrow ``ListArray``'s buffers) and
+  returns one byte buffer plus offsets (an Arrow ``BinaryArray``'s),
+  bucket selection and bit-packing done once for every array of the
+  batch; ``_pack`` ORs the codes into 64-bit words.  No per-array or
+  per-element Python in encode.
 - The float XOR path writes a fresh (leading, sigbits) window per
   non-zero XOR instead of Gorilla's "reuse previous window" control bit.
   That drops the sequential encode dependency (few % larger output,
   identical information) — the deviation is deliberate and documented.
+  The engine has no float stream to encode: every payload it writes is
+  an integer ``sum_tok``/``n_tok`` stream, and percentiles are plain
+  tier columns.  ``encode_f64``/``decode_f64`` stay as the Gorilla XOR
+  half of the codec the design names (BASELINE.json), pinned by their
+  round-trip tests, for a float payload column to use.
 - DECODING of variable-length prefix codes is inherently sequential; it
   runs per-array over ``np.unpackbits`` output.  Decode sits on the read
   path of *payloads* (small per-bucket streams), not the ingest path.
-- Spark surface: pandas UDFs (Arrow-batched) — one Python call per
-  ~10k-row batch, never per row.
 
 Wire format (little-endian):
   byte 0: mode (0 = packed, 1 = raw fallback)
@@ -50,30 +55,54 @@ _DOD_BUCKETS = [
     (0b110, 3, 10),
     (0b1110, 4, 14),
     (0b11110, 5, 22),
-    (0b11111, 5, 36),  # max total 41 bits < 64 (bitpack invariant)
+    (0b11111, 5, 36),  # max total 41 bits
 ]
 _MAX_ZZ = (1 << 36) - 1
 #: values beyond +/-2^60 risk silent int64 wrap in the two difference
 #: levels -> raw mode (token-count streams never get near this)
 _MAX_ABS = 1 << 60
+#: a zigzag(dod) takes the first bucket whose limit exceeds it
+_LIMITS = np.array([1 << pay for _, _, pay in _DOD_BUCKETS[:-1]], np.uint64)
+_PREFIX = np.array([p << pay for p, _, pay in _DOD_BUCKETS], np.uint64)
+_BITS = np.array([plen + pay for _, plen, pay in _DOD_BUCKETS], np.uint64)
 
 
-def _zigzag(x: np.ndarray) -> np.ndarray:
-    return ((x.astype(np.int64) << 1) ^ (x.astype(np.int64) >> 63)).astype(np.uint64)
+def _pack(codes, lens, counts, head: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """Write variable-length codes (uint64 values of 1-64 bits, lengths
+    in ``lens``) MSB-first into big-endian 64-bit words.  Consecutive
+    runs of ``counts`` codes form segments; each starts with ``head``
+    zero bytes (a header for the caller to fill) and is zero-padded to
+    a whole byte.  Returns the bytes (uint8) and the segments' offsets.
 
-
-def _bitpack(codes: np.ndarray, lens: np.ndarray) -> bytes:
-    """Pack variable-length codes (value in ``codes``, bit-length in
-    ``lens``, MSB-first) into bytes — fully vectorized."""
-    if len(codes) == 0:
-        return b""
-    total = int(lens.sum())
-    starts = np.cumsum(lens) - lens
-    rep_idx = np.repeat(np.arange(len(codes)), lens)
-    k = np.arange(total) - np.repeat(starts, lens)  # bit index within code
-    shift = (np.repeat(lens, lens) - 1 - k).astype(np.uint64)
-    bits = ((codes[rep_idx] >> shift) & np.uint64(1)).astype(np.uint8)
-    return np.packbits(bits).tobytes()
+    A code overlaps at most two words: its head is ORed into its word by
+    one ``bitwise_or.reduceat`` over the codes (their words never
+    decrease), its spill into the next word by one scatter (a word takes
+    the spill of at most one code).
+    """
+    lens = np.asarray(lens, np.uint64)
+    counts = np.asarray(counts, np.int64)
+    cum = np.zeros(len(lens) + 1, np.uint64)
+    np.cumsum(lens, out=cum[1:])
+    ends = np.cumsum(counts)
+    seg_bits = (cum[ends] - cum[ends - counts]).astype(np.int64) + 8 * head
+    offsets = np.zeros(len(counts) + 1, np.int64)
+    np.cumsum((seg_bits + 7) >> 3, out=offsets[1:])
+    # each code's bit position, its segment starting on a byte boundary
+    pad = 8 * (offsets[:-1] + head) - cum[ends - counts].astype(np.int64)
+    bit = cum[:-1] + np.repeat(pad, counts).view(np.uint64)
+    words = np.zeros((offsets[-1] + 7) >> 3, np.uint64)
+    if len(lens):
+        word = bit >> np.uint64(6)
+        shift = bit & np.uint64(63)
+        aligned = np.asarray(codes, np.uint64) << (np.uint64(64) - lens)
+        first = np.empty(len(word), bool)
+        first[0] = True
+        np.not_equal(word[1:], word[:-1], out=first[1:])
+        (first,) = np.nonzero(first)
+        words[word[first]] = np.bitwise_or.reduceat(aligned >> shift, first)
+        (spill,) = np.nonzero(shift + lens > np.uint64(64))
+        words[word[spill] + np.uint64(1)] |= aligned[spill] << (np.uint64(64) - shift[spill])
+    return words.astype(">u8").view(np.uint8)[: offsets[-1]], offsets
 
 
 class _BitReader:
@@ -93,37 +122,64 @@ class _BitReader:
         return v
 
 
-def encode_i64(arr) -> bytes:
-    """Delta-of-delta encode an integer sequence."""
-    a = np.asarray(arr, dtype=np.int64)
-    n = len(a)
-    head = struct.pack("<BI", _MAGIC_PACKED, n)
-    if n == 0:
-        return head
-    if n == 1:
-        return head + struct.pack("<q", int(a[0]))
-    if bool((a > _MAX_ABS).any()) or bool((a < -_MAX_ABS).any()):
-        # Near-extreme int64 values: np.diff wraps silently, and a wrapped
-        # dod can alias to a small zigzag that passes the _MAX_ZZ check
-        # while decoding to the wrong value.  |v| <= 2^60 guarantees both
-        # difference levels are exact; beyond it, store raw.
-        return struct.pack("<BI", _MAGIC_RAW, n) + a.tobytes()
-    deltas = np.diff(a)
-    dod = np.diff(deltas) if n > 2 else np.empty(0, dtype=np.int64)
-    zz = _zigzag(dod)
-    if len(zz) and zz.max() > _MAX_ZZ:
-        return struct.pack("<BI", _MAGIC_RAW, n) + a.tobytes()
-    prefix = struct.pack("<qq", int(a[0]), int(deltas[0]))
+def encode_i64_columnar(values, offsets) -> tuple[np.ndarray, np.ndarray]:
+    """Delta-of-delta encode many integer arrays at once: array ``i`` is
+    ``values[offsets[i]:offsets[i + 1]]`` (``offsets[0]`` need not be 0,
+    as in a sliced Arrow list).  Returns the encodings' bytes (uint8)
+    and their offsets, ``len(offsets)`` long and starting at 0.
 
-    codes = np.zeros(len(zz), dtype=np.uint64)
-    lens = np.zeros(len(zz), dtype=np.int64)
-    assigned = np.zeros(len(zz), dtype=bool)
-    for pval, plen, pay in _DOD_BUCKETS:
-        fits = ~assigned & (zz < (np.uint64(1) << np.uint64(pay)) if pay else (zz == 0))
-        codes[fits] = (np.uint64(pval) << np.uint64(pay)) | zz[fits]
-        lens[fits] = plen + pay
-        assigned |= fits
-    return head + prefix + _bitpack(codes, lens)
+    Every element becomes one code, all packed by one ``_pack`` call
+    behind each array's 5-byte header: each later element of a packed
+    array is its DoD's bucket code, the bucket picked by one
+    ``searchsorted`` over the bucket limits; the first element, the
+    first delta and every element of a raw-mode array are 64-bit codes
+    holding their little-endian bytes.
+    """
+    offsets = np.asarray(offsets, np.int64)
+    values = np.asarray(values, np.int64)[offsets[0] : offsets[-1]]
+    offsets = offsets - offsets[0]
+    n = np.diff(offsets)
+    # differences wrap across array edges and beyond +/-2^60, where
+    # their codes are overwritten below
+    delta = np.empty_like(values)
+    np.subtract(values[1:], values[:-1], out=delta[1:])
+    dod = np.empty_like(values)
+    np.subtract(delta[1:], delta[:-1], out=dod[1:])
+    zz = ((dod << 1) ^ (dod >> 63)).view(np.uint64)
+    bucket = np.searchsorted(_LIMITS, zz, side="right")
+    codes = _PREFIX[bucket] | zz
+    lens = _BITS[bucket]
+
+    raw = np.zeros(len(n), bool)
+    dod_at = np.ones(len(values), bool)
+    dod_at[offsets[:-1][n >= 1]] = False
+    dod_at[offsets[:-1][n >= 2] + 1] = False
+    # |v| <= 2^60 keeps both difference levels exact; beyond, store raw
+    (bad,) = np.nonzero(
+        ((values + _MAX_ABS).view(np.uint64) > np.uint64(2 * _MAX_ABS))
+        | (dod_at & (zz > np.uint64(_MAX_ZZ)))
+    )
+    raw[np.searchsorted(offsets, bad, side="right") - 1] = True
+    raw &= n >= 2
+    whole = offsets[:-1][n >= 1]
+    second = offsets[:-1][(n >= 2) & ~raw] + 1
+    if raw.any():
+        whole = np.r_[whole, np.flatnonzero(np.repeat(raw, n))]
+    codes[whole] = values[whole].byteswap().view(np.uint64)
+    codes[second] = delta[second].byteswap().view(np.uint64)
+    lens[whole] = lens[second] = 64
+
+    data, out = _pack(codes, lens, n, head=5)
+    header = np.empty(len(n), [("mode", "u1"), ("n", "<u4")])
+    header["mode"], header["n"] = np.where(raw, _MAGIC_RAW, _MAGIC_PACKED), n
+    data[out[:-1, None] + np.arange(5)] = header.view(np.uint8).reshape(-1, 5)
+    return data, out
+
+
+def encode_i64(arr) -> bytes:
+    """Delta-of-delta encode one integer sequence."""
+    a = np.asarray(arr, dtype=np.int64)
+    return encode_i64_columnar(a, [0, len(a)])[0].tobytes()
 
 
 def decode_i64(buf: bytes) -> np.ndarray:
@@ -165,137 +221,6 @@ def decode_i64(buf: bytes) -> np.ndarray:
         delta += dod
         val += delta
         out[i] = val
-    return out
-
-
-def encode_i64_batch(arrays: list) -> list[bytes]:
-    """Delta-of-delta encode MANY integer sequences in one vectorized
-    pass — bit-for-bit identical output to ``encode_i64`` per array.
-
-    Per-array NumPy overhead (~10 small-array ops) dominates encode cost
-    on typical token arrays (tens of elements); this batches the bucket
-    selection and bit-packing across the whole Arrow batch:
-
-    - concatenate all arrays; compute deltas/dods segment-aware;
-    - one global bucket-select + code build;
-    - one global bitpack, with per-array byte alignment achieved by a
-      zero-length pad code per array (bits padded to the next byte, as
-      np.packbits does per array in the scalar path);
-    - slice the single packed buffer back into per-array payloads.
-
-    Arrays that need the raw fallback (|zigzag(dod)| >= 2^36) or the
-    n<=2 short paths are delegated to ``encode_i64``.
-    """
-    n_arr = len(arrays)
-    if n_arr == 0:
-        return []
-    arrs = [np.asarray(a, dtype=np.int64) for a in arrays]
-    lens = np.array([len(a) for a in arrs], dtype=np.int64)
-
-    out: list = [None] * n_arr
-    # the batched path wins ~10x on short arrays (global numpy prep +
-    # cheap big-int folds); beyond ~64 elements the scalar per-array
-    # numpy packer is faster — measured crossover, not a guess.  A
-    # global-bitpack long-array variant was built and measured slower:
-    # per-array scalar packing reuses same-size malloc buffers, while
-    # one whole-batch bit expansion allocates multi-MB fresh arrays,
-    # which this VM faults in at ~400ns/page (np.arange(7.2M) alone
-    # takes seconds); scalar encode at 2k tokens is 0.3ms/row and
-    # embarrassingly parallel across executor cores anyway
-    big_idx = [i for i in range(n_arr) if 2 < lens[i] <= 64]
-    for i in range(n_arr):
-        if lens[i] <= 2 or lens[i] > 64:
-            out[i] = encode_i64(arrs[i])
-    if not big_idx:
-        return out
-
-    values = np.concatenate([arrs[i] for i in big_idx])
-    blens = lens[np.array(big_idx)]
-    ends = np.cumsum(blens)
-    starts = ends - blens
-
-    # segment-aware dods via explicit positions (no cross-boundary terms)
-    seg_id = np.repeat(np.arange(len(big_idx)), blens - 2)
-    dod_pos = (
-        np.arange(len(seg_id))
-        - np.repeat(np.cumsum(blens - 2) - (blens - 2), blens - 2)
-        + np.repeat(starts, blens - 2)
-    )
-    dods = (
-        values[dod_pos + 2] - 2 * values[dod_pos + 1] + values[dod_pos]
-    )
-    zz = _zigzag(dods)
-
-    # arrays needing raw fallback -> scalar path
-    if len(zz):
-        over = zz > _MAX_ZZ
-        bad_segs = set(seg_id[over].tolist()) if over.any() else set()
-    else:
-        bad_segs = set()
-    # near-extreme values wrap in the dods above without tripping _MAX_ZZ;
-    # delegate those arrays to encode_i64's raw fallback (same _MAX_ABS
-    # rule -> batch stays bit-identical to scalar)
-    val_over = (values > _MAX_ABS) | (values < -_MAX_ABS)
-    if val_over.any():
-        val_seg = np.repeat(np.arange(len(big_idx)), blens)
-        bad_segs |= set(val_seg[val_over].tolist())
-    if bad_segs:
-        keep = [j for j in range(len(big_idx)) if j not in bad_segs]
-        for j in bad_segs:
-            out[big_idx[j]] = encode_i64(arrs[big_idx[j]])
-        if not keep:
-            return out
-        sub = [arrs[big_idx[j]] for j in keep]
-        encoded = encode_i64_batch(sub)
-        for j, e in zip(keep, encoded):
-            out[big_idx[j]] = e
-        return out
-
-    # global bucket select (same buckets as encode_i64)
-    codes = np.zeros(len(zz), dtype=np.uint64)
-    clens = np.zeros(len(zz), dtype=np.int64)
-    assigned = np.zeros(len(zz), dtype=bool)
-    for pval, plen, pay in _DOD_BUCKETS:
-        fits = ~assigned & (
-            zz < (np.uint64(1) << np.uint64(pay)) if pay else (zz == 0)
-        )
-        codes[fits] = (np.uint64(pval) << np.uint64(pay)) | zz[fits]
-        clens[fits] = plen + pay
-        assigned |= fits
-
-    # per-array packing: fold each array's codes into one Python int
-    # (MSB-first, zero-padded to a byte — identical to np.packbits) —
-    # ~18 shift-or ops per array beats any bit-expansion approach
-    code_list = codes.tolist()
-    len_list = clens.tolist()
-    seg_ends = np.cumsum(blens - 2).tolist()
-    firsts = values[starts].tolist()
-    d0s = (values[starts + 1] - values[starts]).tolist()
-
-    pos = 0
-    for j, i in enumerate(big_idx):
-        end = seg_ends[j]
-        head = struct.pack(
-            "<BIqq", _MAGIC_PACKED, int(blens[j]), firsts[j], d0s[j]
-        )
-        # blocked big-int fold: inner folds stay on small ints (<=64
-        # codes ~ <=2.6k bits); outer merges are a handful of linear
-        # big-int shifts — avoids both numpy per-bit expansion and the
-        # quadratic growth of a single monolithic fold
-        acc = 0
-        bits = 0
-        for b0 in range(pos, end, 64):
-            b1 = min(b0 + 64, end)
-            a = 0
-            nb = 0
-            for k in range(b0, b1):
-                a = (a << len_list[k]) | code_list[k]
-                nb += len_list[k]
-            acc = (acc << nb) | a
-            bits += nb
-        pos = end
-        padb = (-bits) % 8
-        out[i] = head + (acc << padb).to_bytes((bits + padb) // 8, "big")
     return out
 
 
@@ -350,7 +275,8 @@ def encode_f64(arr) -> bytes:
     lens = np.empty(2 * len(xors), dtype=np.int64)
     codes[0::2], lens[0::2] = ctrl, ctrl_len
     codes[1::2], lens[1::2] = payload, sig
-    return head + prefix + _bitpack(codes, lens)
+    keep = lens > 0  # an unchanged value has no payload code
+    return head + prefix + _pack(codes[keep], lens[keep], [keep.sum()])[0].tobytes()
 
 
 def decode_f64(buf: bytes) -> np.ndarray:

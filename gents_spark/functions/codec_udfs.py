@@ -2,9 +2,14 @@
 
 GenTS's execution model for custom work is "one Python process per file
 batch" (``gents/timeseries.py:879-891``); ours is one vectorized call
-per Arrow batch or per group, never per row (input_hint mandate):
+per Arrow batch or per group, never per row or per array (input_hint
+mandate).  Both encoders hand ``codec.encode_i64_columnar`` a flat value
+buffer and offsets and wrap its byte buffer and offsets as a
+``pa.BinaryArray``:
 
-- ``encode_tokens`` / ``decode_tokens``: pandas UDFs over token arrays;
+- ``encode_tokens``: an Arrow UDF, ``array<int>`` -> binary, reading the
+  batch's ``pa.ListArray`` buffers directly (NULL arrays stay NULL);
+  ``decode_tokens`` is its per-row inverse;
 - ``encode_payloads``: the tier pipeline's one grouped Arrow pass, which
   gives every tier row of one (source, chunk) its ``payload``
   (``TierPipeline._with_payloads``).  The per-tier composition it
@@ -17,26 +22,42 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     IntegerType,
 )
 
-from gents_spark.functions.codec import decode_i64, encode_i64_batch
+from gents_spark.functions.codec import decode_i64, encode_i64_columnar
 
 
-@pandas_udf(BinaryType())
-def encode_tokens(tokens: pd.Series) -> pd.Series:
-    """array<int> -> DoD-compressed binary.  Whole-batch vectorized:
-    one NumPy pass encodes every array in the Arrow batch."""
-    return pd.Series(encode_i64_batch(list(tokens)), index=tokens.index)
+def _binary(values, offsets, valid=None) -> pa.Array:
+    """The encodings of ``values`` split at ``offsets`` as one
+    ``pa.BinaryArray`` over the kernel's buffers (no per-row copy)."""
+    data, out = encode_i64_columnar(values, offsets)
+    if out[-1] > np.iinfo(np.int32).max:
+        raise OverflowError("encoded batch exceeds the 2 GiB of one binary array")
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(out) - 1,
+        [valid, pa.py_buffer(out.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+@arrow_udf(BinaryType())
+def encode_tokens(tokens: pa.Array) -> pa.Array:
+    """array<int> -> DoD-compressed binary, one kernel call per batch."""
+    if pc.list_flatten(tokens).null_count:
+        raise ValueError("encode_tokens: a token array holds a NULL element")
+    values = tokens.values.to_numpy(zero_copy_only=False)
+    valid = tokens.is_valid().buffers()[1] if tokens.null_count else None
+    return _binary(values, tokens.offsets.to_numpy(), valid)
 
 
 @pandas_udf(ArrayType(IntegerType()))
 def decode_tokens(payload: pd.Series) -> pd.Series:
-    return payload.map(lambda b: decode_i64(b).astype("int32"))
+    return payload.map(lambda b: decode_i64(b).astype("int32"), na_action="ignore")
 
 
 def _int64(col) -> np.ndarray:
@@ -56,7 +77,7 @@ def encode_payloads(rows, raw=None, *, tiers):
     feeds the finest tier's bucket ``_pb`` with its ``n_tok``.  Feeding
     values are lexsorted by (tier, bucket, time) — raw ties on
     ``event_time`` by ``n_tok``, as ``sort_array(struct(ts, v))`` orders
-    them — split into streams and encoded by ONE ``encode_i64_batch``
+    them — split into streams and encoded by ONE ``encode_i64_columnar``
     call; each tier's streams then meet its rows through one
     ``searchsorted`` on ``bucket_start``.  A row no stream feeds (a
     filled row, the finest tier under ``payloads='coarse'``) keeps a
@@ -78,15 +99,15 @@ def encode_payloads(rows, raw=None, *, tiers):
     code, bucket, when, tie, value = (
         np.concatenate(a) for a in (code, bucket, when, tie, value)
     )
-    payload = np.full(rows.num_rows, None, object)
+    stream = np.full(rows.num_rows, -1)
+    encoded = pa.array([], pa.binary())
     if len(code):
         order = np.lexsort((tie, when, bucket, code))
         code, bucket, value = code[order], bucket[order], value[order]
         (starts,) = np.nonzero(
             np.r_[True, (code[1:] != code[:-1]) | (bucket[1:] != bucket[:-1])]
         )
-        encoded = np.empty(len(starts), object)
-        encoded[:] = encode_i64_batch(np.split(value, starts[1:]))
+        encoded = _binary(value, np.r_[starts, len(value)])
         code, bucket = code[starts], bucket[starts]
         row_code = _int64(pc.index_in(rows["tier"], value_set=pa.array(tiers)))
         row_bucket = _int64(rows["bucket_start"])
@@ -98,7 +119,7 @@ def encode_payloads(rows, raw=None, *, tiers):
             pos = np.searchsorted(keys, row_bucket[at])
             pos = np.minimum(pos, len(keys) - 1)
             hit = keys[pos] == row_bucket[at]
-            payload[at[hit]] = encoded[streams[pos[hit]]]
+            stream[at[hit]] = streams[pos[hit]]
     return rows.drop_columns(["_pt", "_pb"]).append_column(
-        "payload", pa.array(payload, pa.binary())
+        "payload", encoded.take(pa.array(stream, mask=stream < 0))
     )

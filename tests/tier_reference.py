@@ -9,7 +9,9 @@ finest tier's (``payloads='all'`` only) the raw ``n_tok`` stream.
 
 ``attach_payload`` is the payload's reference formulation: a JVM
 ``sort_array(collect_list(struct(ts, v)))`` aggregate per coarse bucket,
-encoded by the ``encode_i64_stream`` pandas UDF, joined to the tier.
+encoded by the ``encode_i64_stream`` pandas UDF (the one-array reference
+encoder of ``tests/codec_reference.py``, independent of the engine's
+kernel), joined to the tier.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType
 
-from gents_spark.functions.codec import encode_i64_batch
 from gents_spark.operators import rollup as rollup_ops
 from gents_spark.operators.gapfill import gapfill
 from gents_spark.operators.rollup import (
@@ -34,12 +35,13 @@ from gents_spark.operators.rollup import (
 )
 from gents_spark.operators.sketches import distinct_sketch, value_histogram
 from gents_spark.plans.manifest import CHUNK_FORMATS, chunk_col, shift_chunk
+from tests.codec_reference import encode_i64
 
 
 @pandas_udf(BinaryType())
 def encode_i64_stream(values: pd.Series) -> pd.Series:
-    """array<long> -> DoD binary (whole-batch vectorized)."""
-    return pd.Series(encode_i64_batch(list(values)), index=values.index)
+    """array<long> -> DoD binary, one reference encode per array."""
+    return values.map(encode_i64)
 
 
 def attach_payload(
